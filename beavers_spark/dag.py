@@ -23,9 +23,16 @@ Spark-first differences (deliberate, SURVEY.md §3.1 "Spark mapping"):
   (the reference's list/dict/set examples).
 - State DataFrames are cached and periodically ``localCheckpoint``-ed to
   truncate lineage — without this, incremental recomputation builds an
-  unboundedly deep plan (the classic iterative-Spark failure mode).
-- Emptiness of a DataFrame batch is ``df.isEmpty()`` (a limit-1 job), the
-  ``foreachBatch`` idiom for empty-batch suppression.
+  unboundedly deep plan (the classic iterative-Spark failure mode). A
+  state value that is already a materialized checkpoint (a node function
+  that ``localCheckpoint``-ed it) is kept as is: no second job.
+- Emptiness of a DataFrame stream output is ``df.isEmpty()`` (a limit-1
+  job), the ``foreachBatch`` idiom for empty-batch suppression. The
+  output is persisted before that probe, so downstream nodes and sinks
+  read the cached value instead of recomputing its plan; it is
+  unpersisted when the node's value is reset or replaced, so at most one
+  cycle's stream outputs stay cached. Source batches skip the probe when
+  the driver staging them already knows they are non-empty.
 - At 100 TB, node *values* live in executors (DataFrames); the kernel on
   the driver holds only plan references + dirty flags — driver memory is
   O(nodes), never O(data).
@@ -42,6 +49,8 @@ from collections.abc import Callable
 from typing import Any
 
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 UTC_EPOCH = pd.Timestamp(0, tz="UTC")
@@ -105,6 +114,20 @@ def _is_empty(value: Any) -> bool:
     try:
         return len(value) == 0
     except TypeError:
+        return False
+
+
+def _checkpointed_leaf(df: DataFrame) -> bool:
+    """True when ``df`` is a materialized checkpoint: a leaf plan over an
+    already-checkpointed RDD, so it has no lineage to truncate and no
+    upstream data left to materialize."""
+    try:
+        plan = df._jdf.queryExecution().logical()
+        return (
+            plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isCheckpointed()
+        )
+    except (AttributeError, Py4JError):  # no JVM handle (e.g. Spark Connect)
         return False
 
 
@@ -173,8 +196,9 @@ class Node:
 
         ``known_nonempty=True`` skips the cycle's emptiness probe — for
         DataFrame payloads that probe is a Spark job, and a driver that
-        already proved non-emptiness (e.g. the live foreachBatch loop's
-        own ``isEmpty`` gate) should not pay it twice per micro-batch.
+        already knows the batch is non-empty (the live foreachBatch
+        loop's row count, a replay source whose next record is due)
+        should not pay it again.
         """
         if self._kind != "source":
             raise ValueError("set_stream is only valid on source nodes")
@@ -201,25 +225,34 @@ class Node:
     def _empty(self) -> Any:
         return self._empty_factory() if self._empty_factory is not None else None
 
+    def _hold(self, df: DataFrame | None) -> None:
+        """Make ``df`` the DataFrame this node keeps cached, unpersisting
+        the one it replaces."""
+        prev, self._cached_df = self._cached_df, df
+        if prev is not None and prev is not df:
+            try:
+                prev.unpersist()
+            except Exception:  # noqa: BLE001 - best-effort release
+                pass
+
     def _retain_state_df(self, df: DataFrame) -> DataFrame:
         """Cache the new state value; truncate lineage periodically.
 
         Iterative reuse of a DataFrame across cycles grows the logical plan
         without bound; ``localCheckpoint(eager)`` cuts it. Production note:
         on a cluster use reliable ``checkpoint()`` to survive executor
-        loss; localCheckpoint is the single-node analog.
+        loss; localCheckpoint is the single-node analog. A value the node
+        function already checkpointed needs neither.
         """
+        if _checkpointed_leaf(df):
+            self._hold(None)
+            return df
         if self._dag._cycle_id % _CHECKPOINT_EVERY == 0:
             df = df.localCheckpoint(eager=True)
         else:
             df = df.persist()
             df.count()  # materialize so upstream batches can be released
-        if self._cached_df is not None and self._cached_df is not df:
-            try:
-                self._cached_df.unpersist()
-            except Exception:  # noqa: BLE001 - best-effort release
-                pass
-        self._cached_df = df
+        self._hold(df)
         return df
 
     def _run_cycle(self, cycle_id: int) -> None:
@@ -244,6 +277,7 @@ class Node:
             # stream values are ephemeral: reset between cycles
             if self._kind == "stream" and self._cycle_id != cycle_id:
                 self._value = self._empty()
+                self._hold(None)
             return
         self._notified = False
         args, kwargs = self._gather()
@@ -269,8 +303,16 @@ class Node:
                 self._mark_updated(cycle_id, notify=False)
                 return
             self._value = result
+            # cache before the probe: downstream nodes and sinks then read
+            # the probed value instead of recomputing its plan
+            fresh = (
+                isinstance(result, DataFrame)
+                and result.storageLevel == StorageLevel.NONE
+            )
+            self._hold(result.persist() if fresh else None)
             if _is_empty(result):
                 self._value = self._empty()
+                self._hold(None)
             else:
                 self._mark_updated(cycle_id, notify=True)
             return

@@ -77,28 +77,32 @@ class StreamingDagDriver:
         self.metrics: list[CycleMetrics] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        now = pd.Timestamp.now(tz="UTC")
+        if self.event_time_column:
+            # one action answers both the emptiness gate and the clock
+            row = batch_df.agg(
+                F.max(self.event_time_column).alias("m"),
+                F.count(F.lit(1)).alias("n"),
+            ).collect()[0]
+            empty = row["n"] == 0
+            if not empty:
+                now = pd.Timestamp(row["m"])
+                if now.tzinfo is None:
+                    now = now.tz_localize("UTC")
+        else:
+            empty = batch_df.isEmpty()
+        if empty:
             # empty-batch short-circuit (reference: dag.py:350 semantics)
             # — EXCEPT when a timer is due: replay parity (and the Kafka
             # driver loop, kafka_driver.run_cycle) fire due timers even
             # with zero records, else an idle stream starves timer nodes
-            now = pd.Timestamp.now(tz="UTC")
             if self.dag.get_next_timer() <= now:
                 t0 = time.perf_counter()
                 self.dag.execute(now)
                 self._flush(batch_id, now, t0, time.perf_counter())
             return
-        if self.event_time_column:
-            row = batch_df.agg(
-                F.max(self.event_time_column).alias("m")
-            ).collect()[0]
-            now = pd.Timestamp(row["m"])
-            if now.tzinfo is None:
-                now = now.tz_localize("UTC")
-        else:
-            now = pd.Timestamp.now(tz="UTC")
-        # known_nonempty: the isEmpty gate above already proved it —
-        # the source node skips its own per-cycle emptiness Spark job
+        # known_nonempty: the gate above already proved it — the source
+        # node skips its own per-cycle emptiness Spark job
         self.dag.get_sources()[self.source_name].set_stream(
             batch_df, known_nonempty=True
         )

@@ -28,6 +28,9 @@ from beavers_spark.dag import UTC_MAX, Dag
 
 T = TypeVar("T")
 
+#: event times ``SparkSliceSource`` prefetches per control-plane query
+_PREFETCH_TIMES = 1024
+
 
 @dataclasses.dataclass(frozen=True)
 class ReplayContext:
@@ -208,11 +211,12 @@ class SparkSliceSource:
     (which materializes the file driver-side — fine for test fixtures,
     wrong at scale).
 
-    Control plane: ``get_next`` runs one tiny min-aggregation above the
-    cursor per cycle (a driver-paced scheduling query whose filter also
-    prunes row groups); ``read_to`` uses the cached next-event time to
-    return ``None`` for empty slices without touching data, so the
-    replay driver skips the cycle entirely (reference gate:
+    Control plane: ``get_next`` reads a driver-held buffer of the next
+    ``_PREFETCH_TIMES`` event times above the cursor, filled by one
+    pushed-down ``orderBy(ts).limit(K)`` collect of the timestamp column
+    only, so a cycle runs no Spark job for it until the buffer is used
+    up. ``read_to`` returns ``None`` for empty slices without touching
+    data, so the replay driver skips the cycle entirely (reference gate:
     replay.py:230 records-or-timer).
     """
 
@@ -220,7 +224,10 @@ class SparkSliceSource:
         self._df = spark.read.parquet(path)
         self._ts = ts_column
         self._cursor: pd.Timestamp | None = None  # exclusive lower bound
-        self._next: pd.Timestamp | None = None  # cached next event time
+        # ascending event times above the cursor, from ``_pos`` on
+        self._ahead = pd.DatetimeIndex([], tz="UTC")
+        self._pos = 0
+        self._complete = False  # the buffer holds every time above the cursor
 
     def _above_cursor(self):
         if self._cursor is None:
@@ -228,14 +235,22 @@ class SparkSliceSource:
         return self._df.filter(F.col(self._ts) > self._cursor.tz_convert(None))
 
     def get_next(self) -> pd.Timestamp:
-        if self._next is None:
-            row = self._above_cursor().agg(F.min(self._ts).alias("m")).first()
-            if row["m"] is None:
-                self._next = UTC_MAX
-            else:
-                nxt = pd.Timestamp(row["m"])
-                self._next = nxt.tz_localize("UTC") if nxt.tzinfo is None else nxt
-        return self._next
+        if self._pos == len(self._ahead) and not self._complete:
+            rows = (
+                self._above_cursor()
+                .select(self._ts)
+                .filter(F.col(self._ts).isNotNull())
+                .orderBy(self._ts)
+                .limit(_PREFETCH_TIMES)
+                .collect()
+            )
+            ahead = pd.DatetimeIndex([r[0] for r in rows])
+            self._ahead = ahead.tz_localize("UTC") if ahead.tz is None else ahead
+            self._pos = 0
+            self._complete = len(rows) < _PREFETCH_TIMES
+        if self._pos == len(self._ahead):
+            return UTC_MAX
+        return self._ahead[self._pos]
 
     def read_to(self, timestamp: pd.Timestamp) -> Any:
         if self.get_next() > timestamp:
@@ -244,7 +259,7 @@ class SparkSliceSource:
             F.col(self._ts) <= timestamp.tz_convert(None)
         )
         self._cursor = timestamp
-        self._next = None
+        self._pos = int(self._ahead.searchsorted(timestamp, side="right"))
         return batch
 
 
@@ -284,7 +299,7 @@ class IteratorDataSourceAdapter(Generic[T]):
         return UTC_MAX
 
 
-def _batch_len(value: Any) -> int:
+def _batch_len(value: Any, nonempty: bool = False) -> int:
     try:
         return len(value)
     except TypeError:
@@ -292,9 +307,12 @@ def _batch_len(value: Any) -> int:
         # cheaply (and an EMPTY one must count as 0, or gap cycles with
         # a DataFrame-producing to_value would run phantom dag cycles);
         # for non-empty frames 1 means "has records, count unknown" —
-        # the skip gate only needs the zero/non-zero distinction
+        # the skip gate only needs the zero/non-zero distinction, so a
+        # batch already known to be ``nonempty`` needs no probe job
         if value is None:
             return 0
+        if nonempty:
+            return 1
         is_empty = getattr(value, "isEmpty", None)
         if callable(is_empty):
             return 0 if is_empty() else 1
@@ -384,10 +402,12 @@ class ReplayDriver:
         total = 0
         dag_sources = self.dag.get_sources()
         for name, source in self.sources.items():
+            # the next undelivered record is due, so the slice holds it
+            due = source.get_next() <= self.current_time
             batch = source.read_to(self.current_time)
-            n = _batch_len(batch)
+            n = _batch_len(batch, due)
             if n:
-                dag_sources[name].set_stream(batch)
+                dag_sources[name].set_stream(batch, known_nonempty=True)
                 total += n
         return total
 

@@ -200,3 +200,57 @@ def test_word_count_incremental(spark):
 
     bench.set_source("words", spark.createDataFrame([("foo",)], "word string"))
     bench.execute(ts(1)).assert_sink_rows("updates", [("foo", 3)])  # bar unchanged: not emitted
+
+
+def test_stream_dataframes_are_cached_for_one_cycle(spark):
+    """A DataFrame stream output is persisted before its emptiness probe
+    so downstream nodes and sinks read it cached, and unpersisted once
+    the node's value is reset (no fire), replaced, or found empty."""
+    dag = Dag(spark)
+    a = dag.source_table("x long", "a")
+    b = dag.source_table("x long", "b")
+    doubled = dag.stream(lambda df: df.select((F.col("x") * 2).alias("x"))).map(a)
+    dag.sink("doubled", doubled)
+    dag.sink("b", dag.stream(lambda df: df.select("x")).map(b))
+    c = dag.source_table("x long", "c")
+    empties = []
+    nothing = dag.stream(
+        lambda df: empties.append(df.filter("x < 0")) or empties[-1]
+    ).map(c)
+
+    a.set_stream(spark.createDataFrame([(1,), (2,)], "x long"))
+    dag.execute(ts(1))
+    first = doubled.get_value()
+    assert first.is_cached
+    assert dag.get_sink_value("doubled") is first
+
+    a.set_stream(spark.createDataFrame([(3,)], "x long"))
+    dag.execute(ts(2))  # replaced
+    second = doubled.get_value()
+    assert second.is_cached and not first.is_cached
+
+    b.set_stream(spark.createDataFrame([(5,)], "x long"))
+    dag.execute(ts(3))  # doubled did not fire: reset
+    assert not second.is_cached
+    assert isinstance(doubled.get_value(), list)  # the empty value
+
+    c.set_stream(spark.createDataFrame([(4,)], "x long"))
+    dag.execute(ts(4))  # nothing's output is empty: not cached, no fire
+    assert not empties[-1].is_cached
+    assert nothing.get_cycle_id() == 0
+
+
+def test_checkpointed_state_is_kept_as_is(spark, spark_jobs):
+    """A state value its node already materialized as a checkpoint is
+    stored as is: no persist and no second materializing job."""
+    dag = Dag(spark)
+    src = dag.source_table("x long", "in")
+    made = []
+    state = dag.state(
+        lambda df: made.append(df.localCheckpoint()) or made[-1]
+    ).map(src)
+    src.set_stream(spark.createDataFrame([(1,)], "x long"), known_nonempty=True)
+    _, jobs = spark_jobs(lambda: dag.execute(ts(1)))
+    assert [name.split(" at ")[0] for name, _ in jobs] == ["localCheckpoint"]
+    assert state.get_value() is made[-1]
+    assert not made[-1].is_cached

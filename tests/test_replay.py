@@ -331,3 +331,134 @@ def test_batch_len_handles_empty_dataframe(spark):
     assert _batch_len(df) == 1  # non-empty, count unknown
     assert _batch_len([1, 2]) == 2
     assert _batch_len(None) == 0
+
+
+def _write_ts_parquet(path, minutes, **columns) -> None:
+    import pyarrow.parquet as pq
+
+    table = pa.table(
+        {
+            "ts": pa.array(
+                [ts(m).tz_convert(None) for m in minutes], type=pa.timestamp("us")
+            ),
+            **columns,
+        }
+    )
+    pq.write_table(table, path)
+
+
+def test_replay_cycle_probes_each_value_once(spark, spark_jobs, tmp_path):
+    """Job-count pin for one executed replay cycle of a SparkSliceSource
+    dag (source -> filter stream -> keyed state -> aggregate stream ->
+    sink): no emptiness probe of the source slice (the source's due next
+    record proves it non-empty), one probe per firing stream node, no
+    retention job for a state value its node already checkpointed, and a
+    sink read that does not re-run the aggregate's shuffle."""
+    from pyspark.sql import functions as F
+
+    from beavers_spark.operators import last_by_keys
+    from beavers_spark.streaming import SparkSliceSource
+
+    path = str(tmp_path / "ticks.parquet")
+    minutes = [m + i / 10 for m in range(1, 6) for i in range(4)]
+    _write_ts_parquet(
+        path,
+        minutes,
+        key=[f"k{i % 3}" for i in range(len(minutes))],
+        qty=[float(i) for i in range(len(minutes))],
+    )
+    held = {}
+
+    def upsert(batch):
+        merged = batch if not held else held["table"].unionByName(batch)
+        held["table"] = last_by_keys(merged, ["key"], ["ts"]).localCheckpoint()
+        return held["table"]
+
+    dag = Dag(spark)
+    src = dag.source_table("ts timestamp, key string, qty double", "ticks")
+    rows = dag.stream(lambda df: df.filter(F.col("qty") >= 0)).map(src)
+    latest = dag.state(upsert).map(rows)
+    totals = dag.stream(lambda df: df.groupBy("key").agg(F.sum("qty"))).map(latest)
+    dag.sink("totals", totals)
+
+    sink_jobs = []
+
+    class ArrowSink:
+        def append(self, timestamp, data) -> None:
+            table, jobs = spark_jobs(data.toArrow)
+            sink_jobs.append(jobs)
+            self.last = table
+
+        def close(self) -> None:
+            pass
+
+    sink = ArrowSink()
+    driver = ReplayDriver(
+        dag,
+        ReplayContext(start=ts(1), end=ts(5), frequency=pd.Timedelta(minutes=1)),
+        sources={"ticks": SparkSliceSource(spark, path, "ts")},
+        sinks={"totals": sink},
+    )
+    driver.run_cycle()  # fills the source's next-event buffer
+    for _ in range(3):
+        _, jobs = spark_jobs(driver.run_cycle)
+        names = [name.split(" at ")[0] for name, _ in jobs]
+        assert names.count("isEmpty") == 2, names  # rows and totals only
+        assert "count" not in names, names
+        # one job, running one stage: the cached value's scan
+        assert [stages for _, stages in sink_jobs[-1]] == [1], sink_jobs[-1]
+    assert sum(m.records for m in driver.metrics) == 4
+    assert sorted(sink.last.column("key").to_pylist()) == ["k0", "k1", "k2"]
+
+
+def test_spark_slice_source_buffer_edges(spark, spark_jobs, tmp_path, monkeypatch):
+    """The prefetched next-event buffer: equal timestamps straddling the
+    buffer edge, a refill after a clock warp past the buffer, and an
+    exhausted file answered from the buffer without a Spark job."""
+    from beavers_spark.streaming import SparkSliceSource
+    from beavers_spark.streaming import replay
+
+    monkeypatch.setattr(replay, "_PREFETCH_TIMES", 3)
+    path = str(tmp_path / "edges.parquet")
+    minutes = [1, 2, 3, 3, 3, 4, 5, 6, 7, 100, 101]
+    _write_ts_parquet(path, minutes, seq=list(range(len(minutes))))
+    source = SparkSliceSource(spark, path, "ts")
+
+    def seqs(until):
+        return sorted(r.seq for r in source.read_to(ts(until)).collect())
+
+    assert source.get_next() == ts(1)  # buffer: 1, 2, 3
+    assert seqs(2) == [0, 1]
+    assert source.get_next() == ts(3)  # still buffered
+    assert seqs(3) == [2, 3, 4]  # the two 3s past the edge come too
+    assert source.get_next() == ts(4)  # refilled: 4, 5, 6
+    assert source.read_to(ts(3) + pd.Timedelta(seconds=30)) is None
+    assert seqs(50) == [5, 6, 7, 8]  # warp over the buffer's end
+    assert source.get_next() == ts(100)  # refilled: 100, 101 (< 3: complete)
+    assert seqs(100) == [9]
+    assert seqs(200) == [10]
+    nxt, jobs = spark_jobs(source.get_next)
+    assert nxt == UTC_MAX and jobs == []
+    assert source.read_to(ts(300)) is None
+
+
+def test_spark_slice_source_matches_arrow_source(spark, tmp_path, monkeypatch):
+    """SparkSliceSource serves the same slices and next-event times as
+    ArrowTableDataSource over the same file, across buffer refills."""
+    import pyarrow.parquet as pq
+
+    from beavers_spark.streaming import ArrowTableDataSource, SparkSliceSource
+    from beavers_spark.streaming import replay
+
+    monkeypatch.setattr(replay, "_PREFETCH_TIMES", 4)
+    path = str(tmp_path / "same.parquet")
+    minutes = [0, 0, 1, 4, 4, 4, 4, 4, 9, 10, 30, 31, 31, 90]
+    _write_ts_parquet(path, minutes, seq=list(range(len(minutes))))
+    spark_src = SparkSliceSource(spark, path, "ts")
+    arrow_src = ArrowTableDataSource(pq.read_table(path), "ts")
+    for until in (-1, 0, 2, 4, 5, 9, 29, 31, 60, 89, 90, 120):
+        assert spark_src.get_next() == arrow_src.get_next(), until
+        got = spark_src.read_to(ts(until))
+        want = arrow_src.read_to(ts(until)).column("seq").to_pylist()
+        assert (sorted(r.seq for r in got.collect()) if got is not None else []) == want
+    assert spark_src.get_next() == arrow_src.get_next() == UTC_MAX

@@ -282,3 +282,42 @@ def test_empty_batch_fires_due_timers(spark):
     driver(empty, 1)  # empty batch, due timer -> cycle runs, timer fires
     assert fired == ["fired"]
     assert len(driver.metrics) == 2  # the timer cycle is metered too
+
+
+def test_event_time_gate_is_one_action(spark, spark_jobs):
+    """With an event-time column, a trigger's emptiness gate and its
+    event-time clock come from one aggregate: a non-empty batch costs the
+    jobs of that aggregate alone, and an empty one still fires a due
+    timer at wall-clock time."""
+    import pandas as pd
+
+    from beavers_spark.dag import TimerManager
+
+    dag = Dag(spark=spark)
+    src = dag.source_table(SCHEMA, name="in")
+    tm = dag.timer_manager()
+    calls = []
+
+    def schedule(df, timer: TimerManager):
+        calls.append(df)
+        if len(calls) == 1:  # the data cycle arms a deadline now due
+            timer.set_next_timer(pd.Timestamp.now(tz="UTC"))
+        return None
+
+    dag.sink("rows", src)
+    dag.sink("out", dag.state(schedule).map(src, tm))
+    driver = StreamingDagDriver(dag, source_name="in", event_time_column="ts")
+    rows = spark.createDataFrame(
+        [("2024-01-01T00:05:00", "a", 1.0), ("2024-01-01T00:01:00", "b", 2.0)],
+        "ts string, user string, value double",
+    ).select(F.col("ts").cast("timestamp"), "user", "value")
+    _, gate_jobs = spark_jobs(
+        lambda: rows.agg(F.max("ts"), F.count(F.lit(1))).collect()
+    )
+    _, jobs = spark_jobs(lambda: driver(rows, 0))
+    assert len(jobs) == len(gate_jobs), jobs
+    assert driver.metrics[-1].cycle_time == pd.Timestamp("2024-01-01T00:05:00Z")
+    assert len(calls) == 1
+    driver(rows.filter(F.lit(False)), 1)  # empty batch, due timer
+    assert len(calls) == 2
+    assert len(driver.metrics) == 2
