@@ -50,9 +50,6 @@ from beavers_spark.streaming.substring_dedup import (  # noqa: F401
 from beavers_spark.streaming.tfidf_dedup import (  # noqa: F401
     IncrementalTfidfDedup,
 )
-from beavers_spark.streaming.timers_v2 import (  # noqa: F401
-    streaming_timeout_monitor_v2,
-)
 from beavers_spark.streaming.distinct_rollup import (  # noqa: F401
     ContinuousDistinct,
 )

@@ -44,6 +44,7 @@ from beavers_spark.functions.vectorized import nearest_cells_l2
 from beavers_spark.streaming.maintenance import (
     BatchWatermark,
     recover_compaction,
+    write_json_atomic,
 )
 
 
@@ -105,9 +106,7 @@ class IncrementalIVFIndex:
         self._centroids = train_quantizer(
             train, self.vec_col, self.n_cells, seed=self.seed
         )
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._centroid_file, "w") as fh:
-            json.dump(self._centroids, fh)
+        write_json_atomic(self._centroid_file, self._centroids)
 
     # -- ingest -----------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -325,16 +324,14 @@ class IncrementalIVFPQIndex:
             batch_df, self.vec_col, m=self.m, nbits=self.nbits,
             seed=self.seed, sample=x,
         )
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._model_file, "w") as fh:
-            json.dump(
-                {
-                    "metric": self._METRIC,
-                    "centroids": self._centroids,
-                    "codebooks": self._codebooks,
-                },
-                fh,
-            )
+        write_json_atomic(
+            self._model_file,
+            {
+                "metric": self._METRIC,
+                "centroids": self._centroids,
+                "codebooks": self._codebooks,
+            },
+        )
 
     # -- ingest -----------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:

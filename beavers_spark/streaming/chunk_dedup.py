@@ -61,27 +61,20 @@ from beavers_spark.functions.curation import word_chunks
 from beavers_spark.functions.dedup import md5_hash64
 from beavers_spark.streaming.maintenance import (
     PROBE_BROADCAST_CAP,
-    BatchWatermark,
     DocSeenGuard,
-    ProbeMetrics,
     WaveBloomIndex,
-    WaveMetrics,
     ensure_layout,
     fanout_repartition,
-    maybe_auto_compact,
     overlap_jobs,
-    partition_stats,
     prune_hash_buckets,
-    recover_compaction,
     registry_anti_probe,
-    timed_phase,
     seen_anti_join,
-    table_exists,
 )
 from beavers_spark.streaming.substring_dedup import _wave_keys
+from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
 
 
-class IncrementalChunkDedup:
+class IncrementalChunkDedup(WaveKernel):
     """``foreachBatch`` callable maintaining corpus-wide chunk ownership.
 
     ::
@@ -106,26 +99,15 @@ class IncrementalChunkDedup:
         n_hash_buckets: int = 16,
         compact_every_waves: int | None = 16,
     ) -> None:
-        self.state_path = state_path
+        super().__init__(state_path, compact_every_waves)
         self.out_path = out_path
         self.text_col = text_col
         self.id_col = id_col
         self.k = k
-        #: live-wave-count threshold that triggers an automatic
-        #: ``compact()`` right after a wave commits (None = manual
-        #: compaction only; see maintenance.maybe_auto_compact).
-        #: DEFAULT 16 since r11 — the growth bench measured the
-        #: no-maintenance slope as pure file-count fragmentation and
-        #: the 16-wave cadence returning the tail to the early plateau
-        #: (docs/concepts/growth.md); unbounded growth is now opt-in
-        self.compact_every_waves = compact_every_waves
-        self.auto_compactions = 0
         #: bits per wave Bloom sidecar (None disables the probe filter)
         self.bloom_bits = bloom_bits
         #: hash-prefix sub-partitions per wave (``b = pmod(h, N)``)
         self.n_hash_buckets = n_hash_buckets
-        self._has_state = False
-        self._watermark = BatchWatermark(state_path)
         self._bloom = WaveBloomIndex(
             state_path, bloom_bits, min_waves=bloom_min_waves,
             keys_of=_wave_keys, adaptive=True,
@@ -143,26 +125,26 @@ class IncrementalChunkDedup:
         self._doc_seen_out = DocSeenGuard(
             out_path, m_bits=bloom_bits, min_waves=bloom_min_waves,
         )
-        #: per-batch Bloom-prune accounting (see maintenance.ProbeMetrics)
-        self.probe_metrics: list[ProbeMetrics] = []
-        #: one WaveMetrics per applied wave over the wave's registry
-        #: directory (file count + bytes — the BENCH state_files
-        #: observable, VERDICT r12 item 4)
-        self.metrics: list[WaveMetrics] = []
-        #: accumulated driver-observed wall seconds per __call__ phase
-        #: (winners_count / bloom_fold / state_write / out_write /
-        #: call_total) — the bench's named-cost table
-        self.phase_seconds: dict[str, float] = {}
+
+    def _wave_tables(self) -> list[WaveTable]:
+        return [
+            WaveTable(
+                self.out_path,
+                cluster_by=("doc_id",),
+                merges=(self._doc_seen_out,),
+                guard=self._doc_seen_out,
+            ),
+            # clustered by the probe key (VERDICT r10 item 4): narrow
+            # per-row-group h min/max in the coalesced bucket files
+            WaveTable(
+                self.state_path,
+                cluster_by=("b", "h"),
+                merges=(self._doc_seen, self._bloom),
+                guard=self._doc_seen,
+            ),
+        ]
 
     # -- state access -----------------------------------------------------
-    def _state_exists(self, spark: SparkSession) -> bool:
-        if self._has_state:
-            return True
-        if table_exists(spark, self.state_path):
-            self._has_state = True
-            return True
-        return False
-
     def read_state(self, spark: SparkSession) -> DataFrame:
         """Segment ownership registry ``(h, doc_id, idx)`` (the wave and
         hash-bucket columns ``w``/``b`` are storage details)."""
@@ -177,86 +159,7 @@ class IncrementalChunkDedup:
             "doc_id", "clean_text", "n_kept", "n_chunks"
         )
 
-    def forget(self, spark: SparkSession, ids) -> int:
-        """Right-to-be-forgotten: hard-delete the given doc ids from
-        the segment-ownership registry and the kept-document output
-        (maintenance.forget_doc_rows — Bloom-TARGETED via the doc-id
-        sidecars, so the rewrite touches only the waves that may hold
-        the ids). Removing ownership RE-OPENS the segments: the next
-        document to present a forgotten segment hash becomes its owner
-        — "first arrival after forgetting" — and a later redelivery of
-        the forgotten id itself is admitted as brand-new. Idempotent;
-        returns the number of wave directories rewritten."""
-        from beavers_spark.streaming.maintenance import forget_doc_rows
-
-        n = forget_doc_rows(
-            spark, self.state_path, ids, guard=self._doc_seen
-        )
-        if n:
-            self._bloom.invalidate()
-            # the forget may have removed the registry's LAST
-            # schema-bearing partition — re-probe rather than trust
-            # the cached flag (the empty-table trap)
-            self._has_state = table_exists(spark, self.state_path)
-        n += forget_doc_rows(
-            spark, self.out_path, ids, guard=self._doc_seen_out
-        )
-        return n
-
-    def compact(self, spark: SparkSession) -> int:
-        """Coarsen all wave partitions into ``w=-1`` (see
-        ``IncrementalNearDedup.compact`` for why the partition columns
-        must survive compaction; registry rows stay clustered
-        by ``(b, h)``); returns the post-compaction file count."""
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-        )
-
-        guard_committed_waves(
-            self._watermark, self.state_path, self.out_path
-        )
-        self._doc_seen_out.compact_merge(
-            lambda: compact_parquet(
-                spark,
-                self.out_path,
-                partition_by="w",
-                transform=lambda df: df.withColumn("w", F.lit(-1)),
-                cluster_by=("doc_id",),
-            )
-        )
-        # nested merges: the one rewrite destroys BOTH sidecar
-        # domains' per-wave bitmaps (span keys + doc ids)
-        # clustered by the probe key (VERDICT r10 item 4): narrow
-        # per-row-group h min/max in the coalesced bucket files
-        return self._doc_seen.compact_merge(
-            lambda: self._bloom.compact_merge(
-                lambda: compact_parquet(
-                    spark,
-                    self.state_path,
-                    partition_by="w",
-                    transform=lambda df: df.withColumn("w", F.lit(-1)),
-                    cluster_by=("b", "h"),
-                )
-            )
-        )
-
     # -- the kernel -------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between its two renames BEFORE
-        # the watermark check or any wave write — a wave written into
-        # the recreated empty path would orphan the pre-compaction
-        # table in .__compact_old (review r8)
-        for p in (self.state_path, self.out_path):
-            recover_compaction(p)
-        if self._watermark.is_applied(batch_id):
-            return
-        with timed_phase(self.phase_seconds, "call_total"):
-            self._apply(batch_df, batch_id)
-        # cadence check AFTER the wave committed (rides the existing
-        # crash-window contract -- see maintenance.maybe_auto_compact)
-        maybe_auto_compact(self, batch_df.sparkSession)
-
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df
@@ -283,7 +186,7 @@ class IncrementalChunkDedup:
             # directory (crash-replay safety — same reasoning as
             # IncrementalNearDedup), and runs through the broadcast
             # semi/anti pair so the seen scan is never shuffled
-            with timed_phase(self.phase_seconds, "seen_probe"):
+            with self._phase("seen_probe"):
                 seen = self._doc_seen.pruned_seen(
                     spark, batch, batch_id, self.id_col
                 )
@@ -339,11 +242,11 @@ class IncrementalChunkDedup:
             )
             pre_h = n_rows = None
             if probe_on:
-                with timed_phase(self.phase_seconds, "bloom_fold"):
+                with self._phase("bloom_fold"):
                     pre_h, n_rows = self._bloom.collect_keys_counted(
                         winners, "h"
                     )
-            with timed_phase(self.phase_seconds, "winners_count"):
+            with self._phase("winners_count"):
                 n_winners = (
                     n_rows if n_rows is not None else winners.count()
                 )
@@ -427,7 +330,7 @@ class IncrementalChunkDedup:
             )
 
             def _commit_state():
-                with timed_phase(self.phase_seconds, "state_write"):
+                with self._phase("state_write"):
                     (
                         new_owned.withColumn(
                             "b",
@@ -445,10 +348,7 @@ class IncrementalChunkDedup:
                         .write.mode("overwrite")
                         .parquet(wave_dir)
                     )
-                files, nbytes, mx = partition_stats(spark, [wave_dir])
-                self.metrics.append(
-                    WaveMetrics(batch_id, 1, files, nbytes, mx)
-                )
+                self._record_wave(spark, batch_id, wave_dir)
                 if pre_h is not None:
                     # PRE-anti hash set: a superset bitmap only adds
                     # false positives (an unnecessary wave scan), never
@@ -467,7 +367,7 @@ class IncrementalChunkDedup:
                     )
                 # the wave's doc-id bitmap — what future batches' seen
                 # probes test against (maintenance.DocSeenGuard)
-                with timed_phase(self.phase_seconds, "seen_sidecar"):
+                with self._phase("seen_sidecar"):
                     self._doc_seen.save_wave(spark, wave_dir, batch_id)
 
             def _commit_out():
@@ -475,12 +375,12 @@ class IncrementalChunkDedup:
                 # this write and the mark — append mode duplicated the
                 # batch's rows on exactly that replay); written even
                 # when empty so read_kept() is valid from batch 0
-                with timed_phase(self.phase_seconds, "out_write"):
+                with self._phase("out_write"):
                     kept.write.mode("overwrite").parquet(out_dir)
                 # out-table doc sidecar from the SAME batch key set the
                 # state sidecar used (stash captured above) — no
                 # read-back
-                with timed_phase(self.phase_seconds, "out_sidecar"):
+                with self._phase("out_sidecar"):
                     if stash is not None and stash[0] == batch_id:
                         self._doc_seen_out.save_wave(
                             spark, out_dir, keys=stash[1]

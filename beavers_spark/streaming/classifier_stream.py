@@ -68,14 +68,14 @@ from beavers_spark.functions.classifier import (
 from beavers_spark.functions.dedup import md5_hash64
 from beavers_spark.streaming.maintenance import (
     BLOOM_PROBE_CAP,
-    BatchWatermark,
     DocSeenGuard,
     ensure_layout,
-    maybe_auto_compact,
-    recover_compaction,
+    read_wave_local,
     seen_anti_join,
     table_exists,
+    write_json_atomic,
 )
+from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
 
 #: modulus of the refit-slice membership hash. Much finer than
 #: sampling.BUCKETS (10k): the slice can never shrink below 1/MOD of
@@ -87,50 +87,7 @@ from beavers_spark.streaming.maintenance import (
 _SLICE_MOD = 1 << 40
 
 
-def _wave_distinct_local(
-    wave_dir: str, id_col: str, row_cap: int = BLOOM_PROBE_CAP
-) -> int | None:
-    """Distinct-id count of one wave from its parquet files,
-    driver-local (no Spark job); None when the root isn't listable
-    (non-POSIX / object store), the column can't be read, or the
-    wave's parquet FOOTERS already show more than ``row_cap`` rows —
-    callers fall back to the exact (distributed) Spark distinct count.
-    The cap mirrors ``WaveBloomIndex.probe_cap``: "a wave is
-    batch-sized" is an assumption, not a bound — a compacted ``w=-1``
-    wave holds the whole registry, and at scale a micro-batch can
-    carry more ids than the driver should ever hold in a Python set.
-    The footer pre-check reads metadata only, so an over-cap wave
-    costs no data bytes before the hand-off (the ``_band_keys_local``
-    precedent)."""
-    import glob as _glob
-
-    try:
-        if not os.path.isdir(wave_dir):
-            return None
-        files = _glob.glob(
-            os.path.join(wave_dir, "**", "*.parquet"), recursive=True
-        )
-        if not files:
-            return 0
-        import pyarrow.parquet as pq
-
-        # over-cap detection from footers alone, BEFORE any data read
-        if sum(pq.read_metadata(f).num_rows for f in files) > row_cap:
-            return None
-        seen: set = set()
-        for f in files:
-            seen.update(
-                pq.read_table(f, columns=[id_col])
-                .column(0)
-                .to_pylist()
-            )
-        return len(seen)
-    except Exception:  # pyarrow raises its own error tree; any
-        # failure means "fall back to the exact Spark count"
-        return None
-
-
-class IncrementalQualityClassifier:
+class IncrementalQualityClassifier(WaveKernel):
     """``foreachBatch`` callable maintaining a labeled-feature registry
     and an always-current classifier.
 
@@ -170,17 +127,8 @@ class IncrementalQualityClassifier:
                 "n_slice_buckets must be a power of two (the bucket is "
                 "the slice hash's top bits: sb = hash >> (40 - log2(N)))"
             )
-        self.state_path = state_path
+        super().__init__(state_path, compact_every_waves)
         self.model_path = state_path.rstrip("/") + "/_model"
-        #: live-wave-count threshold that triggers an automatic
-        #: ``compact()`` right after a wave commits (None = manual
-        #: compaction only; see maintenance.maybe_auto_compact).
-        #: DEFAULT 16 since r11 — the growth bench measured the
-        #: no-maintenance slope as pure file-count fragmentation and
-        #: the 16-wave cadence returning the tail to the early plateau
-        #: (docs/concepts/growth.md); unbounded growth is now opt-in
-        self.compact_every_waves = compact_every_waves
-        self.auto_compactions = 0
         self.label_col = label_col
         self.text_col = text_col
         self.id_col = id_col
@@ -215,8 +163,6 @@ class IncrementalQualityClassifier:
         #: ``refit_every=N`` the bench/operator can verify the cadence
         #: actually held)
         self.refit_count = 0
-        self._has_state = False
-        self._watermark = BatchWatermark(state_path)
         #: per-wave labeled-doc counts sidecar (``_doc_counts.json``:
         #: {wave_id: n}). The capped refit needs the CURRENT total to
         #: size its slice threshold; waves are disjoint in doc ids (the
@@ -245,11 +191,7 @@ class IncrementalQualityClassifier:
             return {}
 
     def _write_counts(self, counts: dict) -> None:
-        import json as _json
-
-        os.makedirs(self.state_path, exist_ok=True)
-        with open(self._counts_file, "w") as fh:
-            _json.dump(counts, fh)
+        write_json_atomic(self._counts_file, counts)
 
     def _wave_ids_on_disk(self) -> list[str]:
         try:
@@ -298,128 +240,26 @@ class IncrementalQualityClassifier:
         away slice rows: silently wrong refits)."""
         if self._layout_checked:
             return
-        try:
-            ensure_layout(
-                self.state_path,
-                n_buckets=self.n_buckets,
-                n_slice_buckets=self.n_slice_buckets,
-            )
-        except ValueError as e:
-            # only a registry whose waves STRUCTURALLY lack sb=
-            # directories gets the migration advice: a migrated table
-            # that merely lost its sidecar keeps ensure_layout's cheap,
-            # correct remedy (hand-write the verified original knobs) —
-            # prescribing a full rewrite there would be wrong twice
-            # over (review r9)
-            if "_layout.json" in str(e) and not self._waves_have_sb():
-                # a sidecar-less registry predating the sb= layout:
-                # waves are flat w=<id>/part-*.parquet, so the generic
-                # "write the sidecar by hand" advice is unactionable —
-                # NO n_slice_buckets value matches waves with no sb=
-                # directories. The cure is a structural rewrite.
-                raise ValueError(
-                    f"classifier registry at {self.state_path} predates "
-                    "the refit-slice bucket layout (no _layout.json; "
-                    "waves lack sb= sub-partitions) — call "
-                    "migrate_slice_buckets(spark, n_buckets=<the "
-                    "ORIGINAL feature modulus>) once to rewrite it "
-                    "under this kernel's layout"
-                ) from e
-            raise
+        ensure_layout(
+            self.state_path,
+            n_buckets=self.n_buckets,
+            n_slice_buckets=self.n_slice_buckets,
+        )
         self._layout_checked = True
 
-    def _waves_have_sb(self) -> bool:
-        """Whether the registry's wave directories carry ``sb=``
-        sub-partitions (checked on the first wave found — waves are
-        written uniformly by one kernel version)."""
-        try:
-            names = os.listdir(self.state_path)
-        except OSError:
-            return False
-        for name in names:
-            if not name.startswith("w="):
-                continue
-            try:
-                sub = os.listdir(os.path.join(self.state_path, name))
-            except OSError:
-                continue
-            return any(s.startswith("sb=") for s in sub)
-        return False
-
-    def migrate_slice_buckets(
-        self, spark: SparkSession, *, n_buckets: int | None = None
-    ) -> None:
-        """One-time rewrite of a registry written before the ``sb=``
-        layout existed: re-partition every wave by the refit-slice
-        bucket (derived from the stored ids — deterministic, so the
-        rewrite is idempotent) and stamp the layout sidecar. Uses the
-        swap-based compact rewrite, so a crash mid-rewrite leaves the
-        original intact (and ``recover_compaction`` at kernel entry
-        heals the rename window); wave ids, the ``_model`` sidecar
-        directory and the batch watermark all ride the rewrite.
-        Refuses while an uncommitted (crashed, un-replayed) wave
-        exists.
-
-        ``n_buckets`` must be passed explicitly and equal the ORIGINAL
-        feature-hash modulus the waves were written under — the
-        migration stamps it into the layout sidecar, and silently
-        adopting a drifted kernel config here would lock in mixed
-        feature spaces, the exact failure the sidecar guards against
-        (review r9). A stored ``bucket`` value at or above the claimed
-        modulus is proof of a wrong claim and refuses loudly (the
-        inverse — an original modulus SMALLER than claimed — is not
-        detectable from data; the explicit argument is the operator's
-        attestation)."""
-        import json as _json
-
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-        )
-
-        if n_buckets != self.n_buckets:
-            raise ValueError(
-                "migrate_slice_buckets requires an explicit "
-                f"n_buckets matching this kernel's ({self.n_buckets}); "
-                f"got {n_buckets!r}. Pass the ORIGINAL feature-hash "
-                "modulus the registry was written under — stamping a "
-                "drifted value would silently mix feature spaces."
+    def _wave_tables(self) -> list[WaveTable]:
+        # the _model sidecar directory and the watermark ride the
+        # rewrite; the refit is a pure function of the registry's row
+        # SET, so the model needs no refit after compaction
+        return [
+            WaveTable(
+                self.state_path,
+                partition_by=("w", "sb"),
+                merges=(self._doc_seen,),
+                forget_cols=(self.id_col,),
+                guard=self._doc_seen,
             )
-        max_b = (
-            spark.read.parquet(self.state_path)
-            .agg(F.max("bucket"))
-            .collect()[0][0]
-        )
-        if max_b is not None and max_b >= n_buckets:
-            raise ValueError(
-                f"registry holds bucket id {max_b} >= claimed "
-                f"n_buckets {n_buckets} — the original modulus was "
-                "larger than claimed; migrating would corrupt the "
-                "feature space"
-            )
-        guard_committed_waves(self._watermark, self.state_path)
-        compact_parquet(
-            spark,
-            self.state_path,
-            partition_by=["w", "sb"],
-            transform=lambda df: df.withColumn(
-                "sb",
-                F.shiftrightunsigned(self._slice_hash(), self._sb_shift),
-            ),
-        )
-        # stamp directly: ensure_layout refuses data-without-sidecar by
-        # design, and this method IS the sanctioned migration
-        with open(
-            os.path.join(self.state_path, "_layout.json"), "w"
-        ) as fh:
-            _json.dump(
-                {
-                    "n_buckets": self.n_buckets,
-                    "n_slice_buckets": self.n_slice_buckets,
-                },
-                fh,
-            )
-        self._layout_checked = False
+        ]
 
     # -- state access -----------------------------------------------------
     def _state_exists(self, spark: SparkSession) -> bool:
@@ -472,54 +312,28 @@ class IncrementalQualityClassifier:
             self.n_buckets,
         )
 
-    def forget(self, spark: SparkSession, ids) -> int:
-        """Right-to-be-forgotten: hard-delete the given doc ids'
-        labeled feature rows from the registry
-        (maintenance.forget_doc_rows — Bloom-TARGETED via the doc-id
-        sidecars) and REFIT, because unlike the dedup kernels' pure
-        set state the fitted model MEMORIZED the forgotten documents'
+    def _after_forget(self, spark: SparkSession) -> None:
+        """REFIT after a forget: unlike the dedup kernels' pure set
+        state, the fitted model MEMORIZED the forgotten documents'
         features — deleting the rows without refitting would leave
         their influence in every future ``score()``. With no rows left
         the model sidecar is removed (``model()`` returns the
         documented empty frame). The per-wave counts sidecar is
         dropped (loss-tolerant cache by contract — the next refit
         falls back to the exact distinct count and the next wave heals
-        it). A later redelivery of a forgotten id is admitted as
-        brand-new labeled data. Idempotent; returns the number of wave
-        directories rewritten."""
+        it)."""
         import contextlib
         import shutil
 
-        from beavers_spark.streaming.maintenance import forget_doc_rows
-
-        n = forget_doc_rows(
-            spark, self.state_path, ids, id_col=self.id_col,
-            guard=self._doc_seen,
-        )
-        if n:
-            with contextlib.suppress(OSError):
-                os.remove(self._counts_file)
-            # re-probe rather than trust the cached flag (a forget
-            # can leave the registry as zero-row schema waves)
-            self._has_state = table_exists(spark, self.state_path)
-            if (
-                self._has_state
-                and self.read_state(spark).limit(1).count()
-            ):
-                self.refit(spark)
-            else:
-                # nothing left to fit on: the documented empty-model
-                # state (``model()`` returns the empty frame)
-                shutil.rmtree(self.model_path, ignore_errors=True)
-        return n
+        with contextlib.suppress(OSError):
+            os.remove(self._counts_file)
+        if self._has_state and self.read_state(spark).limit(1).count():
+            self.refit(spark)
+        else:
+            shutil.rmtree(self.model_path, ignore_errors=True)
 
     # -- the kernel -------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between its two renames BEFORE
-        # the watermark check or any wave write (review r8)
-        recover_compaction(self.state_path)
-        if self._watermark.is_applied(batch_id):
-            return
+    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df
         if self._state_exists(spark):
@@ -600,15 +414,14 @@ class IncrementalQualityClassifier:
             d = f"{self.state_path}/w={wv}"
             if not table_exists(spark, d):
                 return 0
-            # driver-local distinct over the wave's id column (pyarrow
-            # over the just-written files — the _wave_rows_local /
-            # _band_keys_local POSIX assumption): one wave is
-            # batch-sized by construction, and the Spark
+            # driver-local distinct over the wave's id column
+            # (maintenance.read_wave_local, footer-capped) — the Spark
             # distinct().count() this replaces cost 2 scheduled jobs
-            # per wave (r13; measured 128 jobs/scenario on refit1)
-            n = _wave_distinct_local(d, self.id_col)
-            if n is not None:
-                return n
+            # per wave (r13; measured 128 jobs/scenario on refit1); the
+            # Spark count stays as the over-cap / non-POSIX fallback
+            got = read_wave_local(d, self.id_col)
+            if got is not None and got[0] <= BLOOM_PROBE_CAP:
+                return 0 if got[1] is None else len(got[1].unique())
             return (
                 spark.read.parquet(d)
                 .select(self.id_col)
@@ -636,9 +449,6 @@ class IncrementalQualityClassifier:
         if batch_id % self.refit_every == 0 and self._state_exists(spark):
             self.refit(spark)
         self._watermark.mark(batch_id)
-        # cadence check AFTER the wave committed (rides the existing
-        # crash-window contract -- see maintenance.maybe_auto_compact)
-        maybe_auto_compact(self, spark)
 
     def refit_inputs(
         self, spark: SparkSession
@@ -701,34 +511,11 @@ class IncrementalQualityClassifier:
         return state
 
     def compact(self, spark: SparkSession) -> int:
-        """Coalesce the wave-per-batch registry into the single ``w=-1``
-        directory; returns the post-compaction file count. The refit is
-        a pure function of the registry's row SET, so the model is
-        unaffected (no refit needed); the ``_model`` sidecar directory
-        and the watermark ride the rewrite. ``-1`` never collides with
-        a live batch id, so the redelivery probe's ``w != batch_id``
-        filter keeps working. Refuses while an uncommitted (crashed,
-        un-replayed) wave exists — see
-        ``maintenance.guard_committed_waves``."""
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-        )
-
-        guard_committed_waves(self._watermark, self.state_path)
+        """``WaveKernel.compact``; the per-wave counts sidecar collapses
+        with the waves into ``w=-1`` (ids are disjoint across waves, so
+        the sum is exact)."""
         n_docs = self._registry_doc_count(spark)
-        # the rewrite destroys the per-wave doc bitmaps with the wave
-        # dirs — OR them into the coalesced w=-1 wave
-        out = self._doc_seen.compact_merge(
-            lambda: compact_parquet(
-                spark,
-                self.state_path,
-                partition_by=["w", "sb"],
-                transform=lambda df: df.withColumn("w", F.lit(-1)),
-            )
-        )
-        # waves collapsed into w=-1: the counts sidecar collapses with
-        # them (ids are disjoint across waves, so the sum is exact)
+        out = super().compact(spark)
         self._write_counts({"-1": n_docs})
         return out
 

@@ -65,19 +65,15 @@ from beavers_spark.functions.dedup import (
     shingle_sets,
 )
 from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
     DocSeenGuard,
     ProbeMetrics,
     WaveBloomIndex,
-    WaveMetrics,
     ensure_layout,
-    maybe_auto_compact,
-    partition_stats,
-    recover_compaction,
+    read_wave_local,
     seen_anti_join,
     table_exists,
-    timed_phase,
 )
+from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
 
 _SIG_COLS = ["doc_id"] + [f"mh{i}" for i in range(NUM_HASHES)]
 _BAND_KEYS = ["band_id"] + [f"h{r}" for r in range(ROWS_PER_BAND)]
@@ -145,7 +141,7 @@ def _exprs() -> dict:
     return _EXPRS
 
 
-class IncrementalNearDedup:
+class IncrementalNearDedup(WaveKernel):
     """``foreachBatch`` callable maintaining corpus-wide near-dup pairs.
 
     ::
@@ -172,21 +168,12 @@ class IncrementalNearDedup:
         n_hash_buckets: int = 16,
         compact_every_waves: int | None = 16,
     ) -> None:
-        self.state_path = state_path
+        super().__init__(state_path, compact_every_waves)
         self.pairs_path = pairs_path
         self.text_col = text_col
         self.id_col = id_col
         self.n = n
         self.threshold = threshold
-        #: live-wave-count threshold that triggers an automatic
-        #: ``compact()`` right after a wave commits (None = manual
-        #: compaction only; see maintenance.maybe_auto_compact).
-        #: DEFAULT 16 since r11 — the growth bench measured the
-        #: no-maintenance slope as pure file-count fragmentation and
-        #: the 16-wave cadence returning the tail to the early plateau
-        #: (docs/concepts/growth.md); unbounded growth is now opt-in
-        self.compact_every_waves = compact_every_waves
-        self.auto_compactions = 0
         #: bits per wave band-key Bloom sidecar (None disables)
         self.bloom_bits = bloom_bits
         #: hot-bucket bound for the cross-batch band join (None = exact
@@ -219,8 +206,6 @@ class IncrementalNearDedup:
         self.anchors_path = state_path.rstrip("/") + "_anchors"
         self._anchors_checked = False
         self._layout_checked = False
-        self._has_state = False
-        self._watermark = BatchWatermark(state_path)
         self._bloom = WaveBloomIndex(
             state_path, bloom_bits, min_waves=bloom_min_waves,
             keys_of=_wave_band_keys, adaptive=True,
@@ -231,32 +216,28 @@ class IncrementalNearDedup:
         self._doc_seen = DocSeenGuard(
             state_path, m_bits=bloom_bits, min_waves=bloom_min_waves,
         )
-        #: one WaveMetrics per applied wave over the wave's state
-        #: directory — bytes appended to state per wave and its file
-        #: count (the compaction-due signal; see maintenance.WaveMetrics)
-        self.metrics: list[WaveMetrics] = []
-        #: per-batch Bloom-prune accounting (see maintenance.ProbeMetrics)
-        self.probe_metrics: list[ProbeMetrics] = []
-        #: accumulated driver-observed wall seconds per __call__ phase.
-        #: Recorded keys (one per timed span, ADVICE r8): ``call_total``
-        #: (the whole applied batch), ``parity_check``, ``state_write``,
-        #: ``state_count``, ``band_write``, ``bloom_fold``,
-        #: ``probe_decide``, ``plan_build``, ``pairs_write``,
-        #: ``record_wave``. The named-cost breakdown VERDICT r7 item 1
-        #: asked for; timing only, no behavior
-        self.phase_seconds: dict[str, float] = {}
+        # phase_seconds keys beyond call_total: parity_check,
+        # seen_probe, state_write, seen_sidecar, state_count,
+        # band_write, bloom_fold, probe_decide, plan_build, pairs_write,
+        # record_wave
 
-    def _phase(self, name: str):
-        return timed_phase(self.phase_seconds, name)
-
-    def _record_wave(
-        self, spark: SparkSession, batch_id: int, wave_dir: str
-    ) -> None:
-        """Per-wave write accounting (driver-side listing of the one wave
-        directory): bytes appended to state this wave + its file count —
-        the signal for when ``compact()`` is due."""
-        files, nbytes, mx = partition_stats(spark, [wave_dir])
-        self.metrics.append(WaveMetrics(batch_id, 1, files, nbytes, mx))
+    def _wave_tables(self) -> list[WaveTable]:
+        return [
+            WaveTable(self.pairs_path, forget_cols=("doc1", "doc2")),
+            # clustered by doc_id (VERDICT r10 item 4): the candidate
+            # lookup and the doc-seen guard both probe this table by
+            # id, and narrow per-row-group id min/max lets pushable id
+            # predicates skip the fat shingle-set column's row groups
+            WaveTable(
+                self.state_path,
+                cluster_by=("doc_id",),
+                merges=(self._doc_seen, self._bloom),
+                guard=self._doc_seen,
+            ),
+            # the band registry is RE-DERIVED from the state, never
+            # compacted or swept (compact / _after_forget rebuild it)
+            WaveTable(self.anchors_path, partition_by=None, forget_cols=()),
+        ]
 
     # -- anchor maintenance (bucket_cap mode) -----------------------------
     def _anchor_wave(self, bands: DataFrame) -> DataFrame:
@@ -388,55 +369,28 @@ class IncrementalNearDedup:
             .parquet(band_dir)
         )
 
-    def _band_keys_local(self, spark: SparkSession, band_dir: str):
-        """The wave's unique band-key hashes, read COLUMNAR AND
-        DRIVER-LOCAL from the just-written band wave (pyarrow over the
-        8-byte ``bh`` column) — the Bloom-build + probe keys without
-        the extra Spark job the old per-wave ``collect_keys`` paid.
-        This kernel assumes a driver-readable POSIX state root (the
-        same assumption WaveBloomIndex and the touched-bucket listing
-        in ``__call__`` already make); the Spark-collect fallback below
-        is defense against transient listing errors, not an
-        object-store path. Returns None past the index's ``probe_cap``
-        — the caller then hands off to the EXECUTOR-SIDE build + probe
-        (``save_wave_distributed`` / ``live_waves_df``), so pruning
-        stays on at any key count."""
-        import glob as _glob
-
+    def _band_keys(self, spark: SparkSession, band_dir: str):
+        """The wave's unique band-key hashes — the Bloom-build + probe
+        keys — read COLUMNAR AND DRIVER-LOCAL from the just-written band
+        wave (the 8-byte ``bh`` column), without the extra Spark job the
+        old per-wave ``collect_keys`` paid; the Spark collect stays as
+        the fallback for a wave that is not driver-readable. Returns
+        None past the index's ``probe_cap`` — the caller then hands off
+        to the EXECUTOR-SIDE build + probe (``save_wave_distributed`` /
+        ``live_waves_df``), so pruning stays on at any key count."""
         import numpy as np
 
-        try:
-            if not os.path.isdir(band_dir):
-                raise OSError(band_dir)
-            files = _glob.glob(
-                os.path.join(band_dir, "**", "*.parquet"), recursive=True
-            )
-            if not files:  # empty wave: nothing to probe, zero bitmap
-                return np.array([], dtype=np.int64)
-            import pyarrow.parquet as pq
-
-            # over-cap DETECTION from the parquet footers alone — the
-            # old num_rows check ran AFTER to_table had already pulled
-            # the whole key column into the driver, i.e. the cap's
-            # memory bound arrived too late on exactly the waves it
-            # exists for (review r9)
-            if (
-                sum(pq.read_metadata(f).num_rows for f in files)
-                > self._bloom.probe_cap
-            ):
-                return None
-            import pyarrow.dataset as ds
-
-            tbl = ds.dataset(files, format="parquet").to_table(
-                columns=["bh"]
-            )
-        except Exception:
+        got = read_wave_local(band_dir, "bh", self._bloom.probe_cap)
+        if got is None:
             return self._bloom.collect_keys(
                 spark.read.parquet(band_dir).select("bh"), "bh"
             )
-        return np.unique(
-            tbl.column("bh").to_numpy(zero_copy_only=False)
-        )
+        rows, bh = got
+        if rows > self._bloom.probe_cap:
+            return None
+        if bh is None:  # empty wave: nothing to probe, zero bitmap
+            return np.array([], dtype=np.int64)
+        return np.unique(bh.to_numpy(zero_copy_only=False))
 
     def registry_probe(
         self,
@@ -475,30 +429,6 @@ class IncrementalNearDedup:
             ob = ob.filter(F.col("b").isin(touched_b))
         return ob.select("doc_id", *_BAND_KEYS)
 
-    def _wave_rows_local(self, wave_dir: str) -> int | None:
-        """Row count of one wave from its parquet footers, driver-local
-        (no Spark job); None when the root isn't listable — callers
-        fall back to a Spark count."""
-        import glob as _glob
-
-        try:
-            if not os.path.isdir(wave_dir):
-                # glob returns [] (not an error) for a non-POSIX or
-                # object-store path — without this guard the fallback
-                # would never fire and every batch would silently be
-                # treated as empty (the _band_keys_local precedent)
-                return None
-            files = _glob.glob(
-                os.path.join(wave_dir, "**", "*.parquet"), recursive=True
-            )
-            if not files:
-                return 0
-            import pyarrow.parquet as pq
-
-            return sum(pq.read_metadata(f).num_rows for f in files)
-        except Exception:
-            return None
-
     def _prior_band_waves_empty(
         self, batch_id: int, kept: list | None
     ) -> bool:
@@ -534,14 +464,6 @@ class IncrementalNearDedup:
         return True
 
     # -- state access -----------------------------------------------------
-    def _state_exists(self, spark: SparkSession) -> bool:
-        if self._has_state:
-            return True
-        if table_exists(spark, self.state_path):
-            self._has_state = True
-            return True
-        return False
-
     def read_state(self, spark: SparkSession) -> DataFrame:
         # the wave column ``w`` is a storage detail (see __call__), not
         # part of the per-document state contract
@@ -554,114 +476,22 @@ class IncrementalNearDedup:
             "doc1", "doc2", "est_jaccard", "jaccard"
         )
 
-    def forget(self, spark: SparkSession, ids) -> int:
-        """Right-to-be-forgotten: hard-delete the given doc ids from
-        the signature/shingle state, the band registry, and every
-        emitted pair that involves them (maintenance.forget_doc_rows —
-        Bloom-TARGETED: the doc-id sidecars name the only waves that
-        may hold the ids, so a forget request rewrites a handful of
-        wave directories, not the corpus). A LATER redelivery of a
-        forgotten id is admitted as a brand-new document ("first
-        arrival after forgetting"); pairs between remaining docs are
-        untouched. When any state wave was rewritten the band registry
-        is REBUILT from the cleansed state (restores the state/anchors
-        wave parity the kernel guards, and in capped mode re-opens
-        anchor slots a forgotten hot doc held). Idempotent — a crash
-        mid-forget is finished by re-running. Returns the number of
-        wave directories rewritten."""
-        from beavers_spark.streaming.maintenance import forget_doc_rows
-
-        touched = forget_doc_rows(
-            spark, self.state_path, ids, guard=self._doc_seen
-        )
-        n = touched
-        n += forget_doc_rows(spark, self.pairs_path, ids, id_col="doc1")
-        n += forget_doc_rows(spark, self.pairs_path, ids, id_col="doc2")
-        if touched:
-            self._bloom.invalidate()
-            # the forget may have removed the registry's LAST
-            # schema-bearing partition — re-probe rather than trust
-            # the cached flag (the empty-table trap)
-            self._has_state = table_exists(spark, self.state_path)
-            self.rebuild_anchors(spark)
-        return n
+    def _after_forget(self, spark: SparkSession) -> None:
+        """Rebuild the band registry from the cleansed state: restores
+        the state/anchors wave parity the kernel guards, and in capped
+        mode re-opens anchor slots a forgotten hot doc held."""
+        self.rebuild_anchors(spark)
 
     def compact(self, spark: SparkSession) -> int:
-        """Coarsen all wave partitions into the single ``w=-1`` directory
-        (plus one-file-per-batch pairs cleanup); returns the state table's
-        post-compaction file count.
-
-        Streaming batch ids are non-negative, so ``-1`` can never collide
-        with a live wave: the kernel's ``w != batch_id`` exclusion and a
-        replayed batch's overwrite of its own wave directory both keep
-        working. MUST go through this method rather than a flat
-        ``compact_parquet(path)`` — flattening would demote ``w`` to a
-        data column and the next wave's directory write would leave the
-        table half hive-partitioned, which Spark's partition discovery
-        rejects.
-        """
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-        )
-
-        guard_committed_waves(
-            self._watermark,
-            self.state_path,
-            self.pairs_path,
-            self.anchors_path,
-        )
-        compact_parquet(
-            spark,
-            self.pairs_path,
-            partition_by="w",
-            transform=lambda df: df.withColumn("w", F.lit(-1)),
-        )
-        # nested merges: the one rewrite destroys BOTH sidecar
-        # domains' per-wave bitmaps (band keys + doc ids)
-        # clustered by doc_id (VERDICT r10 item 4): the candidate
-        # lookup and the doc-seen guard both probe this table by id,
-        # and narrow per-row-group id min/max lets pushable id
-        # predicates skip the fat shingle-set column's row groups
-        out = self._doc_seen.compact_merge(
-            lambda: self._bloom.compact_merge(
-                lambda: compact_parquet(
-                    spark,
-                    self.state_path,
-                    partition_by="w",
-                    transform=lambda df: df.withColumn("w", F.lit(-1)),
-                    cluster_by=("doc_id",),
-                )
-            )
-        )
-        # re-band the coalesced wave (both modes — the band registry's
-        # wave set must stay 1:1 with the state's); in capped mode the
-        # merged wave's anchors are the first-cap docs per band key
-        # ACROSS the compacted docs
+        """``WaveKernel.compact``, then re-band the coalesced wave (both
+        modes — the band registry's wave set must stay 1:1 with the
+        state's); in capped mode the merged wave's anchors are the
+        first-cap docs per band key ACROSS the compacted docs."""
+        out = super().compact(spark)
         self.rebuild_anchors(spark)
         return out
 
     # -- the kernel -------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # a compaction crash between compact_parquet's two renames
-        # leaves the table in .__compact_old with the live path MISSING
-        # — including the watermark sidecar. Recover BEFORE the
-        # watermark check and before any wave write: a wave written
-        # into the recreated empty path would permanently orphan the
-        # pre-compaction table (review r8).
-        for p in (self.state_path, self.pairs_path):
-            recover_compaction(p)
-        # both writes are overwrite-per-wave (idempotent under crash
-        # replays); the watermark still skips committed batches so a
-        # replay does no redundant work
-        if self._watermark.is_applied(batch_id):
-            return
-        with self._phase("call_total"):
-            self._apply(batch_df, batch_id)
-        # cadence check AFTER the wave committed (rides the existing
-        # crash-window contract -- see maintenance.maybe_auto_compact)
-        maybe_auto_compact(self, batch_df.sparkSession)
-
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df
@@ -726,16 +556,16 @@ class IncrementalNearDedup:
         with self._phase("seen_sidecar"):
             self._doc_seen.save_wave(spark, wave_dir, batch_id)
         # emptiness check from the just-written wave's parquet footers,
-        # driver-local (same POSIX assumption as _band_keys_local) — the
-        # Spark count() job this replaces was footer-only too but still
-        # paid ~0.09s/wave of job scheduling (phase_seconds, r8); the
-        # Spark fallback covers non-listable roots
+        # driver-local (maintenance.read_wave_local) — the Spark count()
+        # job this replaces was footer-only too but still paid
+        # ~0.09s/wave of job scheduling (phase_seconds, r8); the Spark
+        # fallback covers non-listable roots
         new_state = spark.read.parquet(wave_dir)
         band_dir = f"{self.anchors_path}/w={batch_id}"
         with self._phase("state_count"):
-            rows = self._wave_rows_local(wave_dir)
+            got = read_wave_local(wave_dir)
             state_empty = (
-                rows == 0 if rows is not None else new_state.count() == 0
+                got[0] == 0 if got is not None else new_state.count() == 0
             )
         if state_empty:
             # empty band wave keeps the state/band wave sets 1:1 (the
@@ -784,7 +614,7 @@ class IncrementalNearDedup:
         try:
             with self._phase("bloom_fold"):
                 if self._bloom.probe_active(exclude=batch_id):
-                    band_h = self._band_keys_local(spark, band_dir)
+                    band_h = self._band_keys(spark, band_dir)
                     if band_h is None:
                         # past probe_cap: build the wave's bitmap
                         # EXECUTOR-SIDE (one bit_or aggregation bounded

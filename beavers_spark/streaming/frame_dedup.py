@@ -44,27 +44,20 @@ from pyspark.sql import functions as F
 from beavers_spark.functions.multimodal import avi_frames
 from beavers_spark.streaming.maintenance import (
     PROBE_BROADCAST_CAP,
-    BatchWatermark,
     DocSeenGuard,
-    ProbeMetrics,
     WaveBloomIndex,
-    WaveMetrics,
     ensure_layout,
     fanout_repartition,
-    maybe_auto_compact,
     overlap_jobs,
-    partition_stats,
     prune_hash_buckets,
-    recover_compaction,
     registry_anti_probe,
     seen_anti_join,
-    table_exists,
-    timed_phase,
 )
 from beavers_spark.streaming.substring_dedup import _wave_keys
+from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
 
 
-class IncrementalFrameDedup:
+class IncrementalFrameDedup(WaveKernel):
     """``foreachBatch`` callable maintaining corpus-wide frame
     ownership over AVI payload columns.
 
@@ -91,25 +84,14 @@ class IncrementalFrameDedup:
         probe_cap: int | None = None,
         compact_every_waves: int | None = 16,
     ) -> None:
-        self.state_path = state_path
+        super().__init__(state_path, compact_every_waves)
         self.out_path = out_path
         self.payload_col = payload_col
         self.id_col = id_col
-        #: live-wave-count threshold that triggers an automatic
-        #: ``compact()`` right after a wave commits (None = manual
-        #: compaction only; see maintenance.maybe_auto_compact).
-        #: DEFAULT 16 since r11 — the growth bench measured the
-        #: no-maintenance slope as pure file-count fragmentation and
-        #: the 16-wave cadence returning the tail to the early plateau
-        #: (docs/concepts/growth.md); unbounded growth is now opt-in
-        self.compact_every_waves = compact_every_waves
-        self.auto_compactions = 0
         #: bits per wave Bloom sidecar (None disables the probe filter)
         self.bloom_bits = bloom_bits
         #: hash-prefix sub-partitions per wave (``b = pmod(h, N)``)
         self.n_hash_buckets = n_hash_buckets
-        self._has_state = False
-        self._watermark = BatchWatermark(state_path)
         bloom_kwargs = {} if probe_cap is None else {"probe_cap": probe_cap}
         self._bloom = WaveBloomIndex(
             state_path, bloom_bits, min_waves=bloom_min_waves,
@@ -122,26 +104,21 @@ class IncrementalFrameDedup:
             state_path, m_bits=bloom_bits,
             min_waves=bloom_min_waves, **bloom_kwargs,
         )
-        #: per-batch Bloom-prune accounting (see maintenance.ProbeMetrics)
-        self.probe_metrics: list[ProbeMetrics] = []
-        #: one WaveMetrics per applied wave over the wave's registry
-        #: directory (file count + bytes — the BENCH state_files
-        #: observable, VERDICT r12 item 4)
-        self.metrics: list[WaveMetrics] = []
-        #: accumulated driver-observed wall seconds per __call__ phase
-        #: (winners_count / bloom_fold / state_write / out_write /
-        #: call_total)
-        self.phase_seconds: dict[str, float] = {}
+
+    def _wave_tables(self) -> list[WaveTable]:
+        return [
+            WaveTable(self.out_path, cluster_by=("doc_id",)),
+            # clustered by the probe key (VERDICT r10 item 4): narrow
+            # per-row-group h min/max in the coalesced bucket files
+            WaveTable(
+                self.state_path,
+                cluster_by=("b", "h"),
+                merges=(self._doc_seen, self._bloom),
+                guard=self._doc_seen,
+            ),
+        ]
 
     # -- state access -----------------------------------------------------
-    def _state_exists(self, spark: SparkSession) -> bool:
-        if self._has_state:
-            return True
-        if table_exists(spark, self.state_path):
-            self._has_state = True
-            return True
-        return False
-
     def read_state(self, spark: SparkSession) -> DataFrame:
         """Frame-content ownership registry ``(h, doc_id, frame_idx)``
         (``w``/``b`` are storage details)."""
@@ -156,79 +133,7 @@ class IncrementalFrameDedup:
             "doc_id", "frame_idx", "n_bytes", "frame_md5"
         )
 
-    def forget(self, spark: SparkSession, ids) -> int:
-        """Right-to-be-forgotten for video documents: hard-delete the
-        given doc ids from the frame-content ownership registry and
-        the kept-frame output (maintenance.forget_doc_rows — doc-id-
-        Bloom-TARGETED wave rewrites). Removing ownership RE-OPENS the
-        frame contents: the next video presenting a forgotten frame's
-        bytes becomes its owner, and a later redelivery of the
-        forgotten id is admitted as brand-new. Idempotent; returns the
-        number of wave directories rewritten."""
-        from beavers_spark.streaming.maintenance import forget_doc_rows
-
-        n = forget_doc_rows(
-            spark, self.state_path, ids, guard=self._doc_seen
-        )
-        if n:
-            self._bloom.invalidate()
-            # the forget may have removed the registry's LAST
-            # schema-bearing partition — re-probe rather than trust
-            # the cached flag (the empty-table trap)
-            self._has_state = table_exists(spark, self.state_path)
-        n += forget_doc_rows(spark, self.out_path, ids)
-        return n
-
-    def compact(self, spark: SparkSession) -> int:
-        """Coarsen all wave partitions into ``w=-1`` (registry rows
-        stay clustered by ``(b, h)``); returns the post-compaction
-        file count."""
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-        )
-
-        guard_committed_waves(
-            self._watermark, self.state_path, self.out_path
-        )
-        compact_parquet(
-            spark,
-            self.out_path,
-            partition_by="w",
-            transform=lambda df: df.withColumn("w", F.lit(-1)),
-            cluster_by=("doc_id",),
-        )
-        # nested merges: the one rewrite destroys BOTH sidecar
-        # domains' per-wave bitmaps (band keys + doc ids)
-        # clustered by the probe key (VERDICT r10 item 4): narrow
-        # per-row-group h min/max in the coalesced bucket files
-        return self._doc_seen.compact_merge(
-            lambda: self._bloom.compact_merge(
-                lambda: compact_parquet(
-                    spark,
-                    self.state_path,
-                    partition_by="w",
-                    transform=lambda df: df.withColumn("w", F.lit(-1)),
-                    cluster_by=("b", "h"),
-                )
-            )
-        )
-
     # -- the kernel -------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between its two renames BEFORE
-        # the watermark check or any wave write (the shared
-        # crash-window contract)
-        for p in (self.state_path, self.out_path):
-            recover_compaction(p)
-        if self._watermark.is_applied(batch_id):
-            return
-        with timed_phase(self.phase_seconds, "call_total"):
-            self._apply(batch_df, batch_id)
-        # cadence check AFTER the wave committed (rides the existing
-        # crash-window contract — see maintenance.maybe_auto_compact)
-        maybe_auto_compact(self, batch_df.sparkSession)
-
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df
@@ -248,7 +153,7 @@ class IncrementalFrameDedup:
             # id (VERDICT r10 item 2) — a disjoint batch scans NO
             # prior bytes; excludes this wave's own half-committed
             # directory (crash-replay safety)
-            with timed_phase(self.phase_seconds, "seen_probe"):
+            with self._phase("seen_probe"):
                 seen = self._doc_seen.pruned_seen(
                     spark, batch, batch_id, self.id_col
                 )
@@ -317,11 +222,11 @@ class IncrementalFrameDedup:
             )
             pre_h = n_rows = None
             if probe_on:
-                with timed_phase(self.phase_seconds, "bloom_fold"):
+                with self._phase("bloom_fold"):
                     pre_h, n_rows = self._bloom.collect_keys_counted(
                         winners, "h"
                     )
-            with timed_phase(self.phase_seconds, "winners_count"):
+            with self._phase("winners_count"):
                 n_winners = (
                     n_rows if n_rows is not None else winners.count()
                 )
@@ -367,7 +272,7 @@ class IncrementalFrameDedup:
             wave_dir = f"{self.state_path}/w={batch_id}"
 
             def _commit_state():
-                with timed_phase(self.phase_seconds, "state_write"):
+                with self._phase("state_write"):
                     (
                         new_owned.select("h", "doc_id", "frame_idx")
                         .withColumn(
@@ -386,10 +291,7 @@ class IncrementalFrameDedup:
                         .write.mode("overwrite")
                         .parquet(wave_dir)
                     )
-                files, nbytes, mx = partition_stats(spark, [wave_dir])
-                self.metrics.append(
-                    WaveMetrics(batch_id, 1, files, nbytes, mx)
-                )
+                self._record_wave(spark, batch_id, wave_dir)
                 if pre_h is not None:
                     # PRE-anti key set: a superset bitmap only adds
                     # false positives, never wrong answers
@@ -405,11 +307,11 @@ class IncrementalFrameDedup:
                 # the wave's doc-id bitmap, from the committed
                 # read-back — what future batches' seen probes test
                 # against
-                with timed_phase(self.phase_seconds, "seen_sidecar"):
+                with self._phase("seen_sidecar"):
                     self._doc_seen.save_wave(spark, wave_dir, batch_id)
 
             def _commit_out():
-                with timed_phase(self.phase_seconds, "out_write"):
+                with self._phase("out_write"):
                     new_owned.select(
                         "doc_id", "frame_idx", "n_bytes", "frame_md5"
                     ).write.mode("overwrite").parquet(

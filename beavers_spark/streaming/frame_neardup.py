@@ -53,7 +53,6 @@ the reference has no media surface itself (README.md:43-50 scope).
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,21 +60,16 @@ from pyspark.sql import functions as F
 
 from beavers_spark.functions.multimodal import avi_frames
 from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
     DocSeenGuard,
     ensure_layout,
     fanout_repartition,
-    maybe_auto_compact,
-    partition_stats,
-    ProbeMetrics,
     prune_hash_buckets,
-    recover_compaction,
+    read_wave_local,
     seen_anti_join,
     table_exists,
-    timed_phase,
     WaveBloomIndex,
-    WaveMetrics,
 )
+from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
 
 
 def _wave_band_keys(spark: SparkSession, wave_dir: str) -> DataFrame:
@@ -84,30 +78,7 @@ def _wave_band_keys(spark: SparkSession, wave_dir: str) -> DataFrame:
     return spark.read.parquet(wave_dir).select("bh")
 
 
-def _wave_rows_local(wave_dir: str) -> int | None:
-    """Row count of one wave from its parquet footers, driver-local
-    (no Spark job); None when the root isn't listable (non-POSIX /
-    object store) — callers fall back to a schema-pinned Spark count
-    (never schema INFERENCE: an empty wave has no footer to infer
-    from)."""
-    import glob as _glob
-
-    try:
-        if not os.path.isdir(wave_dir):
-            return None
-        files = _glob.glob(
-            os.path.join(wave_dir, "**", "*.parquet"), recursive=True
-        )
-        if not files:
-            return 0
-        import pyarrow.parquet as pq
-
-        return sum(pq.read_metadata(f).num_rows for f in files)
-    except OSError:
-        return None
-
-
-class IncrementalFrameNearDedup:
+class IncrementalFrameNearDedup(WaveKernel):
     """``foreachBatch`` callable maintaining corpus-wide perceptual
     frame near-dup pairs over AVI payload columns.
 
@@ -131,14 +102,6 @@ class IncrementalFrameNearDedup:
     #: (ADVICE r11: the audio kernel's n_bytes became the duration
     #: class without any recorded versioning)
     SIG_SCHEME = "avi-ahash-v1"
-    #: the scheme every pre-r12 sidecar (written before sig_scheme was
-    #: stamped at all) is KNOWN to have used, or None when the
-    #: derivation has since changed. Non-None -> ensure_layout adopts
-    #: a missing key instead of refusing the restart (ADVICE r12: the
-    #: avi/ppm derivations are unchanged since day one, so their legacy
-    #: tables are compatible by construction; the audio kernel's v1->v2
-    #: n_bytes change means ITS legacy tables must still fail loudly).
-    SIG_SCHEME_LEGACY: str | None = "avi-ahash-v1"
 
     def __init__(
         self,
@@ -166,7 +129,7 @@ class IncrementalFrameNearDedup:
                 f"bucket_cap must be >= 2 (a 1-cap chains every "
                 f"bucket), got {bucket_cap}"
             )
-        self.state_path = state_path
+        super().__init__(state_path, compact_every_waves)
         self.bands_path = state_path.rstrip("/") + "_bands"
         self.pairs_path = pairs_path
         self.payload_col = payload_col
@@ -184,17 +147,6 @@ class IncrementalFrameNearDedup:
         self.bloom_bits = bloom_bits
         #: hash-prefix sub-partitions per band wave (``b = pmod(bh, N)``)
         self.n_hash_buckets = n_hash_buckets
-        #: live-wave-count threshold that triggers an automatic
-        #: ``compact()`` right after a wave commits (None = manual
-        #: compaction only; see maintenance.maybe_auto_compact).
-        #: DEFAULT 16 since r11 — the growth bench measured the
-        #: no-maintenance slope as pure file-count fragmentation and
-        #: the 16-wave cadence returning the tail to the early plateau
-        #: (docs/concepts/growth.md); unbounded growth is now opt-in
-        self.compact_every_waves = compact_every_waves
-        self.auto_compactions = 0
-        self._has_state = False
-        self._watermark = BatchWatermark(state_path)
         bloom_kwargs = {} if probe_cap is None else {"probe_cap": probe_cap}
         #: rooted at the BAND registry: wave listing, sidecars and the
         #: prune decision all concern the table the cross join scans
@@ -209,24 +161,41 @@ class IncrementalFrameNearDedup:
             self.state_path, m_bits=bloom_bits,
             min_waves=bloom_min_waves, **bloom_kwargs,
         )
-        #: per-batch Bloom-prune accounting (see maintenance.ProbeMetrics)
-        self.probe_metrics: list[ProbeMetrics] = []
-        #: one WaveMetrics per applied wave over the wave's sig table
-        #: directory (file count + bytes — the BENCH state_files
-        #: observable, VERDICT r12 item 4)
-        self.metrics: list[WaveMetrics] = []
-        #: accumulated driver-observed wall seconds per __call__ phase
-        self.phase_seconds: dict[str, float] = {}
+
+    def _wave_tables(self) -> list[WaveTable]:
+        return [
+            # forget sweeps the PAIRS with full table scans: a victim's
+            # pair rows land in the PARTNER doc's wave (pairs are
+            # emitted in the newer doc's batch), so no home-wave
+            # sidecar can name them — two column-pruned probes (doc1 +
+            # doc2), rewriting only waves that hold a victim. Pairs
+            # tables are output-sized (hot-bucket-capped), not
+            # corpus-sized, which keeps that sweep the cheapest
+            WaveTable(self.pairs_path, forget_cols=("doc1", "doc2")),
+            WaveTable(
+                self.state_path,
+                cluster_by=("doc_id",),
+                merges=(self._doc_seen,),
+                guard=self._doc_seen,
+            ),
+            # the SIG table's doc-id guard targets the bands sweep too
+            # (ADVICE r12): a doc's band rows live in its home wave by
+            # construction (bands derive from the same batch's sig
+            # rows, and compaction coalesces both tables to w=-1
+            # together), so bands waves are a subset of the sig waves
+            # and the restriction cannot miss. Compaction clusters the
+            # registry by its probe key (VERDICT r10 item 4): narrow
+            # (band_id, bv) min/max per row group
+            WaveTable(
+                self.bands_path,
+                partition_by=("w", "b"),
+                cluster_by=("band_id", "bv"),
+                merges=(self._bloom,),
+                guard=self._doc_seen,
+            ),
+        ]
 
     # -- state access -----------------------------------------------------
-    def _state_exists(self, spark: SparkSession) -> bool:
-        if self._has_state:
-            return True
-        if table_exists(spark, self.state_path):
-            self._has_state = True
-            return True
-        return False
-
     def read_state(self, spark: SparkSession) -> DataFrame:
         """Per-frame signature table
         ``(doc_id, frame_idx, n_bytes, ahash)`` — always full,
@@ -270,103 +239,6 @@ class IncrementalFrameNearDedup:
             F.count(F.lit(1)).alias("nf")
         )
         return frame_doc_rollup(pairs, nf, min_shared_frac)
-
-    def forget(self, spark: SparkSession, ids) -> int:
-        """Right-to-be-forgotten: hard-delete the given doc ids from
-        the per-frame signature table (maintenance.forget_doc_rows —
-        Bloom-TARGETED via the doc-id sidecars), from the band
-        registry's anchor rows, and from every emitted pair that
-        involves them. Removing band anchors RE-OPENS any slots a
-        forgotten hot doc held in capped mode; a later redelivery of a
-        forgotten id is admitted as brand-new; pairs between remaining
-        docs (and ``read_doc_pairs`` verdicts derived from them) are
-        untouched. The audio/image subclasses inherit this unchanged —
-        their registries hold the same ``(doc_id, frame_idx, n_bytes,
-        ahash)`` rows. Idempotent; returns the number of wave
-        directories rewritten.
-
-        Targeting (ADVICE r12): the SIG and BANDS sweeps are both
-        Bloom-TARGETED through the sig table's doc-id sidecars — a
-        doc's band rows live in its home wave by construction (bands
-        derive from the same batch's sig rows, and compaction
-        coalesces both tables to ``w=-1`` together), so the sig
-        guard's live-wave verdict is exact for bands too. The PAIRS
-        sweeps remain full table scans: a victim's pair rows land in
-        the PARTNER doc's wave (pairs are emitted in the newer doc's
-        batch), so no home-wave sidecar can name them — a forget pays
-        two column-pruned probes of the pairs table (doc1 + doc2), and
-        only waves that actually hold a victim are rewritten. Pairs
-        tables are output-sized (hot-bucket-capped), not corpus-sized,
-        which keeps that sweep the cheapest of the three."""
-        from beavers_spark.streaming.maintenance import forget_doc_rows
-
-        n = forget_doc_rows(
-            spark, self.state_path, ids, guard=self._doc_seen
-        )
-        if n:
-            # the forget may have removed the sig table's LAST
-            # schema-bearing partition — re-probe rather than trust
-            # the cached flag (the empty-table trap)
-            self._has_state = table_exists(spark, self.state_path)
-        # the sig guard's sidecars restrict the bands sweep too (see
-        # docstring): guard wave ids are the sig table's, bands waves
-        # are a subset of them, and a victim in bands wave w is in sig
-        # wave w — so the restriction cannot miss
-        bands = forget_doc_rows(
-            spark, self.bands_path, ids, guard=self._doc_seen
-        )
-        if bands:
-            # the band waves' band-key sidecars were dropped with the
-            # rewrites; flush the in-memory bitmaps too
-            self._bloom.invalidate()
-        n += bands
-        n += forget_doc_rows(spark, self.pairs_path, ids, id_col="doc1")
-        n += forget_doc_rows(spark, self.pairs_path, ids, id_col="doc2")
-        return n
-
-    def compact(self, spark: SparkSession) -> int:
-        """Coarsen all wave partitions into ``w=-1`` (the band
-        registry keeps its ``b`` hash-prefix layout); returns the band
-        registry's post-compaction file count."""
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-        )
-
-        guard_committed_waves(
-            self._watermark, self.state_path, self.bands_path,
-            self.pairs_path,
-        )
-        compact_parquet(
-            spark,
-            self.pairs_path,
-            partition_by="w",
-            transform=lambda df: df.withColumn("w", F.lit(-1)),
-        )
-        # the sig rewrite destroys the per-wave doc bitmaps with the
-        # wave dirs — OR them into the coalesced w=-1 wave
-        self._doc_seen.compact_merge(
-            lambda: compact_parquet(
-                spark,
-                self.state_path,
-                partition_by="w",
-                transform=lambda df: df.withColumn("w", F.lit(-1)),
-                cluster_by=("doc_id",),
-            )
-        )
-        # cluster the coalesced registry by its probe key (VERDICT
-        # r10 item 4): each bucket file's row groups carry narrow
-        # (band_id, bv) min/max, so band-key predicates reaching the
-        # parquet reader skip row groups instead of reading the bucket
-        return self._bloom.compact_merge(
-            lambda: compact_parquet(
-                spark,
-                self.bands_path,
-                partition_by=["w", "b"],
-                transform=lambda df: df.withColumn("w", F.lit(-1)),
-                cluster_by=("band_id", "bv"),
-            )
-        )
 
     # -- banding ----------------------------------------------------------
     def _band_rows(self, sig: DataFrame) -> DataFrame:
@@ -418,17 +290,6 @@ class IncrementalFrameNearDedup:
         ).withColumn("b", F.pmod(F.col("bh"), F.lit(self.n_hash_buckets)))
 
     # -- the kernel -------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        for p in (self.state_path, self.bands_path, self.pairs_path):
-            recover_compaction(p)
-        if self._watermark.is_applied(batch_id):
-            return
-        with timed_phase(self.phase_seconds, "call_total"):
-            self._apply(batch_df, batch_id)
-        # cadence check AFTER the wave committed (rides the existing
-        # crash-window contract -- see maintenance.maybe_auto_compact)
-        maybe_auto_compact(self, batch_df.sparkSession)
-
     def _empty_pairs_wave(self, batch, batch_id: int) -> None:
         """Keep read_pairs valid from batch 0; doc types come from the
         BATCH (the chunk_dedup lesson: a hardcoded long would break
@@ -464,13 +325,6 @@ class IncrementalFrameNearDedup:
         batch = batch_df
         ensure_layout(
             self.state_path,
-            # pre-r12 sidecars lack sig_scheme; adopt only for kernels
-            # whose derivation never changed (SIG_SCHEME_LEGACY docs)
-            legacy=(
-                {"sig_scheme": self.SIG_SCHEME_LEGACY}
-                if self.SIG_SCHEME_LEGACY is not None
-                else None
-            ),
             bits=self.bits,
             max_hamming=self.max_hamming,
             n_hash_buckets=self.n_hash_buckets,
@@ -487,7 +341,7 @@ class IncrementalFrameNearDedup:
             # a batch id — a disjoint batch scans NO prior bytes
             # (VERDICT r10 item 2); excludes this wave's own
             # half-committed directory
-            with timed_phase(self.phase_seconds, "seen_probe"):
+            with self._phase("seen_probe"):
                 seen = self._doc_seen.pruned_seen(
                     spark, batch, batch_id, self.id_col
                 )
@@ -503,7 +357,7 @@ class IncrementalFrameNearDedup:
         # barrier: band rows, the within-batch join and the bitmap all
         # derive from the columnar read-back, never a second decode
         sig_dir = f"{self.state_path}/w={batch_id}"
-        with timed_phase(self.phase_seconds, "state_write"):
+        with self._phase("state_write"):
             # REBALANCE: AQE sizes the exchange, so a SMALL sig wave
             # lands as ONE file in the same job (the post-write shrink
             # rewrite this replaces cost an extra read+write per wave —
@@ -514,15 +368,16 @@ class IncrementalFrameNearDedup:
             sig.hint("rebalance").write.mode("overwrite").parquet(
                 sig_dir
             )
-        files, nbytes, mx = partition_stats(spark, [sig_dir])
-        self.metrics.append(WaveMetrics(batch_id, 1, files, nbytes, mx))
-        rows = _wave_rows_local(sig_dir)
-        if rows is None:
+        self._record_wave(spark, batch_id, sig_dir)
+        got = read_wave_local(sig_dir, catch=OSError)
+        if got is None:
             # non-listable root: schema-pinned count (never inference
             # — an all-empty wave has no footer to infer from)
             rows = (
                 spark.read.schema(sig.schema).parquet(sig_dir).count()
             )
+        else:
+            rows = got[0]
         if rows == 0:
             # fully-redelivered or undecodable batch: an empty sig
             # wave holds no schema-bearing file and would wedge every
@@ -537,11 +392,11 @@ class IncrementalFrameNearDedup:
         new_sig = spark.read.parquet(sig_dir)
         # the wave's doc-id bitmap, from the committed read-back (one
         # column scan) — what future batches' seen probes test against
-        with timed_phase(self.phase_seconds, "seen_sidecar"):
+        with self._phase("seen_sidecar"):
             self._doc_seen.save_wave(spark, sig_dir, batch_id)
 
         band_dir = f"{self.bands_path}/w={batch_id}"
-        with timed_phase(self.phase_seconds, "band_write"):
+        with self._phase("band_write"):
             (
                 self._band_rows(new_sig)
                 .repartition(self.n_hash_buckets, F.col("b"))
@@ -563,7 +418,7 @@ class IncrementalFrameNearDedup:
         pre_h = None
         overcap = False
         probe_on = self._bloom.probe_active(exclude=batch_id)
-        with timed_phase(self.phase_seconds, "bloom_fold"):
+        with self._phase("bloom_fold"):
             if probe_on:
                 pre_h = self._bloom.collect_keys(
                     new_bands.select("bh"), "bh"
@@ -651,7 +506,7 @@ class IncrementalFrameNearDedup:
                 )
                 pairs = pairs.unionByName(cross)
 
-        with timed_phase(self.phase_seconds, "pairs_write"):
+        with self._phase("pairs_write"):
             pairs.distinct().write.mode("overwrite").parquet(
                 f"{self.pairs_path}/w={batch_id}"
             )
@@ -692,11 +547,9 @@ class IncrementalAudioNearDedup(IncrementalFrameNearDedup):
 
     #: v2 = n_bytes carries least(nseg, bits), the r11 duration-class
     #: change; v1 state (constant 0) band-keys differently and must
-    #: fail loudly at open, not silently stop matching old waves —
-    #: hence NO legacy adoption for this kernel (a pre-sig_scheme
-    #: audio sidecar is v1 state, incompatible by definition)
+    #: fail loudly at open (layout mismatch), not silently stop
+    #: matching old waves
     SIG_SCHEME = "wav-envelope-v2"
-    SIG_SCHEME_LEGACY = None
 
     def __init__(
         self,
@@ -768,7 +621,6 @@ class IncrementalImageNearDedup(IncrementalFrameNearDedup):
     not re-derived here."""
 
     SIG_SCHEME = "ppm-ahash-v1"
-    SIG_SCHEME_LEGACY = "ppm-ahash-v1"
 
     def _decode_sig(self, batch: DataFrame) -> DataFrame:
         from beavers_spark.functions.multimodal import ppm_ahash

@@ -39,6 +39,7 @@ import dataclasses
 import json
 import os
 import shutil
+import threading
 import time
 from typing import Sequence
 
@@ -168,6 +169,40 @@ def _hidden_name(name: str) -> bool:
     )
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Replace the JSON sidecar at ``path`` with ``obj`` crash-safely:
+    the dump goes to a temporary file in the same directory, is
+    fsync'ed, and is renamed over ``path`` (``os.replace`` is atomic on
+    POSIX). A crash at any point leaves either the previous sidecar or
+    the new one, never a torn file — a torn ``_last_batch.json`` would
+    make every later ``BatchWatermark.is_applied`` raise. The
+    temporary name is dot-prefixed, so a leftover one is hidden from
+    Spark's reader and skipped by ``compact_parquet``'s sidecar copy.
+    Creates the parent directory."""
+    head, base = os.path.split(path)
+    os.makedirs(head, exist_ok=True)
+    # unique per writer thread; plain open keeps the usual file mode
+    tmp = os.path.join(
+        head, f".{base}.{os.getpid()}.{threading.get_ident()}.tmp"
+    )
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+        raise
+    # make the rename itself durable
+    dir_fd = os.open(head, os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+
+
 class BatchWatermark:
     """Replay guard for ``foreachBatch`` state writers.
 
@@ -202,9 +237,7 @@ class BatchWatermark:
             return batch_id <= json.load(fh)["last_batch"]
 
     def mark(self, batch_id: int) -> None:
-        os.makedirs(self.state_dir, exist_ok=True)
-        with open(self.file, "w") as fh:
-            json.dump({"last_batch": batch_id}, fh)
+        write_json_atomic(self.file, {"last_batch": batch_id})
 
     def last_committed(self) -> int | None:
         """Highest applied batch id, or None before the first mark."""
@@ -472,6 +505,59 @@ def _popcount_total(bits) -> int:
 #: aggregation instead of a key collect (``overcap_fallbacks`` counts
 #: the hand-offs so the slow-path engagement is visible in BENCH)
 BLOOM_PROBE_CAP = 1_000_000
+
+
+def read_wave_local(
+    wave_dir: str,
+    column: str | None = None,
+    row_cap: int = BLOOM_PROBE_CAP,
+    recursive: bool = True,
+    catch: type[BaseException] | tuple = Exception,
+):
+    """Read one just-written wave directory DRIVER-LOCAL from its
+    parquet files (pyarrow) — the kernels' replacement for a per-wave
+    Spark read-back job (row count, key collect, distinct ids, touched
+    buckets). Kernels assume a driver-readable POSIX state root, the
+    same assumption as ``WaveBloomIndex`` and the sidecars.
+
+    Returns ``(rows, values)``: ``rows`` summed from the parquet
+    footers (metadata only) and ``values`` the named ``column`` as one
+    pyarrow array. ``values`` is None when no column is named, when
+    the directory holds no parquet file, or when ``rows`` exceeds
+    ``row_cap``: the footer pre-check bounds driver memory BEFORE any
+    data byte is read ("a wave is batch-sized" is an assumption, not a
+    bound — a compacted ``w=-1`` wave holds the whole registry), so an
+    over-cap wave hands off to the caller's Spark or executor-side
+    path. Returns None when the wave is not driver-readable — not a
+    local directory (``glob`` finds nothing on an object-store path,
+    which would otherwise read as an empty wave) or a ``catch``
+    exception while listing or reading — and the caller falls back to
+    Spark. ``recursive`` descends into partition sub-directories."""
+    import glob as _glob
+
+    try:
+        if not os.path.isdir(wave_dir):
+            return None
+        pattern = ("**", "*.parquet") if recursive else ("*.parquet",)
+        files = sorted(
+            _glob.glob(os.path.join(wave_dir, *pattern), recursive=True)
+        )
+        if not files:
+            return 0, None
+        import pyarrow.parquet as pq
+
+        rows = sum(pq.read_metadata(f).num_rows for f in files)
+        if column is None or rows > row_cap:
+            return rows, None
+        import pyarrow.dataset as ds
+
+        table = ds.dataset(files, format="parquet").to_table(
+            columns=[column]
+        )
+        return rows, table.column(column)
+    except catch:
+        return None
+
 
 #: adaptive probe gate (WaveBloomIndex(adaptive=True)): a probe that
 #: scans at least this fraction of the live waves is "non-pruning"
@@ -1541,23 +1627,16 @@ def maybe_auto_compact(kernel, spark) -> bool:
     choice; the bench pins the enabled path). Increments
     ``kernel.auto_compactions`` for artifacts.
     """
-    every = getattr(kernel, "compact_every_waves", None)
-    if not every:
+    every = kernel.compact_every_waves
+    if not every or live_wave_count(kernel.state_path) < every:
         return False
-    if live_wave_count(kernel.state_path) < every:
-        return False
-    if getattr(kernel, "phase_seconds", None) is not None:
-        with timed_phase(kernel.phase_seconds, "auto_compact"):
-            kernel.compact(spark)
-    else:
+    with timed_phase(kernel.phase_seconds, "auto_compact"):
         kernel.compact(spark)
     kernel.auto_compactions += 1
     return True
 
 
-def ensure_layout(
-    state_dir: str, legacy: dict | None = None, **layout
-) -> None:
+def ensure_layout(state_dir: str, **layout) -> None:
     """Persist-or-validate a state table's IMMUTABLE layout knobs
     (hash-bucket modulus, span/segment length, signature shape).
 
@@ -1565,38 +1644,20 @@ def ensure_layout(
     (underscore: invisible to Spark's reader, preserved by
     ``compact_parquet``); every later open validates and raises on any
     mismatch. "First writer" means a FRESH directory: a dir that
-    already holds wave data but no sidecar (pre-sidecar state, or a
-    lost sidecar) is refused rather than silently stamped with the
-    current knobs — the operator must record the ORIGINAL knobs by
-    hand. Without this, restarting a dedup kernel with a different
-    ``n_hash_buckets`` silently MISSES duplicates: waves persist
-    ``b = h % N_old`` while ``prune_hash_buckets`` filters with
-    ``N_new``, pruning away exactly the rows that should match — wrong
-    answers with no error (same invariant class as the Bloom word
-    alignment and the bucket-cap anchors parity, which already fail
-    loudly).
-
-    ``legacy`` maps knob -> the value every pre-existing sidecar that
-    LACKS the key is known to have had (a knob added to the layout
-    after tables already existed, where the underlying derivation never
-    changed — e.g. the frame kernel's ``sig_scheme``, stamped since
-    r12 while the avi-ahash-v1 derivation is unchanged since day one).
-    A missing key whose legacy value equals the configured value is
-    stamped on this open instead of raising (ADVICE r12); a missing
-    key NOT covered by ``legacy`` still raises, with the manual
-    migration spelled out in the message.
+    already holds wave data but no sidecar (a lost sidecar) is refused
+    rather than silently stamped with the current knobs — the operator
+    must record the ORIGINAL knobs by hand. Without this, restarting a
+    dedup kernel with a different ``n_hash_buckets`` silently MISSES
+    duplicates: waves persist ``b = h % N_old`` while
+    ``prune_hash_buckets`` filters with ``N_new``, pruning away exactly
+    the rows that should match — wrong answers with no error (same
+    invariant class as the Bloom word alignment and the bucket-cap
+    anchors parity, which already fail loudly).
     """
     path = os.path.join(state_dir, "_layout.json")
     if os.path.exists(path):
         with open(path) as fh:
             saved = json.load(fh)
-        stamped = False
-        for k, v in layout.items():
-            if k not in saved and legacy and legacy.get(k) == v:
-                # knob introduced after this sidecar was written and
-                # the derivation never changed: adopt, don't refuse
-                saved[k] = v
-                stamped = True
         bad = {
             k: (saved.get(k), v)
             for k, v in layout.items()
@@ -1607,8 +1668,7 @@ def ensure_layout(
                 f"{k}: state has {old!r}, kernel configured {new!r}"
                 for k, (old, new) in sorted(bad.items())
             )
-            missing = [k for k, (old, _) in bad.items() if old is None
-                       and k not in saved]
+            missing = [k for k in bad if k not in saved]
             hint = (
                 "; if a knob is MISSING from an older sidecar and you "
                 "have verified the state's actual derivation matches, "
@@ -1622,16 +1682,13 @@ def ensure_layout(
                 "table — recreate the state or restore the original "
                 f"configuration{hint}"
             )
-        if stamped:
-            with open(path, "w") as fh:
-                json.dump(saved, fh)
         return
     # No sidecar: only a genuinely FRESH directory may record the
-    # kernel's current knobs. A pre-existing registry whose sidecar
-    # predates this feature (or was lost) must NOT silently adopt
-    # whatever the restarting kernel happens to be configured with —
-    # if the knobs differ from the original, batches in that window
-    # would miss duplicates before a later mixed-layout read fails.
+    # kernel's current knobs. A registry whose sidecar was lost must
+    # NOT silently adopt whatever the restarting kernel happens to be
+    # configured with — if the knobs differ from the original, batches
+    # in that window would miss duplicates before a later mixed-layout
+    # read fails.
     if os.path.isdir(state_dir):
         existing = [
             name
@@ -1648,9 +1705,7 @@ def ensure_layout(
                 f"by hand ({json.dumps(layout)}) after verifying them "
                 "against the state's actual layout"
             )
-    os.makedirs(state_dir, exist_ok=True)
-    with open(path, "w") as fh:
-        json.dump(layout, fh)
+    write_json_atomic(path, layout)
 
 
 def prune_hash_buckets(prior, keys, n_buckets: int):

@@ -70,24 +70,18 @@ from pyspark.sql import functions as F
 from beavers_spark.functions.curation import sliding_spans
 from beavers_spark.functions.dedup import md5_hash64
 from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
     DocSeenGuard,
     ensure_layout,
     fanout_repartition,
-    maybe_auto_compact,
     overlap_jobs,
-    partition_stats,
     PROBE_BROADCAST_CAP,
-    ProbeMetrics,
     prune_hash_buckets,
     registry_anti_probe,
-    recover_compaction,
     seen_anti_join,
     table_exists,
-    timed_phase,
     WaveBloomIndex,
-    WaveMetrics,
 )
+from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
 
 
 def _wave_keys(spark: SparkSession, wave_dir: str) -> DataFrame:
@@ -95,7 +89,7 @@ def _wave_keys(spark: SparkSession, wave_dir: str) -> DataFrame:
     return spark.read.parquet(wave_dir).select("h")
 
 
-class IncrementalSubstringDedup:
+class IncrementalSubstringDedup(WaveKernel):
     """``foreachBatch`` callable maintaining corpus-wide span ownership
     and per-document duplicate token ranges.
 
@@ -122,19 +116,10 @@ class IncrementalSubstringDedup:
         n_hash_buckets: int = 16,
         compact_every_waves: int | None = 16,
     ) -> None:
-        self.state_path = state_path
+        super().__init__(state_path, compact_every_waves)
         self.out_path = out_path
         self.text_col = text_col
         self.id_col = id_col
-        #: live-wave-count threshold that triggers an automatic
-        #: ``compact()`` right after a wave commits (None = manual
-        #: compaction only; see maintenance.maybe_auto_compact).
-        #: DEFAULT 16 since r11 — the growth bench measured the
-        #: no-maintenance slope as pure file-count fragmentation and
-        #: the 16-wave cadence returning the tail to the early plateau
-        #: (docs/concepts/growth.md); unbounded growth is now opt-in
-        self.compact_every_waves = compact_every_waves
-        self.auto_compactions = 0
         self.k = k
         #: bits per wave Bloom sidecar (None disables the probe filter)
         self.bloom_bits = bloom_bits
@@ -142,8 +127,6 @@ class IncrementalSubstringDedup:
         #: the registry's second partition column, prunable when a
         #: batch's hash set leaves buckets untouched
         self.n_hash_buckets = n_hash_buckets
-        self._has_state = False
-        self._watermark = BatchWatermark(state_path)
         self._bloom = WaveBloomIndex(
             state_path, bloom_bits, min_waves=bloom_min_waves,
             keys_of=_wave_keys, adaptive=True,
@@ -158,24 +141,28 @@ class IncrementalSubstringDedup:
         self._doc_seen_out = DocSeenGuard(
             out_path, m_bits=bloom_bits, min_waves=bloom_min_waves,
         )
-        #: per-wave registry-append volume (see maintenance.WaveMetrics)
-        self.metrics: list[WaveMetrics] = []
-        #: per-batch Bloom-prune accounting (see maintenance.ProbeMetrics)
-        self.probe_metrics: list[ProbeMetrics] = []
-        #: accumulated driver-observed wall seconds per __call__ phase
-        #: (winners_count / bloom_fold / state_write / out_write /
-        #: call_total) — the bench's named-cost table
-        self.phase_seconds: dict[str, float] = {}
+
+    def _wave_tables(self) -> list[WaveTable]:
+        return [
+            WaveTable(
+                self.out_path,
+                cluster_by=("doc_id",),
+                merges=(self._doc_seen_out,),
+                guard=self._doc_seen_out,
+            ),
+            # clustered by the probe key (VERDICT r10 item 4): narrow
+            # per-row-group h min/max in the coalesced bucket files.
+            # A wave lacking a Bloom sidecar leaves the merged wave
+            # without one; it is lazily rebuilt on the next gated probe
+            WaveTable(
+                self.state_path,
+                cluster_by=("b", "h"),
+                merges=(self._doc_seen, self._bloom),
+                guard=self._doc_seen,
+            ),
+        ]
 
     # -- state access -----------------------------------------------------
-    def _state_exists(self, spark: SparkSession) -> bool:
-        if self._has_state:
-            return True
-        if table_exists(spark, self.state_path):
-            self._has_state = True
-            return True
-        return False
-
     def read_state(self, spark: SparkSession) -> DataFrame:
         """Span ownership registry ``(h, doc_id, idx)`` (the wave and
         hash-bucket columns ``w``/``b`` are storage details)."""
@@ -186,90 +173,7 @@ class IncrementalSubstringDedup:
             "doc_id", "span_start", "span_end", "n_dup_tokens"
         )
 
-    def forget(self, spark: SparkSession, ids) -> int:
-        """Right-to-be-forgotten: hard-delete the given doc ids from
-        the span-ownership registry and the duplicate-range output
-        (maintenance.forget_doc_rows — Bloom-TARGETED via each table's
-        own doc-id sidecars, so the rewrite touches only the waves
-        that may hold the ids). Removing ownership RE-OPENS the spans:
-        the next document presenting a forgotten span hash becomes its
-        owner — "first arrival after forgetting" — and a later
-        redelivery of the forgotten id itself is admitted as
-        brand-new. Idempotent; returns the number of wave directories
-        rewritten."""
-        from beavers_spark.streaming.maintenance import forget_doc_rows
-
-        n = forget_doc_rows(
-            spark, self.state_path, ids, guard=self._doc_seen
-        )
-        if n:
-            self._bloom.invalidate()
-            # the forget may have removed the registry's LAST
-            # schema-bearing partition — re-probe rather than trust
-            # the cached flag (the empty-table trap)
-            self._has_state = table_exists(spark, self.state_path)
-        n += forget_doc_rows(
-            spark, self.out_path, ids, guard=self._doc_seen_out
-        )
-        return n
-
-    def compact(self, spark: SparkSession) -> int:
-        """Coarsen all wave partitions into ``w=-1`` on both tables (the
-        partition columns must survive compaction — see
-        ``IncrementalNearDedup.compact``; registry rows stay clustered
-        by ``(b, h)``); returns the registry's post-compaction file
-        count. Wave Bloom sidecars are OR-merged into the coalesced
-        wave (fixed ``m`` makes bitmaps mergeable) — if any wave lacks
-        one, no merged sidecar is written and the coalesced wave is
-        lazily rebuilt on the next gated probe (``WaveBloomIndex``
-        backfill)."""
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-        )
-
-        guard_committed_waves(
-            self._watermark, self.state_path, self.out_path
-        )
-        self._doc_seen_out.compact_merge(
-            lambda: compact_parquet(
-                spark,
-                self.out_path,
-                partition_by="w",
-                transform=lambda df: df.withColumn("w", F.lit(-1)),
-                cluster_by=("doc_id",),
-            )
-        )
-        # nested merges: each rewrite destroys its table's per-wave
-        # doc bitmaps (and the registry's span-key bitmaps)
-        # clustered by the probe key (VERDICT r10 item 4): narrow
-        # per-row-group h min/max in the coalesced bucket files
-        return self._doc_seen.compact_merge(
-            lambda: self._bloom.compact_merge(
-                lambda: compact_parquet(
-                    spark,
-                    self.state_path,
-                    partition_by="w",
-                    transform=lambda df: df.withColumn("w", F.lit(-1)),
-                    cluster_by=("b", "h"),
-                )
-            )
-        )
-
     # -- the kernel -------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between its two renames BEFORE
-        # the watermark check or any wave write (review r8)
-        for p in (self.state_path, self.out_path):
-            recover_compaction(p)
-        if self._watermark.is_applied(batch_id):
-            return
-        with timed_phase(self.phase_seconds, "call_total"):
-            self._apply(batch_df, batch_id)
-        # cadence check AFTER the wave committed (rides the existing
-        # crash-window contract -- see maintenance.maybe_auto_compact)
-        maybe_auto_compact(self, batch_df.sparkSession)
-
     def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df
@@ -299,7 +203,7 @@ class IncrementalSubstringDedup:
             # directories (crash-replay safety); the anti-join runs
             # through the broadcast semi/anti pair so the seen scan is
             # never shuffled (maintenance.seen_anti_join)
-            with timed_phase(self.phase_seconds, "seen_probe"):
+            with self._phase("seen_probe"):
                 seen = self._doc_seen.pruned_seen(
                     spark, batch, batch_id, self.id_col
                 )
@@ -360,11 +264,11 @@ class IncrementalSubstringDedup:
             )
             pre_h = n_rows = None
             if probe_on:
-                with timed_phase(self.phase_seconds, "bloom_fold"):
+                with self._phase("bloom_fold"):
                     pre_h, n_rows = self._bloom.collect_keys_counted(
                         winners, "h"
                     )
-            with timed_phase(self.phase_seconds, "winners_count"):
+            with self._phase("winners_count"):
                 n_winners = (
                     n_rows if n_rows is not None else winners.count()
                 )
@@ -430,7 +334,7 @@ class IncrementalSubstringDedup:
             wave_dir = f"{self.state_path}/w={batch_id}"
 
             def _commit_state():
-                with timed_phase(self.phase_seconds, "state_write"):
+                with self._phase("state_write"):
                     (
                         new_owned.withColumn(
                             "b",
@@ -467,7 +371,7 @@ class IncrementalSubstringDedup:
                     )
                 # the wave's doc-id bitmap — what future batches' seen
                 # probes test against (maintenance.DocSeenGuard)
-                with timed_phase(self.phase_seconds, "seen_sidecar"):
+                with self._phase("seen_sidecar"):
                     self._doc_seen.save_wave(spark, wave_dir, batch_id)
 
             # every occurrence that did not become an owner is a
@@ -521,11 +425,11 @@ class IncrementalSubstringDedup:
                 # written even when empty so read_dup_ranges() is valid
                 # from batch 0; per-wave overwrite = replay-idempotent
                 # output
-                with timed_phase(self.phase_seconds, "out_write"):
+                with self._phase("out_write"):
                     ranges.write.mode("overwrite").parquet(
                         f"{self.out_path}/w={batch_id}"
                     )
-                with timed_phase(self.phase_seconds, "out_sidecar"):
+                with self._phase("out_sidecar"):
                     self._doc_seen_out.save_wave(
                         spark, f"{self.out_path}/w={batch_id}", batch_id
                     )
@@ -538,8 +442,7 @@ class IncrementalSubstringDedup:
             # watermark unmarked)
             overlap_jobs(_commit_state, _commit_out)
             self._has_state = True
-            files, nbytes, mx = partition_stats(spark, [wave_dir])
-            self.metrics.append(WaveMetrics(batch_id, 1, files, nbytes, mx))
+            self._record_wave(spark, batch_id, wave_dir)
             self._watermark.mark(batch_id)
         finally:
             # deterministic block release: without this, checkpoint/

@@ -63,53 +63,17 @@ from beavers_spark.functions.dedup import (
     _tfidf_weighted,
 )
 from beavers_spark.streaming.maintenance import (
-    BLOOM_PROBE_CAP,
-    BatchWatermark,
     DocSeenGuard,
-    WaveMetrics,
+    compact_parquet,
     ensure_layout,
-    maybe_auto_compact,
-    partition_stats,
+    read_wave_local,
     recover_compaction,
     seen_anti_join,
-    table_exists,
 )
+from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
 
 
-def _wave_touched_b_local(
-    wave_dir: str, row_cap: int = BLOOM_PROBE_CAP
-) -> list[int] | None:
-    """Distinct ``b`` hash-prefix values of one just-written wave,
-    driver-local from its parquet files (the ``_wave_rows_local`` /
-    ``_band_keys_local`` POSIX precedent) — replaces a per-wave Spark
-    ``distinct().collect()`` read-back job (VERDICT r13 items 3/4).
-    Bounded: the footer row-count pre-check (metadata only, no data
-    read) hands off past ``row_cap`` — and the value set itself is
-    ≤ ``n_hash_buckets`` ints either way. Returns None when the root
-    isn't listable (non-POSIX / object store), holds no data files
-    (the empty-wave read-back semantics stay Spark's), or is over-cap
-    — callers fall back to the exact Spark collect."""
-    import glob as _glob
-
-    try:
-        files = sorted(_glob.glob(os.path.join(wave_dir, "*.parquet")))
-        if not files:
-            return None
-        import pyarrow.parquet as pq
-
-        if sum(pq.read_metadata(f).num_rows for f in files) > row_cap:
-            return None
-        vals: set = set()
-        for f in files:
-            vals.update(
-                pq.read_table(f, columns=["b"]).column("b").to_pylist()
-            )
-        return sorted(int(v) for v in vals)
-    except Exception:
-        return None
-
-
-class IncrementalTfidfDedup:
+class IncrementalTfidfDedup(WaveKernel):
     """``foreachBatch`` callable maintaining the term registry and the
     candidate-pair table.
 
@@ -125,6 +89,10 @@ class IncrementalTfidfDedup:
     bar); ``n_buckets`` / ``max_df`` / ``n_hash_buckets`` shape what
     the registry and candidate table STORE and are immutable for the
     life of the state (guarded by the ``_layout.json`` sidecar).
+    ``forget`` also shifts the corpus statistics (df counts, norms)
+    read-time scoring derives — by design: scores are a pure function
+    of the CURRENT registry, so a forgotten doc stops contributing the
+    moment its rows are gone.
     """
 
     def __init__(
@@ -141,36 +109,21 @@ class IncrementalTfidfDedup:
         bloom_bits: int | None = 1 << 23,
         bloom_min_waves: int = 0,
     ) -> None:
-        self.state_path = state_path
+        super().__init__(state_path, compact_every_waves)
         self.cand_path = cand_path
-        #: live-wave-count threshold that triggers an automatic
-        #: ``compact()`` right after a wave commits (None = manual
-        #: compaction only; see maintenance.maybe_auto_compact).
-        #: DEFAULT 16 since r11 — the growth bench measured the
-        #: no-maintenance slope as pure file-count fragmentation and
-        #: the 16-wave cadence returning the tail to the early plateau
-        #: (docs/concepts/growth.md); unbounded growth is now opt-in
-        self.compact_every_waves = compact_every_waves
-        self.auto_compactions = 0
         self.text_col = text_col
         self.id_col = id_col
         self.threshold = threshold
         self.n_buckets = n_buckets
         self.max_df = max_df
         self.n_hash_buckets = n_hash_buckets
-        self._has_state = False
         self._layout_checked = False
-        self._watermark = BatchWatermark(state_path)
         #: per-wave doc-id Bloom sidecars on the registry — the
         #: redelivery guard reads only Bloom-positive waves instead of
         #: the full corpus's doc_id column (maintenance.DocSeenGuard)
         self._doc_seen = DocSeenGuard(
             state_path, m_bits=bloom_bits, min_waves=bloom_min_waves,
         )
-        #: one WaveMetrics per applied wave over the wave's registry
-        #: directory (bytes appended + file count — the compaction-due
-        #: signal)
-        self.metrics: list[WaveMetrics] = []
         #: dead candidate pairs dropped by compact() so far (pairs whose
         #: every shared bucket is over max_df — they can never score)
         self.candidates_pruned: int = 0
@@ -188,15 +141,23 @@ class IncrementalTfidfDedup:
             .select("bucket")
         )
 
-    # -- state access -----------------------------------------------------
-    def _state_exists(self, spark: SparkSession) -> bool:
-        if self._has_state:
-            return True
-        if table_exists(spark, self.state_path):
-            self._has_state = True
-            return True
-        return False
+    def _wave_tables(self) -> list[WaveTable]:
+        return [
+            # compacted by _compact_table's dead-candidate prune
+            WaveTable(self.cand_path, forget_cols=("doc1", "doc2")),
+            # clustered by (b, bucket) — the r13 layout's probe keys:
+            # the coalesced wave keeps narrow per-row-group b/bucket
+            # min/max so the candidate join's b predicate skips row
+            # groups
+            WaveTable(
+                self.state_path,
+                cluster_by=("b", "bucket"),
+                merges=(self._doc_seen,),
+                guard=self._doc_seen,
+            ),
+        ]
 
+    # -- state access -----------------------------------------------------
     def read_state(self, spark: SparkSession) -> DataFrame:
         """Accumulated term counts ``(doc_id, bucket, tf)`` (the wave
         ``w`` and hash-prefix ``b`` columns are storage details)."""
@@ -212,32 +173,6 @@ class IncrementalTfidfDedup:
             .select("doc1", "doc2")
             .distinct()
         )
-
-    def forget(self, spark: SparkSession, ids) -> int:
-        """Right-to-be-forgotten: hard-delete the given doc ids from
-        the term registry (maintenance.forget_doc_rows — Bloom-TARGETED
-        via the doc-id sidecars) and every candidate pair that involves
-        them. A later redelivery of a forgotten id is admitted as
-        brand-new; candidates between remaining docs are untouched.
-        Removing a doc's term rows also shifts the corpus statistics
-        (df counts, norms) the read-time scoring derives — by design:
-        scores were always a pure function of the CURRENT registry
-        (``read_pairs`` docstring), so the forgotten doc stops
-        contributing to them the moment its rows are gone. Idempotent;
-        returns the number of wave directories rewritten."""
-        from beavers_spark.streaming.maintenance import forget_doc_rows
-
-        n = forget_doc_rows(
-            spark, self.state_path, ids, guard=self._doc_seen
-        )
-        if n:
-            # the forget may have removed the registry's LAST
-            # schema-bearing partition — re-probe rather than trust
-            # the cached flag (the empty-table trap)
-            self._has_state = table_exists(spark, self.state_path)
-        n += forget_doc_rows(spark, self.cand_path, ids, id_col="doc1")
-        n += forget_doc_rows(spark, self.cand_path, ids, id_col="doc2")
-        return n
 
     def read_pairs(self, spark: SparkSession) -> DataFrame:
         """Near-dup pairs ``(doc1, doc2, cos)`` under the CURRENT
@@ -301,21 +236,14 @@ class IncrementalTfidfDedup:
             # r13 layout change: b is a clustered DATA column, not a
             # partition directory — a pre-r13 table (b= dirs) would
             # make partition discovery see inconsistent depths, so it
-            # must fail loudly at open (no legacy adoption: the layout
-            # genuinely changed; migrate by compacting with the old
-            # code then rewriting, or rebuild)
+            # must fail loudly at open (migrate by compacting with the
+            # old code then rewriting, or rebuild)
             reg_layout="b-clustered-v2",
         )
         self._layout_checked = True
 
     # -- the kernel -------------------------------------------------------
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between its two renames BEFORE
-        # the watermark check or any wave write (review r8)
-        for p in (self.state_path, self.cand_path):
-            recover_compaction(p)
-        if self._watermark.is_applied(batch_id):
-            return
+    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df
         self._ensure_layout()
@@ -370,14 +298,18 @@ class IncrementalTfidfDedup:
         cand_dir = f"{self.cand_path}/w={batch_id}"
         # touched hash-prefix buckets: the registry side of the
         # candidate join prunes its row groups to these b values.
-        # Driver-local from the just-written files (footer-capped, the
-        # _wave_rows_local precedent) — the Spark distinct read-back
-        # this replaces cost one scheduled job per wave (r14); the
-        # exact Spark collect stays as the non-POSIX / over-cap
-        # fallback. An empty or fully-redelivered batch touches
-        # nothing — the wave must not enter the registry.
-        touched = _wave_touched_b_local(wave_dir)
-        if touched is None:
+        # Driver-local from the just-written files
+        # (maintenance.read_wave_local, footer-capped; the value set is
+        # <= n_hash_buckets ints either way) — the Spark distinct
+        # read-back this replaces cost one scheduled job per wave
+        # (r14); the exact Spark collect stays as the fallback for a
+        # non-POSIX, file-less or over-cap wave. An empty or
+        # fully-redelivered batch touches nothing — the wave must not
+        # enter the registry.
+        got = read_wave_local(wave_dir, "b", recursive=False)
+        if got is not None and got[1] is not None:
+            touched = sorted({int(v) for v in got[1].to_pylist()})
+        else:
             touched = [
                 int(r[0])
                 for r in spark.read.parquet(wave_dir)
@@ -448,24 +380,13 @@ class IncrementalTfidfDedup:
         cand.write.mode("overwrite").parquet(cand_dir)
         self._record_wave(spark, batch_id, wave_dir)
         self._watermark.mark(batch_id)
-        # cadence check AFTER the wave committed (rides the existing
-        # crash-window contract -- see maintenance.maybe_auto_compact)
-        maybe_auto_compact(self, spark)
 
-    def _record_wave(
-        self, spark: SparkSession, batch_id: int, wave_dir: str
-    ) -> None:
-        files, nbytes, mx = partition_stats(spark, [wave_dir])
-        self.metrics.append(WaveMetrics(batch_id, 1, files, nbytes, mx))
-
-    def compact(self, spark: SparkSession) -> int:
-        """Coalesce all wave partitions into single ``w=-1`` directories
-        (registry rows stay clustered by ``(b, bucket)``; candidates
-        also dedupe AND dead candidates are pruned); returns the
-        registry's post-compaction file count. Raw tf counts and candidate ids are
-        both growth-stable, so compaction is a pure layout rewrite — no
-        re-weighting is needed because the kernel never persists
-        weights (module docstring).
+    def _compact_table(self, spark: SparkSession, table: WaveTable) -> int:
+        """``compact`` rewrites the candidate table through a prune
+        (below) and the registry as ``WaveKernel`` does. Raw tf counts
+        and candidate ids are both growth-stable, so compaction is a
+        pure layout rewrite — no re-weighting is needed because the
+        kernel never persists weights (module docstring).
 
         Candidate pruning (VERDICT r7 item 6 — the one unbounded set):
         a pair whose every shared bucket has gone over ``max_df`` under
@@ -476,15 +397,8 @@ class IncrementalTfidfDedup:
         still score. ``candidates_pruned`` records the drop."""
         import shutil
 
-        from beavers_spark.streaming.maintenance import (
-            compact_parquet,
-            guard_committed_waves,
-            recover_compaction,
-        )
-
-        guard_committed_waves(
-            self._watermark, self.state_path, self.cand_path
-        )
+        if table.path != self.cand_path:
+            return super()._compact_table(spark, table)
         recover_compaction(self.cand_path)  # before reading candidates
 
         reg = self.read_state(spark)
@@ -551,17 +465,4 @@ class IncrementalTfidfDedup:
                 )
             finally:
                 alive.unpersist(blocking=True)
-        # the rewrite destroys the per-wave doc bitmaps with the wave
-        # dirs — OR them into the coalesced w=-1 wave
-        # clustered by (b, bucket) — the r13 layout's probe keys: the
-        # coalesced wave keeps narrow per-row-group b/bucket min/max
-        # so the candidate join's b predicate skips row groups
-        return self._doc_seen.compact_merge(
-            lambda: compact_parquet(
-                spark,
-                self.state_path,
-                partition_by="w",
-                transform=lambda df: df.withColumn("w", F.lit(-1)),
-                cluster_by=("b", "bucket"),
-            )
-        )
+        return 0

@@ -15,10 +15,24 @@ import os
 
 from pyspark.sql import functions as F
 
+import pytest
+
 from beavers_spark.plans.common import t
+from beavers_spark.plans.llmops import (
+    _ppm_dims,
+    _ppm_pixels,
+    _synth_frame_avis,
+    _synth_neardup_wavs,
+)
 from beavers_spark.streaming import (
+    IncrementalAudioNearDedup,
     IncrementalChunkDedup,
+    IncrementalFrameDedup,
+    IncrementalFrameNearDedup,
+    IncrementalImageNearDedup,
     IncrementalNearDedup,
+    IncrementalQualityClassifier,
+    IncrementalSubstringDedup,
     IncrementalTfidfDedup,
 )
 from beavers_spark.streaming.maintenance import live_wave_count
@@ -158,3 +172,95 @@ def test_tfidf_auto_compaction_matches(spark, tmp_path):
         }
 
     assert pairs(auto) == pairs(plain)
+
+
+def _labeled(spark, lo, hi):
+    return _docs(spark, lo, hi).withColumn(
+        "y", (F.col("doc_id") % 2).cast("int")
+    )
+
+
+def _ppms(spark, lo, hi):
+    w, h = _ppm_dims()
+    return _docs(spark, lo, hi).select(
+        "doc_id", _ppm_pixels(w, h).alias("payload")
+    )
+
+
+def _in_range(df, lo, hi):
+    return df.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+
+
+#: every WaveKernel: (factory over a scratch dir, one small batch)
+WAVE_KERNELS = {
+    "near": (
+        lambda d: IncrementalNearDedup(
+            f"{d}/state", f"{d}/pairs", "text", "doc_id"
+        ),
+        lambda spark: _docs(spark, 0, 20),
+    ),
+    "chunk": (
+        lambda d: IncrementalChunkDedup(
+            f"{d}/state", f"{d}/out", "text", "doc_id", k=5
+        ),
+        lambda spark: _docs(spark, 0, 20),
+    ),
+    "substring": (
+        lambda d: IncrementalSubstringDedup(
+            f"{d}/state", f"{d}/out", "text", "doc_id", k=5
+        ),
+        lambda spark: _docs(spark, 0, 20),
+    ),
+    "tfidf": (
+        lambda d: IncrementalTfidfDedup(
+            f"{d}/state", f"{d}/cand", "text", "doc_id"
+        ),
+        lambda spark: _docs(spark, 0, 20),
+    ),
+    "classifier": (
+        lambda d: IncrementalQualityClassifier(f"{d}/state", label_col="y"),
+        lambda spark: _labeled(spark, 0, 20),
+    ),
+    "frame": (
+        lambda d: IncrementalFrameDedup(f"{d}/state", f"{d}/out"),
+        lambda spark: _in_range(_synth_frame_avis(spark, SF_DIR), 0, 6),
+    ),
+    "frame_neardup": (
+        lambda d: IncrementalFrameNearDedup(f"{d}/state", f"{d}/pairs"),
+        lambda spark: _in_range(_synth_frame_avis(spark, SF_DIR), 0, 6),
+    ),
+    "audio_neardup": (
+        lambda d: IncrementalAudioNearDedup(
+            f"{d}/state", f"{d}/pairs", seg_samples=16
+        ),
+        lambda spark: _in_range(_synth_neardup_wavs(spark, SF_DIR), 0, 10),
+    ),
+    "image_neardup": (
+        lambda d: IncrementalImageNearDedup(f"{d}/state", f"{d}/pairs"),
+        lambda spark: _ppms(spark, 0, 10),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(WAVE_KERNELS))
+def test_wave_kernel_entry_recovers_before_watermark(spark, tmp_path, name):
+    """The shared entry of every wave kernel: one applied wave records
+    ``call_total``, and a table left in ``.__compact_old`` by a crash
+    between compact_parquet's two renames — the watermark sidecar with
+    it — is restored BEFORE the watermark check, so a restarted stream
+    recognizes the committed batch instead of re-applying it into a
+    recreated empty table."""
+    make, batch = WAVE_KERNELS[name]
+    first = make(tmp_path)
+    first(batch(spark), 0)
+    assert "call_total" in first.phase_seconds
+
+    state = first.state_path
+    os.rename(state, state + ".__compact_old")
+    restarted = make(tmp_path)
+    restarted(batch(spark), 0)
+    assert os.path.isdir(state)
+    assert not os.path.exists(state + ".__compact_old")
+    # batch 0 was recognized as applied: nothing ran
+    assert restarted.phase_seconds == {}
+    assert restarted._watermark.last_committed() == 0

@@ -376,68 +376,6 @@ def test_refit_slice_partition_prune_and_layout_guard(spark, tmp_path):
         )
 
 
-def test_pre_slice_bucket_registry_migrates(spark, tmp_path):
-    """A registry written before the sb= layout (flat w=<id>/ waves, no
-    sidecar) must fail with MIGRATION advice — the generic 'write the
-    sidecar by hand' is unactionable when the directory structure
-    itself is wrong — and migrate_slice_buckets must rewrite it so the
-    kernel resumes with the identical model (review r9)."""
-    import os
-
-    import pytest as _pytest
-
-    from beavers_spark.functions.classifier import _doc_tf
-
-    # simulate the old layout: featurized wave written flat, watermark
-    # marked, no _layout.json
-    state = str(tmp_path / "clf_state")
-    rows = [(f"quality prose citation facts v{i}", i % 2)
-            for i in range(12)]
-    d0 = _docs(spark, rows)
-    labels = d0.select("doc_id", F.col("y").cast("int").alias("y"))
-    wave = _doc_tf(d0, "text", "doc_id", _N_BUCKETS).join(
-        labels, "doc_id"
-    )
-    wave.write.mode("overwrite").parquet(f"{state}/w=0")
-    from beavers_spark.streaming.maintenance import BatchWatermark
-
-    BatchWatermark(state).mark(0)
-
-    clf = IncrementalQualityClassifier(
-        state, label_col="y", n_buckets=_N_BUCKETS
-    )
-    with _pytest.raises(ValueError, match="migrate_slice_buckets"):
-        clf(_docs(spark, rows[:2], start=100), 1)
-    # the migration demands an explicit attestation of the ORIGINAL
-    # feature modulus — a drifted value is refused, not stamped
-    with _pytest.raises(ValueError, match="explicit"):
-        clf.migrate_slice_buckets(spark)
-    with _pytest.raises(ValueError, match="matching this kernel"):
-        clf.migrate_slice_buckets(spark, n_buckets=_N_BUCKETS * 2)
-    drifted = IncrementalQualityClassifier(
-        state, label_col="y", n_buckets=16
-    )
-    with _pytest.raises(ValueError, match="bucket id"):
-        drifted.migrate_slice_buckets(spark, n_buckets=16)
-    clf.migrate_slice_buckets(spark, n_buckets=_N_BUCKETS)
-    assert os.path.exists(os.path.join(state, "_layout.json"))
-    assert any(
-        n.startswith("sb=") for n in os.listdir(os.path.join(state, "w=0"))
-    )
-    # the kernel now runs, and the refit model equals a fresh build
-    # over the same document stream
-    clf(_docs(spark, rows[12:], start=100), 1)
-    fresh = IncrementalQualityClassifier(
-        str(tmp_path / "fresh"), label_col="y", n_buckets=_N_BUCKETS
-    )
-    fresh(_docs(spark, rows), 0)
-    fresh(_docs(spark, rows[12:], start=100), 1)
-    assert _model_map(clf.model(spark)) == _model_map(fresh.model(spark))
-    # idempotent: migrating an already-migrated table is a no-op rewrite
-    clf.migrate_slice_buckets(spark, n_buckets=_N_BUCKETS)
-    assert _model_map(clf.model(spark)) == _model_map(fresh.model(spark))
-
-
 def test_doc_counts_sidecar_tracks_registry(spark, tmp_path):
     """The per-wave doc-counts sidecar must equal the registry's exact
     distinct-doc count after normal waves, EMPTY waves (recorded as 0 —
@@ -518,16 +456,16 @@ def test_wave_distinct_local_row_cap_falls_back_to_spark(
     clf(_docs(spark, POS + NEG), 0)
     wave_dir = str(tmp_path / "clf_state" / "w=0")
 
-    # under the cap: exact distinct-id count, driver-local
-    assert cs._wave_distinct_local(wave_dir, "doc_id") == 10
-    # over the cap (footers already show > row_cap rows): hand-off
-    assert cs._wave_distinct_local(wave_dir, "doc_id", row_cap=3) is None
+    # under the cap: the id column, driver-local — 10 distinct ids
+    rows, ids = cs.read_wave_local(wave_dir, "doc_id")
+    assert len(ids.unique()) == 10 and rows == len(ids)
+    # over the cap (footers already show > row_cap rows): the row
+    # count from the footers, no data read — the caller hands off
+    assert cs.read_wave_local(wave_dir, "doc_id", row_cap=3) == (rows, None)
 
     # end-to-end: with the driver-local path refusing, the kernel's
     # Spark fallback must produce the same exact sidecar counts
-    monkeypatch.setattr(
-        cs, "_wave_distinct_local", lambda *a, **k: None
-    )
+    monkeypatch.setattr(cs, "read_wave_local", lambda *a, **k: None)
     clf(_docs(spark, POS[:3], start=50), 1)
     counts = clf._read_counts()
     assert counts == {"0": 10, "1": 3}

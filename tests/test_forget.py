@@ -293,6 +293,11 @@ def test_image_neardup_forget_drops_pairs(spark, tmp_path):
     assert nd.read_state(spark).filter(
         F.col("doc_id") == victim
     ).count() == 0
+    # the band registry too: its sweep is targeted through the sig
+    # table's doc-id guard, which must still name the victim's wave
+    assert spark.read.parquet(nd.bands_path).filter(
+        F.col("doc_id") == victim
+    ).count() == 0
     left = {
         (r.doc1, r.doc2) for r in nd.read_pairs(spark).collect()
     }

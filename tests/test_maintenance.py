@@ -467,82 +467,6 @@ def test_compact_cluster_by_sorts_row_groups(spark, tmp_path):
     } == before
 
 
-def test_ensure_layout_legacy_adopts_missing_knob(tmp_path):
-    """ADVICE r12: a knob added to the layout AFTER tables existed
-    (sig_scheme) must not strand every pre-existing table — when the
-    caller declares the value such legacy sidecars are known to have
-    had, a missing key is stamped on open instead of refused; any
-    other missing key still raises, with the manual migration named."""
-    import json
-    import os
-
-    from beavers_spark.streaming.maintenance import ensure_layout
-
-    state = str(tmp_path / "state")
-    ensure_layout(state, n_hash_buckets=16)  # pre-upgrade sidecar
-    # restart with a NEW knob + matching legacy: adopted and stamped
-    ensure_layout(
-        state,
-        legacy={"sig_scheme": "avi-ahash-v1"},
-        n_hash_buckets=16,
-        sig_scheme="avi-ahash-v1",
-    )
-    with open(os.path.join(state, "_layout.json")) as fh:
-        assert json.load(fh)["sig_scheme"] == "avi-ahash-v1"
-    # stamped: a later open without legacy validates normally
-    ensure_layout(state, n_hash_buckets=16, sig_scheme="avi-ahash-v1")
-    # a CHANGED scheme against legacy state must still refuse (the
-    # audio kernel's v1->v2 case: legacy=None, or legacy != configured)
-    state2 = str(tmp_path / "state2")
-    ensure_layout(state2, n_hash_buckets=16)
-    with pytest.raises(ValueError, match="add the key"):
-        ensure_layout(
-            state2, n_hash_buckets=16, sig_scheme="wav-envelope-v2"
-        )
-    with pytest.raises(ValueError, match="layout mismatch"):
-        ensure_layout(
-            state2,
-            legacy={"sig_scheme": "wav-envelope-v1"},
-            n_hash_buckets=16,
-            sig_scheme="wav-envelope-v2",
-        )
-
-
-def test_frame_kernel_opens_pre_sig_scheme_state(spark, tmp_path):
-    """The kernel-level contract for the legacy path: a frame/image
-    state table whose sidecar predates sig_scheme reopens cleanly
-    (derivation unchanged since day one); the AUDIO kernel must keep
-    refusing (its derivation changed v1->v2)."""
-    import json
-    import os
-
-    from beavers_spark.plans.llmops import _synth_frame_avis
-    from beavers_spark.streaming import (
-        IncrementalAudioNearDedup,
-        IncrementalFrameNearDedup,
-    )
-
-    avis = _synth_frame_avis(spark, "/root/testdata/sf0.001").limit(6)
-    nd = IncrementalFrameNearDedup(
-        str(tmp_path / "st"), str(tmp_path / "pairs")
-    )
-    nd(avis, 0)
-    layout_path = os.path.join(str(tmp_path / "st"), "_layout.json")
-    with open(layout_path) as fh:
-        layout = json.load(fh)
-    del layout["sig_scheme"]  # simulate a pre-r12 sidecar
-    with open(layout_path, "w") as fh:
-        json.dump(layout, fh)
-    nd2 = IncrementalFrameNearDedup(
-        str(tmp_path / "st"), str(tmp_path / "pairs")
-    )
-    nd2(avis.limit(0), 1)  # reopen: adopts, no raise
-    with open(layout_path) as fh:
-        assert json.load(fh)["sig_scheme"] == "avi-ahash-v1"
-    # audio: same surgery must still fail loudly
-    assert IncrementalAudioNearDedup.SIG_SCHEME_LEGACY is None
-
-
 def test_collect_keys_counted_folds_count_into_collect(spark, tmp_path):
     """``collect_keys_counted`` returns the EXACT collected row count
     alongside the key set (the winners frame has one row per key, so
@@ -565,3 +489,49 @@ def test_collect_keys_counted_folds_count_into_collect(spark, tmp_path):
     # disabled filter: both None
     off = WaveBloomIndex(str(tmp_path / "t2"), None)
     assert off.collect_keys_counted(df, "h") == (None, None)
+
+
+def test_sidecar_writes_survive_a_crash_mid_dump(tmp_path, monkeypatch):
+    """Every JSON sidecar goes through ``write_json_atomic``: a crash in
+    the middle of the dump (disk full, kill) leaves the PREVIOUS
+    sidecar readable instead of a torn file — a torn
+    ``_last_batch.json`` would make every later ``is_applied`` raise,
+    and a torn ``_layout.json`` would wedge every later open."""
+    import json
+
+    from beavers_spark.streaming.maintenance import (
+        BatchWatermark,
+        ensure_layout,
+    )
+
+    state = str(tmp_path / "state")
+    wm = BatchWatermark(state)
+    wm.mark(3)
+    fresh = str(tmp_path / "fresh")
+    real_dump = json.dump
+
+    def torn_dump(obj, fh, *args, **kwargs):
+        fh.write('{"last')
+        fh.flush()
+        raise OSError("simulated crash mid-dump")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-dump"):
+        wm.mark(4)
+    with pytest.raises(OSError, match="mid-dump"):
+        ensure_layout(fresh, k=8)
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    # the previous watermark still reads back; batch 4 replays
+    assert wm.last_committed() == 3
+    assert wm.is_applied(3) and not wm.is_applied(4)
+    # the crashed first layout write left no sidecar: the reopen
+    # records the knobs, and the layout guard still refuses a change
+    ensure_layout(fresh, k=8)
+    with pytest.raises(ValueError, match="layout mismatch"):
+        ensure_layout(fresh, k=9)
+    # no temporary file is left behind in either directory
+    for d in (state, fresh):
+        assert sorted(os.listdir(d)) in (
+            ["_last_batch.json"], ["_layout.json"]
+        )
