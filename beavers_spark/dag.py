@@ -32,7 +32,10 @@ Spark-first differences (deliberate, SURVEY.md §3.1 "Spark mapping"):
   read the cached value instead of recomputing its plan; it is
   unpersisted when the node's value is reset or replaced, so at most one
   cycle's stream outputs stay cached. Source batches skip the probe when
-  the driver staging them already knows they are non-empty.
+  the driver staging them already knows they are non-empty. A value
+  whose plan reads only driver-local ``LocalRelation``s (a small replay
+  slice, a 0-row empty value) is not persisted: Spark probes it on the
+  driver without a job, and a cache would make that probe a job again.
 - At 100 TB, node *values* live in executors (DataFrames); the kernel on
   the driver holds only plan references + dirty flags — driver memory is
   O(nodes), never O(data).
@@ -52,6 +55,8 @@ import pandas as pd
 from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 UTC_EPOCH = pd.Timestamp(0, tz="UTC")
 UTC_MAX = pd.Timestamp.max.tz_localize("UTC")
@@ -115,6 +120,29 @@ def _is_empty(value: Any) -> bool:
         return len(value) == 0
     except TypeError:
         return False
+
+
+def _driver_local(df: DataFrame) -> bool:
+    """True when every leaf of ``df``'s analyzed plan is a
+    ``LocalRelation``: Spark evaluates it on the driver, without a job."""
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        return all(
+            leaves.apply(i).getClass().getSimpleName() == "LocalRelation"
+            for i in range(leaves.size())
+        )
+    except (AttributeError, Py4JError):  # no JVM handle (e.g. Spark Connect)
+        return False
+
+
+def _empty_table(
+    spark: SparkSession, schema: str | StructType
+) -> Callable[[], DataFrame]:
+    """Factory of one shared 0-row DataFrame of ``schema``, built once as
+    a driver-local frame so that probing it runs no Spark job."""
+    struct = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    empty = spark.createDataFrame(to_arrow_schema(struct).empty_table(), struct)
+    return lambda: empty
 
 
 def _checkpointed_leaf(df: DataFrame) -> bool:
@@ -304,10 +332,13 @@ class Node:
                 return
             self._value = result
             # cache before the probe: downstream nodes and sinks then read
-            # the probed value instead of recomputing its plan
+            # the probed value instead of recomputing its plan. A
+            # driver-local value is probed without a job; caching it
+            # would turn that probe back into one
             fresh = (
                 isinstance(result, DataFrame)
                 and result.storageLevel == StorageLevel.NONE
+                and not _driver_local(result)
             )
             self._hold(result.persist() if fresh else None)
             if _is_empty(result):
@@ -410,16 +441,11 @@ class Dag:
         """
         if self._spark is None:
             raise ValueError("source_table requires a Dag(spark=...) session")
-        spark = self._spark
-
-        def empty_df() -> DataFrame:
-            return spark.createDataFrame([], schema)
-
         if name in self._sources:
             return self._sources[name]
         node = self._add_node(
             kind="source", fn=None, inputs=(), kwargs={},
-            empty_factory=empty_df, name=name,
+            empty_factory=_empty_table(self._spark, schema), name=name,
         )
         self._sources[name] = node
         return node
@@ -436,8 +462,7 @@ class Dag:
         """DataFrame transform whose empty value is a 0-row DataFrame."""
         if self._spark is None:
             raise ValueError("table_stream requires a Dag(spark=...) session")
-        spark = self._spark
-        return _Prototype(self, "stream", fn, lambda: spark.createDataFrame([], schema))
+        return _Prototype(self, "stream", fn, _empty_table(self._spark, schema))
 
     def state(self, fn: Callable) -> _Prototype:
         """Durable fold node (reference: dag.py:501-518)."""

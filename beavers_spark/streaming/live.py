@@ -79,16 +79,18 @@ class StreamingDagDriver:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         now = pd.Timestamp.now(tz="UTC")
         if self.event_time_column:
-            # one action answers both the emptiness gate and the clock
+            # one action answers both the emptiness gate and the clock,
+            # read as epoch microseconds: a collected timestamp is naive
+            # wall time in the Python process's local zone (the cast
+            # admits a timestamp_ntz column)
             row = batch_df.agg(
-                F.max(self.event_time_column).alias("m"),
+                F.unix_micros(F.max(self.event_time_column).cast("timestamp"))
+                .alias("m"),
                 F.count(F.lit(1)).alias("n"),
             ).collect()[0]
             empty = row["n"] == 0
             if not empty:
-                now = pd.Timestamp(row["m"])
-                if now.tzinfo is None:
-                    now = now.tz_localize("UTC")
+                now = pd.Timestamp(row["m"], unit="us", tz="UTC")
         else:
             empty = batch_df.isEmpty()
         if empty:

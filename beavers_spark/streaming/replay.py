@@ -28,8 +28,8 @@ from beavers_spark.dag import UTC_MAX, Dag
 
 T = TypeVar("T")
 
-#: event times ``SparkSliceSource`` prefetches per control-plane query
-_PREFETCH_TIMES = 1024
+#: rows ``SparkSliceSource`` prefetches per control-plane query
+_PREFETCH_ROWS = 1024
 
 
 @dataclasses.dataclass(frozen=True)
@@ -102,10 +102,11 @@ class ArrowTableDataSource:
     ``lambda t: spark.createDataFrame(t.to_pandas())`` for DataFrame dags;
     identity for Arrow dags).
 
-    Scale note: this is the *driver* of a replay loop, not the data path —
-    for 100 TB replays the payload conversion should hand Spark a parquet
-    path + timestamp predicate instead of materializing rows
-    (see :class:`SparkSliceSource`).
+    Scale note: this holds the whole table on the driver — fine for test
+    fixtures and small files. For 100 TB replays use
+    :class:`SparkSliceSource`, which holds at most a bounded buffer of
+    rows and hands Spark a parquet path + timestamp predicate for any
+    slice larger than that.
     """
 
     def __init__(
@@ -203,63 +204,83 @@ class ParquetDataSink:
 
 
 class SparkSliceSource:
-    """Scale-path replay source: each cycle's batch is a **lazy**
-    DataFrame ``prev < ts <= now`` over a parquet path — the slice
-    predicate reaches the parquet scan (PushedFilters + row-group
-    pruning on min/max stats), so the data plane never touches the
-    driver. This is the 100 TB twin of :class:`ArrowTableDataSource`
-    (which materializes the file driver-side — fine for test fixtures,
-    wrong at scale).
+    """Scale-path replay source: each cycle's batch is the DataFrame of
+    rows with ``prev < ts <= now`` over a parquet path, the 100 TB twin
+    of :class:`ArrowTableDataSource` (which materializes the whole file
+    driver-side).
 
-    Control plane: ``get_next`` reads a driver-held buffer of the next
-    ``_PREFETCH_TIMES`` event times above the cursor, filled by one
-    pushed-down ``orderBy(ts).limit(K)`` collect of the timestamp column
-    only, so a cycle runs no Spark job for it until the buffer is used
-    up. ``read_to`` returns ``None`` for empty slices without touching
-    data, so the replay driver skips the cycle entirely (reference gate:
+    ``get_next`` reads a driver-held buffer of the next
+    ``_PREFETCH_ROWS`` rows above the cursor, filled by one pushed-down
+    ``orderBy(ts).limit(K)`` query read as Arrow, so a cycle runs no
+    Spark job for its next-event time until the buffer is used up.
+    A slice that lies wholly inside the buffer (the buffer holds every
+    row above the cursor, or the slice ends before its last buffered
+    time, so rows with equal times are never split) is served from it
+    as a driver-local DataFrame, whose emptiness probes and small
+    transforms Spark answers on the driver without a job. A larger
+    slice is a **lazy** DataFrame whose predicate reaches the parquet
+    scan (PushedFilters + row-group pruning on min/max stats), so driver
+    memory stays bounded by the buffer however large a slice is.
+    ``read_to`` returns ``None`` for empty slices without touching data,
+    so the replay driver skips the cycle entirely (reference gate:
     replay.py:230 records-or-timer).
     """
 
     def __init__(self, spark: Any, path: str, ts_column: str) -> None:
+        self._spark = spark
         self._df = spark.read.parquet(path)
         self._ts = ts_column
+        self._ts_type = self._df.schema[ts_column].dataType
         self._cursor: pd.Timestamp | None = None  # exclusive lower bound
-        # ascending event times above the cursor, from ``_pos`` on
-        self._ahead = pd.DatetimeIndex([], tz="UTC")
+        # rows above the cursor in ts order, from ``_pos`` on, and their times
+        self._rows = pa.table({})
+        self._times = pd.DatetimeIndex([], tz="UTC")
         self._pos = 0
-        self._complete = False  # the buffer holds every time above the cursor
+        self._complete = False  # the buffer holds every row above the cursor
+
+    def _ts_literal(self, timestamp: pd.Timestamp):
+        """``timestamp`` as a literal of the ts column's type, built from
+        its UTC instant: PySpark reads a naive datetime in the Python
+        process's local zone."""
+        return F.lit(timestamp.tz_convert("UTC").to_pydatetime()).cast(self._ts_type)
 
     def _above_cursor(self):
         if self._cursor is None:
             return self._df
-        return self._df.filter(F.col(self._ts) > self._cursor.tz_convert(None))
+        return self._df.filter(F.col(self._ts) > self._ts_literal(self._cursor))
 
     def get_next(self) -> pd.Timestamp:
-        if self._pos == len(self._ahead) and not self._complete:
-            rows = (
+        if self._pos == len(self._times) and not self._complete:
+            self._rows = (
                 self._above_cursor()
-                .select(self._ts)
                 .filter(F.col(self._ts).isNotNull())
                 .orderBy(self._ts)
-                .limit(_PREFETCH_TIMES)
-                .collect()
+                .limit(_PREFETCH_ROWS)
+                .toArrow()
             )
-            ahead = pd.DatetimeIndex([r[0] for r in rows])
-            self._ahead = ahead.tz_localize("UTC") if ahead.tz is None else ahead
+            times = pd.DatetimeIndex(self._rows.column(self._ts).to_pandas())
+            self._times = (
+                times.tz_localize("UTC") if times.tz is None else times.tz_convert("UTC")
+            )
             self._pos = 0
-            self._complete = len(rows) < _PREFETCH_TIMES
-        if self._pos == len(self._ahead):
+            self._complete = self._rows.num_rows < _PREFETCH_ROWS
+        if self._pos == len(self._times):
             return UTC_MAX
-        return self._ahead[self._pos]
+        return self._times[self._pos]
 
     def read_to(self, timestamp: pd.Timestamp) -> Any:
         if self.get_next() > timestamp:
             return None  # no rows in slice: zero Spark jobs this cycle
-        batch = self._above_cursor().filter(
-            F.col(self._ts) <= timestamp.tz_convert(None)
-        )
+        end = int(self._times.searchsorted(timestamp, side="right"))
+        if self._complete or timestamp < self._times[-1]:
+            rows = self._rows.slice(self._pos, end - self._pos)
+            batch = self._spark.createDataFrame(rows, schema=self._df.schema)
+        else:
+            batch = self._above_cursor().filter(
+                F.col(self._ts) <= self._ts_literal(timestamp)
+            )
         self._cursor = timestamp
-        self._pos = int(self._ahead.searchsorted(timestamp, side="right"))
+        self._pos = end
         return batch
 
 

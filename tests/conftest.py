@@ -3,6 +3,7 @@ from __future__ import annotations
 import itertools
 import os
 import sys
+import time
 
 import pytest
 
@@ -21,6 +22,17 @@ def spark():
         "spark.sql.shuffle.partitions": "4",
     })
     yield spark
+
+
+@pytest.fixture()
+def new_york_tz(monkeypatch):
+    """Run the test with the Python process's local zone set to
+    America/New_York (UTC-5 in winter); the JVM keeps its own zone."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
 
 
 @pytest.fixture(scope="session")

@@ -254,3 +254,28 @@ def test_checkpointed_state_is_kept_as_is(spark, spark_jobs):
     assert [name.split(" at ")[0] for name, _ in jobs] == ["localCheckpoint"]
     assert state.get_value() is made[-1]
     assert not made[-1].is_cached
+
+
+def test_empty_table_values_are_one_driver_local_frame(spark, spark_jobs):
+    """A ``table_stream`` that does not fire, and a ``source_table`` with
+    nothing staged, hold the same 0-row DataFrame of the declared schema
+    every cycle, and probing it runs no Spark job."""
+    dag = Dag(spark)
+    a = dag.source_table("x long", "a")
+    b = dag.source_table("x long", "b")
+    doubled = dag.table_stream(
+        lambda df: df.select((F.col("x") * 2).alias("x")), "x long, tag string"
+    ).map(a)
+    dag.sink("doubled", doubled)
+    dag.sink("b", b)
+    seen = []
+    for minute in range(1, 4):
+        b.set_stream(spark.createDataFrame([(minute,)], "x long"))
+        dag.execute(ts(minute))  # only b fires
+        seen.append((doubled.get_value(), a.get_value()))
+    empty_stream, empty_source = seen[0]
+    assert all(s is empty_stream and v is empty_source for s, v in seen)
+    assert empty_stream.schema.simpleString() == "struct<x:bigint,tag:string>"
+    assert empty_source.schema.simpleString() == "struct<x:bigint>"
+    for value in (empty_stream, empty_source):
+        assert spark_jobs(value.isEmpty) == (True, [])

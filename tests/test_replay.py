@@ -333,13 +333,16 @@ def test_batch_len_handles_empty_dataframe(spark):
     assert _batch_len(None) == 0
 
 
-def _write_ts_parquet(path, minutes, **columns) -> None:
+def _write_ts_parquet(path, minutes, tz=None, **columns) -> None:
+    """Minute offsets from T0 as a ``ts`` column: naive UTC wall times
+    (Spark reads ``timestamp_ntz``) or, with ``tz="UTC"``, instants
+    (``timestamp``)."""
     import pyarrow.parquet as pq
 
     table = pa.table(
         {
             "ts": pa.array(
-                [ts(m).tz_convert(None) for m in minutes], type=pa.timestamp("us")
+                [ts(m).tz_convert(None) for m in minutes], type=pa.timestamp("us", tz=tz)
             ),
             **columns,
         }
@@ -351,9 +354,11 @@ def test_replay_cycle_probes_each_value_once(spark, spark_jobs, tmp_path):
     """Job-count pin for one executed replay cycle of a SparkSliceSource
     dag (source -> filter stream -> keyed state -> aggregate stream ->
     sink): no emptiness probe of the source slice (the source's due next
-    record proves it non-empty), one probe per firing stream node, no
+    record proves it non-empty), a driver-local slice and its filter
+    probed without a job, one probe for the aggregate over state, no
     retention job for a state value its node already checkpointed, and a
     sink read that does not re-run the aggregate's shuffle."""
+    from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
     from beavers_spark.operators import last_by_keys
@@ -403,8 +408,14 @@ def test_replay_cycle_probes_each_value_once(spark, spark_jobs, tmp_path):
     for _ in range(3):
         _, jobs = spark_jobs(driver.run_cycle)
         names = [name.split(" at ")[0] for name, _ in jobs]
-        assert names.count("isEmpty") == 2, names  # rows and totals only
+        assert names.count("isEmpty") == 1, names  # totals only
         assert "count" not in names, names
+        # the totals probe, the upsert's checkpoint, and three AQE
+        # shuffle-stage jobs (the sink read runs in its own group)
+        assert len(jobs) == 5, names
+        local_rows = rows.get_value()
+        assert local_rows.storageLevel == StorageLevel.NONE
+        assert spark_jobs(local_rows.isEmpty) == (False, [])
         # one job, running one stage: the cached value's scan
         assert [stages for _, stages in sink_jobs[-1]] == [1], sink_jobs[-1]
     assert sum(m.records for m in driver.metrics) == 4
@@ -412,13 +423,13 @@ def test_replay_cycle_probes_each_value_once(spark, spark_jobs, tmp_path):
 
 
 def test_spark_slice_source_buffer_edges(spark, spark_jobs, tmp_path, monkeypatch):
-    """The prefetched next-event buffer: equal timestamps straddling the
+    """The prefetched row buffer: equal timestamps straddling the
     buffer edge, a refill after a clock warp past the buffer, and an
     exhausted file answered from the buffer without a Spark job."""
     from beavers_spark.streaming import SparkSliceSource
     from beavers_spark.streaming import replay
 
-    monkeypatch.setattr(replay, "_PREFETCH_TIMES", 3)
+    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 3)
     path = str(tmp_path / "edges.parquet")
     minutes = [1, 2, 3, 3, 3, 4, 5, 6, 7, 100, 101]
     _write_ts_parquet(path, minutes, seq=list(range(len(minutes))))
@@ -444,21 +455,76 @@ def test_spark_slice_source_buffer_edges(spark, spark_jobs, tmp_path, monkeypatc
 
 def test_spark_slice_source_matches_arrow_source(spark, tmp_path, monkeypatch):
     """SparkSliceSource serves the same slices and next-event times as
-    ArrowTableDataSource over the same file, across buffer refills."""
+    ArrowTableDataSource over the same file, across buffer refills; a
+    slice served from the buffer has exactly the lazy slice's schema,
+    for ``timestamp_ntz`` and ``timestamp`` columns; and a replay where a
+    slice outgrows the buffer and is read lazily sinks the same rows as
+    one where every slice is driver-local."""
     import pyarrow.parquet as pq
 
+    from beavers_spark.dag import _driver_local
     from beavers_spark.streaming import ArrowTableDataSource, SparkSliceSource
     from beavers_spark.streaming import replay
 
-    monkeypatch.setattr(replay, "_PREFETCH_TIMES", 4)
-    path = str(tmp_path / "same.parquet")
+    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 4)
     minutes = [0, 0, 1, 4, 4, 4, 4, 4, 9, 10, 30, 31, 31, 90]
-    _write_ts_parquet(path, minutes, seq=list(range(len(minutes))))
-    spark_src = SparkSliceSource(spark, path, "ts")
-    arrow_src = ArrowTableDataSource(pq.read_table(path), "ts")
-    for until in (-1, 0, 2, 4, 5, 9, 29, 31, 60, 89, 90, 120):
-        assert spark_src.get_next() == arrow_src.get_next(), until
-        got = spark_src.read_to(ts(until))
-        want = arrow_src.read_to(ts(until)).column("seq").to_pylist()
-        assert (sorted(r.seq for r in got.collect()) if got is not None else []) == want
-    assert spark_src.get_next() == arrow_src.get_next() == UTC_MAX
+    for tz, ts_type in ((None, "timestamp_ntz"), ("UTC", "timestamp")):
+        path = str(tmp_path / f"same_{tz}.parquet")
+        _write_ts_parquet(path, minutes, tz, seq=list(range(len(minutes))))
+        lazy_schema = spark.read.parquet(path).schema
+        assert lazy_schema["ts"].dataType.simpleString() == ts_type
+        spark_src = SparkSliceSource(spark, path, "ts")
+        arrow_src = ArrowTableDataSource(pq.read_table(path), "ts")
+        served_locally = []
+        for until in (-1, 0, 2, 4, 5, 9, 29, 31, 60, 89, 90, 120):
+            assert spark_src.get_next() == arrow_src.get_next(), until
+            got = spark_src.read_to(ts(until))
+            want = arrow_src.read_to(ts(until)).column("seq").to_pylist()
+            assert (sorted(r.seq for r in got.collect()) if got is not None else []) == want
+            if got is not None:
+                # select: the JVM's schema, not the one PySpark was handed
+                assert got.select("*").schema == lazy_schema, until
+                served_locally.append(_driver_local(got))
+        assert spark_src.get_next() == arrow_src.get_next() == UTC_MAX
+        assert True in served_locally and False in served_locally
+
+    def replay_rows():  # over the last file: a ``timestamp`` column
+        dag = Dag(spark)
+        dag.sink("rows", dag.source_table(lazy_schema, "rows"))
+        sink = ListDataSink()
+        ReplayDriver(
+            dag,
+            ReplayContext(ts(0), ts(120), pd.Timedelta(minutes=1)),
+            sources={"rows": SparkSliceSource(spark, path, "ts")},
+            sinks={"rows": sink},
+        ).run()
+        local = [_driver_local(df) for _, df in sink.appended]
+        return [(t, sorted(map(tuple, df.collect()))) for t, df in sink.appended], local
+
+    partly_lazy, local = replay_rows()
+    assert False in local  # the five rows at minute 4 outgrow the buffer
+    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 1024)
+    all_local, local = replay_rows()
+    assert all(local)
+    assert partly_lazy == all_local
+    assert sum(len(rows) for _, rows in all_local) == len(minutes)
+
+
+@pytest.mark.parametrize("tz", [None, "UTC"])
+def test_spark_slice_source_event_times_are_utc(spark, tmp_path, monkeypatch, new_york_tz, tz):
+    """Slice and cursor predicates compare UTC instants even when the
+    Python process's local zone is not UTC (a naive literal would be
+    read as New York time, five hours late)."""
+    from beavers_spark.streaming import SparkSliceSource
+    from beavers_spark.streaming import replay
+
+    # a one-row buffer: every slice and refill goes through the predicates
+    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 1)
+    path = str(tmp_path / "three.parquet")
+    _write_ts_parquet(path, [1, 2, 3], tz, seq=[0, 1, 2])
+    source = SparkSliceSource(spark, path, "ts")
+    assert source.get_next() == ts(1)
+    assert [r.seq for r in source.read_to(ts(1)).collect()] == [0]
+    assert source.get_next() == ts(2)
+    assert sorted(r.seq for r in source.read_to(ts(3)).collect()) == [1, 2]
+    assert source.get_next() == UTC_MAX

@@ -321,3 +321,21 @@ def test_event_time_gate_is_one_action(spark, spark_jobs):
     driver(rows.filter(F.lit(False)), 1)  # empty batch, due timer
     assert len(calls) == 2
     assert len(driver.metrics) == 2
+
+
+def test_event_time_clock_is_utc_under_local_zone(spark, new_york_tz):
+    """The cycle clock is the batch's max event time as a UTC instant
+    even when the Python process's local zone is not UTC (a collected
+    timestamp is naive New York wall time, five hours early)."""
+    import pandas as pd
+
+    dag = Dag(spark=spark)
+    dag.sink("rows", dag.source_table(SCHEMA, name="in"))
+    driver = StreamingDagDriver(dag, source_name="in", event_time_column="ts")
+    rows = spark.createDataFrame(
+        [("2024-01-01T00:05:00", "a", 1.0), ("2024-01-01T00:01:00", "b", 2.0)],
+        "ts string, user string, value double",
+    ).select(F.col("ts").cast("timestamp"), "user", "value")
+    driver(rows, 0)
+    assert driver.metrics[-1].cycle_time == pd.Timestamp("2024-01-01T00:05:00Z")
+    assert dag.now().get_value() == pd.Timestamp("2024-01-01T00:05:00Z")
