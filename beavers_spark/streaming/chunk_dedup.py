@@ -7,49 +7,13 @@ segmentation, same hash scheme, same output schema) — the Lee et al.
 substring-dedup step running at ingest: each micro-batch pays
 O(batch + state-hash probe), and history is never re-segmented.
 
-Per batch:
-
-1. segment + hash ONLY the new documents (``word_chunks`` +
-   ``md5_hash64`` — one narrow pass), persisted as the batch's one
-   heavy materialization;
-2. within-batch ownership: min (doc, pos) occurrence per segment hash —
-   one groupBy on the 60-bit hash, never the segment text;
-3. cross-batch ownership: the batch winners' hash set is broadcast
-   into a LEFT SEMI probe of the persistent hash registry, and the
-   small matched set broadcast back into an anti-join — the registry
-   is scanned (column-pruned to ``h``, wave-Bloom- and hash-bucket-
-   pruned) but NEVER shuffled; a bulk batch past the broadcast cap
-   falls back to a shuffled anti-join;
-4. the surviving segments land in the state table as their own wave
-   partition sub-partitioned by hash prefix
-   (``w=<batch_id>/b=<pmod(h, N)>/``) — written FIRST, mirroring
-   ``IncrementalNearDedup``;
-5. the kept-document view (``doc_id, clean_text, n_kept, n_chunks``)
-   is assembled from the same persisted winner set and lands in the
-   output as its own wave partition (``w=<batch_id>/``) — per-wave
-   overwrite, so a crash between the output write and the watermark
-   mark replays idempotently (the old append-mode output duplicated
-   the batch's rows on exactly that replay).
-
-A segment is owned exactly once, in the batch it first arrives; state
-rows are append-only, so ownership can never flip. When batches arrive
-in ascending id order the result is IDENTICAL to the batch operator
-(pinned by tests/test_chunk_dedup.py); under arbitrary arrival order the
-owner is the first ARRIVAL rather than the global min (doc, pos) — the
-semantics an ingest pipeline actually wants.
-
-At 100 TB: the per-batch probe reads one 8-byte column of the state —
-columnar, O(corpus segments) scan but O(batch) shuffle (broadcast
-probe). Wave Bloom sidecars (gated on wave count, lazily backfilled)
-prune whole waves; the ``b`` hash-prefix buckets prune within a wave
-when the batch's hash set leaves buckets untouched; ``compact`` bounds
-the file count. The near-dedup twin has the same probe shape on its
-band table.
-
-Reference parity: composes the reference's state-node semantics
-(beavers dag.py:501-518 — durable value folded per cycle) with its
-replay/live driver loop (kafka.py:534-544); the reference has no dedup
-surface itself (README.md:43-50 scope).
+The ownership wave (redelivery guard, per-hash owner, registry probe,
+per-wave commits) is ``hash_ownership.HashOwnershipKernel``'s. This
+kernel segments with ``word_chunks`` + ``md5_hash64``, keeps the chunk
+text in its registry rows, and emits the kept-document view
+``(doc_id, clean_text, n_kept, n_chunks)``: each document reassembled,
+in position order, from the chunks it owns. Parity with the batch
+operator under ascending arrival is pinned by tests/test_chunk_dedup.py.
 """
 
 from __future__ import annotations
@@ -59,22 +23,10 @@ from pyspark.sql import functions as F
 
 from beavers_spark.functions.curation import word_chunks
 from beavers_spark.functions.dedup import md5_hash64
-from beavers_spark.streaming.maintenance import (
-    PROBE_BROADCAST_CAP,
-    DocSeenGuard,
-    WaveBloomIndex,
-    ensure_layout,
-    fanout_repartition,
-    overlap_jobs,
-    prune_hash_buckets,
-    registry_anti_probe,
-    seen_anti_join,
-)
-from beavers_spark.streaming.substring_dedup import _wave_keys
-from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
+from beavers_spark.streaming.hash_ownership import HashOwnershipKernel
 
 
-class IncrementalChunkDedup(WaveKernel):
+class IncrementalChunkDedup(HashOwnershipKernel):
     """``foreachBatch`` callable maintaining corpus-wide chunk ownership.
 
     ::
@@ -86,6 +38,14 @@ class IncrementalChunkDedup(WaveKernel):
     ``read_kept(spark)`` returns every deduplicated document emitted so
     far; ``read_state(spark)`` the segment-hash ownership registry.
     """
+
+    _owner = ("doc_id", "idx", "chunk", "n_chunks")
+    _registry = ("h", "doc_id", "idx", "chunk", "n_chunks")
+    _out_cols = (
+        ("clean_text", "string"),
+        ("n_kept", "bigint"),
+        ("n_chunks", "bigint"),
+    )
 
     def __init__(
         self,
@@ -99,307 +59,36 @@ class IncrementalChunkDedup(WaveKernel):
         n_hash_buckets: int = 16,
         compact_every_waves: int | None = 16,
     ) -> None:
-        super().__init__(state_path, compact_every_waves)
-        self.out_path = out_path
+        super().__init__(
+            state_path, out_path, id_col, bloom_bits, bloom_min_waves,
+            n_hash_buckets, compact_every_waves, layout={"k": k},
+        )
         self.text_col = text_col
-        self.id_col = id_col
         self.k = k
-        #: bits per wave Bloom sidecar (None disables the probe filter)
-        self.bloom_bits = bloom_bits
-        #: hash-prefix sub-partitions per wave (``b = pmod(h, N)``)
-        self.n_hash_buckets = n_hash_buckets
-        self._bloom = WaveBloomIndex(
-            state_path, bloom_bits, min_waves=bloom_min_waves,
-            keys_of=_wave_keys, adaptive=True,
-        )
-        #: per-wave doc-id Bloom sidecars on the registry — the
-        #: redelivery guard reads only Bloom-positive waves instead of
-        #: the full corpus's doc_id column (maintenance.DocSeenGuard)
-        self._doc_seen = DocSeenGuard(
-            state_path, m_bits=bloom_bits, min_waves=bloom_min_waves,
-        )
-        #: doc-id sidecars on the OUTPUT table too (r13): forget's out
-        #: sweep targets the victims' home wave instead of scanning
-        #: every output wave (the growth bench measured the unguarded
-        #: sweep's wall time rising with live waves)
-        self._doc_seen_out = DocSeenGuard(
-            out_path, m_bits=bloom_bits, min_waves=bloom_min_waves,
-        )
-
-    def _wave_tables(self) -> list[WaveTable]:
-        return [
-            WaveTable(
-                self.out_path,
-                cluster_by=("doc_id",),
-                merges=(self._doc_seen_out,),
-                guard=self._doc_seen_out,
-            ),
-            # clustered by the probe key (VERDICT r10 item 4): narrow
-            # per-row-group h min/max in the coalesced bucket files
-            WaveTable(
-                self.state_path,
-                cluster_by=("b", "h"),
-                merges=(self._doc_seen, self._bloom),
-                guard=self._doc_seen,
-            ),
-        ]
-
-    # -- state access -----------------------------------------------------
-    def read_state(self, spark: SparkSession) -> DataFrame:
-        """Segment ownership registry ``(h, doc_id, idx)`` (the wave and
-        hash-bucket columns ``w``/``b`` are storage details)."""
-        return spark.read.parquet(self.state_path).select(
-            "h", "doc_id", "idx"
-        )
 
     def read_kept(self, spark: SparkSession) -> DataFrame:
         """Deduplicated documents emitted so far (the wave column ``w``
         is a storage detail)."""
-        return spark.read.parquet(self.out_path).select(
-            "doc_id", "clean_text", "n_kept", "n_chunks"
-        )
+        return self._read_out(spark)
 
-    # -- the kernel -------------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df
-        # segment length and bucket modulus are baked into the persisted
-        # hashes / b-partitions: refuse to mix layouts (silent missed
-        # duplicates otherwise — see maintenance.ensure_layout)
-        ensure_layout(
-            self.state_path,
-            k=self.k,
-            n_hash_buckets=self.n_hash_buckets,
-            # r13: b is a clustered DATA column, not a partition dir —
-            # pre-r13 (b=-partitioned) state must fail loudly at open
-            # (mixed directory depths break partition discovery)
-            reg_layout="b-clustered-v2",
-        )
-        had_state = self._state_exists(spark)
-        if had_state:
-            # redelivered doc ids (producer retry, re-ingest) would
-            # re-own their unique segments and duplicate output rows;
-            # the probe reads the doc_id column restricted by the
-            # per-wave doc-id Bloom sidecars to waves that may contain
-            # a batch id (VERDICT r10 item 2 — a disjoint batch scans
-            # NO prior bytes), excluding this wave's own half-committed
-            # directory (crash-replay safety — same reasoning as
-            # IncrementalNearDedup), and runs through the broadcast
-            # semi/anti pair so the seen scan is never shuffled
-            with self._phase("seen_probe"):
-                seen = self._doc_seen.pruned_seen(
-                    spark, batch, batch_id, self.id_col
-                )
-            if seen is not None:
-                batch = seen_anti_join(batch, seen, self.id_col)
-
+    def _segments(self, batch: DataFrame) -> DataFrame:
         chunks = word_chunks(F.col(self.text_col), self.k)
-        # spread a NARROW batch before the fan-out (same rationale as
-        # the batch operator: a single-partition batch serializes
-        # segment hashing); conditional so a well-partitioned batch
-        # skips the exchange (judge r9)
-        batch = fanout_repartition(batch, probe=batch_df)
-        # persist (NOT localCheckpoint): the ownership groupBy and the
-        # winner join-back both read the segmented batch, and the
-        # blocking unpersist below releases the blocks deterministically
-        # at batch end instead of leaving checkpoint-RDD cleanup to the
-        # GC-driven ContextCleaner (the r5 rep-over-rep slowdown source)
-        segs = batch.select(
+        return batch.select(
             F.col(self.id_col).alias("doc_id"),
             # bigint to match the batch twin's count()-derived column
             F.size(chunks).cast("bigint").alias("n_chunks"),
             F.posexplode(chunks).alias("idx", "chunk"),
-        ).withColumn("h", md5_hash64(F.col("chunk"))).persist()
-        # lexicographic struct min — no packing range limit (mirrors
-        # the batch twin in functions/curation.py)
-        # ONE partial-combined min aggregation yields the owner ROW
-        # directly: (doc_id, idx) is unique within a hash group and
-        # leads the struct, so the lexicographic min picks exactly the
-        # row the old owners-join-back selected — same rows, one
-        # exchange of segs instead of an aggregate plus a join (r13)
-        winners = (
-            segs.groupBy("h")
-            .agg(
-                F.min(
-                    F.struct("doc_id", "idx", "chunk", "n_chunks")
-                ).alias("o")
-            )
-            .select(
-                "h", "o.doc_id", "o.idx", "o.chunk", "o.n_chunks"
-            )
-            .persist()
+        ).withColumn("h", md5_hash64(F.col("chunk")))
+
+    def _output(self, segs: DataFrame, owned: DataFrame) -> DataFrame:
+        return owned.groupBy("doc_id").agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("idx", "chunk"))),
+                    lambda s: s["chunk"],
+                ),
+                " ",
+            ).alias("clean_text"),
+            F.count("*").alias("n_kept"),
+            F.first("n_chunks").alias("n_chunks"),
         )
-        new_owned = winners
-        try:
-            # one bounded Arrow collect materializes winners AND (one
-            # row per h by construction) reports its exact row count —
-            # the separate winners.count() job folds into the Bloom
-            # fold whenever the probe runs (VERDICT r13 item 3); only
-            # probe-off batches and the rare over-cap hand-off still
-            # pay the count job
-            probe_on = had_state and self._bloom.probe_active(
-                exclude=batch_id
-            )
-            pre_h = n_rows = None
-            if probe_on:
-                with self._phase("bloom_fold"):
-                    pre_h, n_rows = self._bloom.collect_keys_counted(
-                        winners, "h"
-                    )
-            with self._phase("winners_count"):
-                n_winners = (
-                    n_rows if n_rows is not None else winners.count()
-                )
-            overcap = probe_on and pre_h is None
-            if overcap:
-                self._bloom.overcap_fallbacks += 1
-            if had_state and n_winners:
-                # cross-batch ownership: any hash already registered
-                # wins. Scan pruning, cheapest first: 8-byte h column
-                # only, minus this wave, minus Bloom-rejected waves,
-                # minus untouched hash-prefix buckets.
-                prior = spark.read.parquet(self.state_path).filter(
-                    F.col("w") != batch_id
-                )
-                # past probe_cap the prune decision moves executor-side
-                # (keys_df path) instead of switching off — the 100x
-                # scale contract (VERDICT r8 item 1)
-                prior = self._bloom.prune_prior(
-                    prior, pre_h, batch_id, self.probe_metrics, spark,
-                    keys_df=winners.select("h") if overcap else None,
-                    key_col="h",
-                )
-                if prior is not None and pre_h is not None:
-                    # bucket pruning is driver-side key math — over-cap
-                    # batches (>1M distinct hashes vs 16 buckets) touch
-                    # every bucket anyway, so skipping it loses nothing
-                    prior = prune_hash_buckets(
-                        prior, pre_h, self.n_hash_buckets
-                    )
-                if prior is not None:
-                    # broadcast semi/anti probe: the registry is
-                    # scanned but never shuffled (see
-                    # maintenance.registry_anti_probe)
-                    new_owned = registry_anti_probe(
-                        winners, prior, "h", n_winners,
-                        PROBE_BROADCAST_CAP,
-                    ).persist()
-
-            if n_winners == 0:
-                # nothing segmentable (or fully redelivered): keep the
-                # output table valid from batch 0, mark, stop — no
-                # registry wave is written. The doc_id type comes from
-                # the BATCH (id_col accepts any type): a hardcoded long
-                # would make this wave's schema disagree with real
-                # waves for string-keyed corpora
-                empty = batch.select(
-                    F.col(self.id_col).alias("doc_id"),
-                    F.lit(None).cast("string").alias("clean_text"),
-                    F.lit(None).cast("bigint").alias("n_kept"),
-                    F.lit(None).cast("bigint").alias("n_chunks"),
-                ).limit(0)
-                empty.write.mode("overwrite").parquet(
-                    f"{self.out_path}/w={batch_id}"
-                )
-                self._watermark.mark(batch_id)
-                return
-
-            # overwriting one wave directory is idempotent under
-            # replays; b = pmod(h, N) rides as a CLUSTERED data column
-            # (r13 — sorted (b, h) row groups give the probe's b/h
-            # predicates min/max pruning without the old waves x
-            # buckets directory explosion)
-            wave_dir = f"{self.state_path}/w={batch_id}"
-            out_dir = f"{self.out_path}/w={batch_id}"
-            # stash captured BEFORE the state sidecar consumes it (the
-            # overlapped thunks below must not share mutable driver
-            # state — see maintenance.overlap_jobs)
-            stash = self._doc_seen._batch_keys
-            kept = new_owned.groupBy("doc_id").agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("idx", "chunk"))
-                        ),
-                        lambda s: s["chunk"],
-                    ),
-                    " ",
-                ).alias("clean_text"),
-                F.count("*").alias("n_kept"),
-                F.first("n_chunks").alias("n_chunks"),
-            )
-
-            def _commit_state():
-                with self._phase("state_write"):
-                    (
-                        new_owned.withColumn(
-                            "b",
-                            F.pmod(
-                                F.col("h"), F.lit(self.n_hash_buckets)
-                            ),
-                        )
-                        # no explicit partition count: AQE coalesces
-                        # the shuffle by size, so a SMALL wave lands as
-                        # ONE file (VERDICT r12 item 4) and a big wave
-                        # gets as many b-hash partitions as its bytes
-                        # need — no post-write shrink job
-                        .repartition(F.col("b"))
-                        .sortWithinPartitions("b", "h")
-                        .write.mode("overwrite")
-                        .parquet(wave_dir)
-                    )
-                self._record_wave(spark, batch_id, wave_dir)
-                if pre_h is not None:
-                    # PRE-anti hash set: a superset bitmap only adds
-                    # false positives (an unnecessary wave scan), never
-                    # wrong answers
-                    self._bloom.save_wave(wave_dir, pre_h)
-                elif overcap:
-                    # executor-side bitmap over the PERSISTED new_owned
-                    # frame (the wave's EXACT registered set) — bounded
-                    # by the bitmap size, never the key count. NOT a
-                    # read-back of wave_dir: the persisted frame is
-                    # already resident (a read-back would be a whole
-                    # extra scan job), and a fully-redelivered over-cap
-                    # batch's empty frame just builds a zero bitmap.
-                    self._bloom.save_wave_distributed(
-                        wave_dir, new_owned.select("h"), "h"
-                    )
-                # the wave's doc-id bitmap — what future batches' seen
-                # probes test against (maintenance.DocSeenGuard)
-                with self._phase("seen_sidecar"):
-                    self._doc_seen.save_wave(spark, wave_dir, batch_id)
-
-            def _commit_out():
-                # per-wave overwrite (idempotent under a crash between
-                # this write and the mark — append mode duplicated the
-                # batch's rows on exactly that replay); written even
-                # when empty so read_kept() is valid from batch 0
-                with self._phase("out_write"):
-                    kept.write.mode("overwrite").parquet(out_dir)
-                # out-table doc sidecar from the SAME batch key set the
-                # state sidecar used (stash captured above) — no
-                # read-back
-                with self._phase("out_sidecar"):
-                    if stash is not None and stash[0] == batch_id:
-                        self._doc_seen_out.save_wave(
-                            spark, out_dir, keys=stash[1]
-                        )
-                    else:
-                        self._doc_seen_out.save_wave(spark, out_dir)
-
-            # the two commit chains touch disjoint directories and
-            # read only persisted frames — run them as concurrent
-            # Spark jobs so one chain's straggler tail back-fills
-            # with the other's tasks; a crash with either half
-            # written replays the whole wave (both writes are
-            # idempotent per-wave overwrites, watermark unmarked)
-            overlap_jobs(_commit_state, _commit_out)
-            self._has_state = True
-            self._watermark.mark(batch_id)
-        finally:
-            # deterministic block release (see module docstring)
-            if new_owned is not winners:
-                new_owned.unpersist(blocking=True)
-            winners.unpersist(blocking=True)
-            segs.unpersist(blocking=True)

@@ -5,35 +5,15 @@ chunk-dedup ownership discipline: a continuous video ingest pays
 O(batch frames + registry probe) per micro-batch, and history is never
 re-decoded.
 
-Per batch:
-
-1. extract ONLY the new videos' frames (``avi_frames`` — one
-   Arrow-batched RIFF walk, map-side explode) and derive each frame's
-   60-bit content key from its md5 (``conv(hex[:15])`` — the repo's
-   md5-derived hash convention, cross-engine checkable);
-2. within-batch ownership: min (doc, frame) occurrence per content
-   key — one groupBy on the 8-byte key, never the frame bytes;
-3. cross-batch ownership: the batch winners' key set is broadcast into
-   a LEFT SEMI probe of the persistent key registry and the matched
-   set broadcast back into an anti-join — the registry is scanned
-   (column-pruned to ``h``, wave-Bloom- and hash-bucket-pruned) but
-   NEVER shuffled (``maintenance.registry_anti_probe``);
-4. surviving frames land in the state registry as their own wave
-   partition (``w=<batch>/``, b = pmod(h, N) clustered in-file) and the kept-frame view
-   ``(doc_id, frame_idx, n_bytes, frame_md5)`` lands in the output as
-   its own wave — per-wave overwrites, so crash replays are
-   idempotent (the dedup twins' shared contract).
-
-A frame's content is owned exactly once, in the batch it first
-arrives; under ascending arrival the result is IDENTICAL to the batch
-``video_frame_dedup`` owners (pinned by tests). At 100 TB of video:
-the shuffle carries (doc, idx, key) rows — frame BYTES never leave
-the decode stage — and the probe cost shape is the chunk registry's
-(broadcast semi/anti, O(batch) exchange volume).
-
-Reference parity: composes the reference's state-node semantics
-(beavers dag.py:501-518) with its live-driver loop (kafka.py:534-544);
-the reference has no media surface itself (README.md:43-50 scope).
+The ownership wave (redelivery guard, per-hash owner, registry probe,
+per-wave commits) is ``hash_ownership.HashOwnershipKernel``'s. This
+kernel extracts ONLY the new videos' frames (``avi_frames`` — one
+Arrow-batched RIFF walk, map-side explode), keys each frame by its md5's
+top 60 bits, and emits the kept-frame view
+``(doc_id, frame_idx, n_bytes, frame_md5)``. Under ascending arrival the
+result is IDENTICAL to the batch ``video_frame_dedup`` owners (pinned by
+tests). At 100 TB of video the shuffle carries (doc, idx, key) rows —
+frame BYTES never leave the decode stage.
 """
 
 from __future__ import annotations
@@ -42,22 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beavers_spark.functions.multimodal import avi_frames
-from beavers_spark.streaming.maintenance import (
-    PROBE_BROADCAST_CAP,
-    DocSeenGuard,
-    WaveBloomIndex,
-    ensure_layout,
-    fanout_repartition,
-    overlap_jobs,
-    prune_hash_buckets,
-    registry_anti_probe,
-    seen_anti_join,
-)
-from beavers_spark.streaming.substring_dedup import _wave_keys
-from beavers_spark.streaming.wave_kernel import WaveKernel, WaveTable
+from beavers_spark.streaming.hash_ownership import HashOwnershipKernel
 
 
-class IncrementalFrameDedup(WaveKernel):
+class IncrementalFrameDedup(HashOwnershipKernel):
     """``foreachBatch`` callable maintaining corpus-wide frame
     ownership over AVI payload columns.
 
@@ -72,6 +40,15 @@ class IncrementalFrameDedup(WaveKernel):
     far; ``read_state(spark)`` the content-key ownership registry.
     """
 
+    _owner = ("doc_id", "frame_idx", "n_bytes", "frame_md5")
+    _registry = ("h", "doc_id", "frame_idx")
+    _out_cols = (
+        ("frame_idx", "int"),
+        ("n_bytes", "bigint"),
+        ("frame_md5", "string"),
+    )
+    _guard_out = False
+
     def __init__(
         self,
         state_path: str,
@@ -84,251 +61,32 @@ class IncrementalFrameDedup(WaveKernel):
         probe_cap: int | None = None,
         compact_every_waves: int | None = 16,
     ) -> None:
-        super().__init__(state_path, compact_every_waves)
-        self.out_path = out_path
+        super().__init__(
+            state_path, out_path, id_col, bloom_bits, bloom_min_waves,
+            n_hash_buckets, compact_every_waves, layout={},
+            probe_cap=probe_cap,
+        )
         self.payload_col = payload_col
-        self.id_col = id_col
-        #: bits per wave Bloom sidecar (None disables the probe filter)
-        self.bloom_bits = bloom_bits
-        #: hash-prefix sub-partitions per wave (``b = pmod(h, N)``)
-        self.n_hash_buckets = n_hash_buckets
-        bloom_kwargs = {} if probe_cap is None else {"probe_cap": probe_cap}
-        self._bloom = WaveBloomIndex(
-            state_path, bloom_bits, min_waves=bloom_min_waves,
-            keys_of=_wave_keys, adaptive=True, **bloom_kwargs,
-        )
-        #: per-wave doc-id Bloom sidecars on the registry — the
-        #: redelivery guard reads only Bloom-positive waves instead of
-        #: the full corpus's doc_id column (maintenance.DocSeenGuard)
-        self._doc_seen = DocSeenGuard(
-            state_path, m_bits=bloom_bits,
-            min_waves=bloom_min_waves, **bloom_kwargs,
-        )
-
-    def _wave_tables(self) -> list[WaveTable]:
-        return [
-            WaveTable(self.out_path, cluster_by=("doc_id",)),
-            # clustered by the probe key (VERDICT r10 item 4): narrow
-            # per-row-group h min/max in the coalesced bucket files
-            WaveTable(
-                self.state_path,
-                cluster_by=("b", "h"),
-                merges=(self._doc_seen, self._bloom),
-                guard=self._doc_seen,
-            ),
-        ]
-
-    # -- state access -----------------------------------------------------
-    def read_state(self, spark: SparkSession) -> DataFrame:
-        """Frame-content ownership registry ``(h, doc_id, frame_idx)``
-        (``w``/``b`` are storage details)."""
-        return spark.read.parquet(self.state_path).select(
-            "h", "doc_id", "frame_idx"
-        )
 
     def read_kept(self, spark: SparkSession) -> DataFrame:
         """First-arrival (owned) frames emitted so far (the wave
         column ``w`` is a storage detail)."""
-        return spark.read.parquet(self.out_path).select(
-            "doc_id", "frame_idx", "n_bytes", "frame_md5"
-        )
+        return self._read_out(spark)
 
-    # -- the kernel -------------------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df
-        ensure_layout(
-            self.state_path,
-            n_hash_buckets=self.n_hash_buckets,
-            # r13: b is a clustered DATA column, not a partition dir
-            # (see the chunk/substring registries — same conversion)
-            reg_layout="b-clustered-v2",
-        )
-        had_state = self._state_exists(spark)
-        if had_state:
-            # redelivered videos (producer retry, re-ingest) would
-            # reprocess their payloads for nothing; the probe reads
-            # the registry's doc_id column restricted by the per-wave
-            # doc-id Bloom sidecars to waves that may contain a batch
-            # id (VERDICT r10 item 2) — a disjoint batch scans NO
-            # prior bytes; excludes this wave's own half-committed
-            # directory (crash-replay safety)
-            with self._phase("seen_probe"):
-                seen = self._doc_seen.pruned_seen(
-                    spark, batch, batch_id, self.id_col
-                )
-            if seen is not None:
-                batch = seen_anti_join(batch, seen, self.id_col)
-
-        # spread a NARROW batch before the decode fan-out: a
-        # single-file (or single-partition) micro-batch — the common
-        # trickle-ingest shape — would otherwise run every container
-        # walk and frame md5 on one core (the substring twin's lesson,
-        # review r9). Conditional: a well-partitioned batch skips the
-        # exchange entirely — the payload bytes never ride a shuffle
-        # (judge r9 "What's wrong" #2). Partition count is measured on
-        # the raw input, not the guarded frame (see fanout_repartition).
-        batch = fanout_repartition(batch, probe=batch_df)
-        # one Arrow-batched RIFF walk per video, map-side frame
-        # fan-out; the content key is the md5's top 60 bits (the
-        # md5-derived hash convention — conv on 15 hex chars stays
-        # ANSI-safe within bigint)
+    def _segments(self, batch: DataFrame) -> DataFrame:
         frames = avi_frames(
-            batch.select(
-                F.col(self.id_col).alias("doc_id"), self.payload_col
-            ),
+            batch.select(F.col(self.id_col).alias("doc_id"), self.payload_col),
             self.payload_col,
         )
-        segs = frames.select(
-            "doc_id",
-            "frame_idx",
-            "n_bytes",
-            "frame_md5",
+        # the content key is the md5's top 60 bits (the repo's
+        # md5-derived hash convention, cross-engine checkable — conv on
+        # 15 hex chars stays ANSI-safe within bigint)
+        return frames.select(
+            *self._owner,
             F.conv(F.substring("frame_md5", 1, 15), 16, 10)
             .cast("bigint")
             .alias("h"),
-        ).persist()
-        # ONE partial-combined min aggregation yields the owner ROW
-        # directly: (doc_id, frame_idx) is unique within a content
-        # group and leads the struct, so the lexicographic min picks
-        # exactly the row the old owners-join-back selected — same
-        # rows, one exchange of segs instead of an aggregate plus a
-        # join (r13)
-        winners = (
-            segs.groupBy("h")
-            .agg(
-                F.min(
-                    F.struct(
-                        "doc_id", "frame_idx", "n_bytes", "frame_md5"
-                    )
-                ).alias("o")
-            )
-            .select(
-                "h", "o.doc_id", "o.frame_idx", "o.n_bytes",
-                "o.frame_md5",
-            )
-            .persist()
         )
-        new_owned = winners
-        try:
-            # one bounded Arrow collect materializes winners AND — one
-            # row per h by construction — reports the exact winner
-            # count: the separate winners.count() job folds into the
-            # Bloom fold whenever the probe runs (VERDICT r13 item 3);
-            # probe-off batches and the rare over-cap hand-off still
-            # pay the count job
-            probe_on = had_state and self._bloom.probe_active(
-                exclude=batch_id
-            )
-            pre_h = n_rows = None
-            if probe_on:
-                with self._phase("bloom_fold"):
-                    pre_h, n_rows = self._bloom.collect_keys_counted(
-                        winners, "h"
-                    )
-            with self._phase("winners_count"):
-                n_winners = (
-                    n_rows if n_rows is not None else winners.count()
-                )
-            overcap = probe_on and pre_h is None
-            if overcap:
-                self._bloom.overcap_fallbacks += 1
-            if had_state and n_winners:
-                prior = spark.read.parquet(self.state_path).filter(
-                    F.col("w") != batch_id
-                )
-                prior = self._bloom.prune_prior(
-                    prior, pre_h, batch_id, self.probe_metrics, spark,
-                    keys_df=winners.select("h") if overcap else None,
-                    key_col="h",
-                )
-                if prior is not None and pre_h is not None:
-                    prior = prune_hash_buckets(
-                        prior, pre_h, self.n_hash_buckets
-                    )
-                if prior is not None:
-                    new_owned = registry_anti_probe(
-                        winners, prior, "h", n_winners,
-                        PROBE_BROADCAST_CAP,
-                    ).persist()
 
-            if n_winners == 0:
-                # no decodable frames (or fully redelivered): keep the
-                # output valid from batch 0, mark, stop — no registry
-                # wave. doc_id type comes from the BATCH (id_col
-                # accepts any type)
-                empty = batch.select(
-                    F.col(self.id_col).alias("doc_id"),
-                    F.lit(None).cast("int").alias("frame_idx"),
-                    F.lit(None).cast("bigint").alias("n_bytes"),
-                    F.lit(None).cast("string").alias("frame_md5"),
-                ).limit(0)
-                empty.write.mode("overwrite").parquet(
-                    f"{self.out_path}/w={batch_id}"
-                )
-                self._watermark.mark(batch_id)
-                return
-
-            wave_dir = f"{self.state_path}/w={batch_id}"
-
-            def _commit_state():
-                with self._phase("state_write"):
-                    (
-                        new_owned.select("h", "doc_id", "frame_idx")
-                        .withColumn(
-                            "b",
-                            F.pmod(
-                                F.col("h"), F.lit(self.n_hash_buckets)
-                            ),
-                        )
-                        # no explicit partition count: AQE coalesces
-                        # the shuffle by size, so a SMALL wave lands as
-                        # ONE file (VERDICT r12 item 4) and a big wave
-                        # gets as many b-hash partitions as its bytes
-                        # need — no post-write shrink job
-                        .repartition(F.col("b"))
-                        .sortWithinPartitions("b", "h")
-                        .write.mode("overwrite")
-                        .parquet(wave_dir)
-                    )
-                self._record_wave(spark, batch_id, wave_dir)
-                if pre_h is not None:
-                    # PRE-anti key set: a superset bitmap only adds
-                    # false positives, never wrong answers
-                    self._bloom.save_wave(wave_dir, pre_h)
-                elif overcap:
-                    # executor-side bitmap over the PERSISTED new_owned
-                    # frame (never a read-back of wave_dir: the
-                    # persisted frame is already resident — a read-back
-                    # would be a whole extra scan job)
-                    self._bloom.save_wave_distributed(
-                        wave_dir, new_owned.select("h"), "h"
-                    )
-                # the wave's doc-id bitmap, from the committed
-                # read-back — what future batches' seen probes test
-                # against
-                with self._phase("seen_sidecar"):
-                    self._doc_seen.save_wave(spark, wave_dir, batch_id)
-
-            def _commit_out():
-                with self._phase("out_write"):
-                    new_owned.select(
-                        "doc_id", "frame_idx", "n_bytes", "frame_md5"
-                    ).write.mode("overwrite").parquet(
-                        f"{self.out_path}/w={batch_id}"
-                    )
-
-            # the two commit chains touch disjoint directories and
-            # read only the persisted new_owned frame — run them as
-            # concurrent Spark jobs so one chain's straggler tail
-            # back-fills with the other's tasks; a crash with either
-            # half written replays the whole wave (both writes are
-            # idempotent per-wave overwrites, watermark unmarked)
-            overlap_jobs(_commit_state, _commit_out)
-            self._has_state = True
-            self._watermark.mark(batch_id)
-        finally:
-            if new_owned is not winners:
-                new_owned.unpersist(blocking=True)
-            winners.unpersist(blocking=True)
-            segs.unpersist(blocking=True)
+    def _output(self, segs: DataFrame, owned: DataFrame) -> DataFrame:
+        return owned.select("doc_id", *(c for c, _ in self._out_cols))

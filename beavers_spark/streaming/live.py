@@ -17,6 +17,8 @@ driver-side state at all.
 
 from __future__ import annotations
 
+import dataclasses
+import time
 from collections.abc import Callable
 from typing import Any
 
@@ -27,10 +29,6 @@ from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from beavers_spark.dag import Dag
-
-
-import dataclasses
-import time
 
 
 @dataclasses.dataclass
@@ -183,6 +181,48 @@ class ProgressCollector(StreamingQueryListener):
         return sum(p["num_input_rows"] for p in self.progress)
 
 
+def _staleness_monitor(
+    stream_df: DataFrame,
+    key_cols: list[str],
+    ts_col: str,
+    timeout_conf: str,
+    arm: Callable[[GroupState, pd.Timestamp], None],
+) -> DataFrame:
+    """Per-key ``(keys..., last_seen, stale)`` over ``stream_df``: a
+    stale=false row on every update, after ``arm(state, newest)`` re-arms
+    the key's ``timeout_conf`` timeout, and a stale=true row when it
+    fires."""
+    key_schema = ", ".join(
+        f"{c} {stream_df.schema[c].dataType.simpleString()}" for c in key_cols
+    )
+    out_cols = [*key_cols, "last_seen", "stale"]
+
+    def monitor(key, batches, state: GroupState):
+        if state.hasTimedOut:
+            (last_seen,) = state.get
+            state.remove()
+            yield pd.DataFrame([[*key, last_seen, True]], columns=out_cols)
+            return
+        newest = None
+        for pdf in batches:
+            batch_max = pdf[ts_col].max()
+            if newest is None or batch_max > newest:
+                newest = batch_max
+        if newest is None:
+            return
+        state.update((newest,))
+        arm(state, newest)
+        yield pd.DataFrame([[*key, newest, False]], columns=out_cols)
+
+    return stream_df.groupBy(*key_cols).applyInPandasWithState(
+        monitor,
+        outputStructType=f"{key_schema}, last_seen timestamp, stale boolean",
+        stateStructType="last_seen timestamp",
+        outputMode="update",
+        timeoutConf=timeout_conf,
+    )
+
+
 def streaming_timeout_monitor(
     stream_df: DataFrame,
     key_cols: list[str],
@@ -205,40 +245,12 @@ def streaming_timeout_monitor(
     doesn't ship, so the GroupState timeout formulation here is the
     portable implementation.
     """
-    key_schema = ", ".join(
-        f"{c} {stream_df.schema[c].dataType.simpleString()}" for c in key_cols
-    )
-    out_schema = f"{key_schema}, last_seen timestamp, stale boolean"
-    state_schema = "last_seen timestamp"
-
-    def monitor(key, batches, state: GroupState):
-        if state.hasTimedOut:
-            (last_seen,) = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[*key, last_seen, True]],
-                columns=[*key_cols, "last_seen", "stale"],
-            )
-            return
-        newest = None
-        for pdf in batches:
-            batch_max = pdf[ts_col].max()
-            if newest is None or batch_max > newest:
-                newest = batch_max
-        if newest is None:
-            return
-        state.update((newest,))
-        state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            [[*key, newest, False]], columns=[*key_cols, "last_seen", "stale"]
-        )
-
-    return stream_df.groupBy(*key_cols).applyInPandasWithState(
-        monitor,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _staleness_monitor(
+        stream_df,
+        key_cols,
+        ts_col,
+        GroupStateTimeout.ProcessingTimeTimeout,
+        lambda state, newest: state.setTimeoutDuration(timeout_ms),
     )
 
 
@@ -312,29 +324,8 @@ def streaming_event_timeout_monitor(
     parity promise applied to timers; its replay timers are likewise
     event-time driven, replay.py:230).
     """
-    key_schema = ", ".join(
-        f"{c} {stream_df.schema[c].dataType.simpleString()}" for c in key_cols
-    )
-    out_schema = f"{key_schema}, last_seen timestamp, stale boolean"
-    state_schema = "last_seen timestamp"
 
-    def monitor(key, batches, state: GroupState):
-        if state.hasTimedOut:
-            (last_seen,) = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [[*key, last_seen, True]],
-                columns=[*key_cols, "last_seen", "stale"],
-            )
-            return
-        newest = None
-        for pdf in batches:
-            batch_max = pdf[ts_col].max()
-            if newest is None or batch_max > newest:
-                newest = batch_max
-        if newest is None:
-            return
-        state.update((newest,))
+    def arm(state: GroupState, newest: pd.Timestamp) -> None:
         # fire when the watermark passes this event-time deadline; for a
         # LATE row whose deadline is already behind the watermark, clamp
         # to just past it (Spark rejects deadlines <= watermark) — the
@@ -343,20 +334,13 @@ def streaming_event_timeout_monitor(
         deadline = int(newest.value // 1_000_000) + timeout_ms
         wm = state.getCurrentWatermarkMs()
         state.setTimeoutTimestamp(max(deadline, wm + 1))
-        yield pd.DataFrame(
-            [[*key, newest, False]], columns=[*key_cols, "last_seen", "stale"]
-        )
 
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(*key_cols)
-        .applyInPandasWithState(
-            monitor,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _staleness_monitor(
+        stream_df.withWatermark(ts_col, watermark),
+        key_cols,
+        ts_col,
+        GroupStateTimeout.EventTimeTimeout,
+        arm,
     )
 
 

@@ -1173,6 +1173,15 @@ class DocSeenGuard:
             return None
         return pruned.select(self.state_id)
 
+    def batch_keys(self, batch_id: int):
+        """The key set this batch's ``pruned_seen`` stashed, or None
+        (the probe did not run, or ran over the cap). Not consumed: a
+        kernel passes it to a SECOND table's ``save_wave(keys=)``."""
+        stash = self._batch_keys
+        if stash is not None and stash[0] == batch_id:
+            return stash[1]
+        return None
+
     def save_wave(
         self, spark, wave_dir: str, batch_id: int | None = None,
         keys=None,
@@ -1185,7 +1194,7 @@ class DocSeenGuard:
         positive wave scan, never a miss), and the wave read-back job
         is skipped entirely. ``keys`` passes a precomputed hash array
         directly (a kernel writing sidecars for a SECOND table from
-        the same batch — e.g. the chunk kernel's output table, r13 —
+        the same batch — a hash-ownership kernel's output table, r13 —
         reuses one collect instead of paying a read-back per table)."""
         if not self._index.m_bits:
             return

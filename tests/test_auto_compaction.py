@@ -264,3 +264,45 @@ def test_wave_kernel_entry_recovers_before_watermark(spark, tmp_path, name):
     # batch 0 was recognized as applied: nothing ran
     assert restarted.phase_seconds == {}
     assert restarted._watermark.last_committed() == 0
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by job id. A job group would
+    miss some: the concurrent commit jobs ``overlap_jobs`` submits from
+    pool threads do not inherit the caller's group."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()  # the status tracker lags the bus
+        return sc.statusTracker().getJobIdsForGroup(None)
+
+    last = max(ids(), default=-1)
+    fn()
+    return sum(1 for i in ids() if i > last)
+
+
+#: Spark jobs of the first wave and of a second wave that overlaps it
+#: (redelivered ids and shared content), per hash-ownership kernel
+OWNERSHIP_JOBS = {"chunk": (14, 23), "substring": (15, 22), "frame": (11, 18)}
+
+
+@pytest.mark.parametrize("name", sorted(OWNERSHIP_JOBS))
+def test_hash_ownership_jobs_per_wave(spark, tmp_path, name):
+    """Jobs per wave of the exact-dedup kernels, commit jobs included.
+    The second wave runs the seen probe, the Bloom fold and the
+    registry probe."""
+    make, _ = WAVE_KERNELS[name]
+    if name == "frame":
+        avis = _synth_frame_avis(spark, SF_DIR)
+        waves = [_in_range(avis, 0, 6), _in_range(avis, 3, 9)]
+    else:
+        waves = [_docs(spark, 0, 20), _docs(spark, 10, 30)]
+    kern = make(tmp_path)
+    jobs = tuple(
+        _jobs_run(spark, lambda: kern(batch, w))
+        for w, batch in enumerate(waves)
+    )
+    assert "bloom_fold" in kern.phase_seconds
+    assert kern.probe_metrics and kern._doc_seen.probe_metrics
+    assert jobs == OWNERSHIP_JOBS[name]
