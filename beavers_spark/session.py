@@ -9,8 +9,34 @@ static number a ceiling, not a constant).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+#: bytes per unit of a JVM memory string; no unit means MiB, as in Spark
+_MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "": 1 << 20}
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM``, else half of
+    physical memory. A setting above physical memory raises here rather
+    than letting the JVM grow until the kernel kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if want is None:
+        return f"{phys // 2 >> 20}m"
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", want.strip().lower())
+    if m is None:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={want!r} is not a JVM memory size"
+            " such as 4g or 512m"
+        )
+    if int(m[1]) * _MEM_UNITS[m[2]] > phys:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM={want} exceeds physical memory"
+            f" ({phys >> 20}m)"
+        )
+    return want
 
 
 def get_spark(app_name: str = "beavers_spark", extra_conf: dict | None = None) -> SparkSession:
@@ -55,7 +81,7 @@ def get_spark(app_name: str = "beavers_spark", extra_conf: dict | None = None) -
         # nanos (plans/common.t converts back to TimestampType at us)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.shuffle.spill.compress", "true")
         # ContextCleaner's broadcast/shuffle cleanup is GC-driven: it

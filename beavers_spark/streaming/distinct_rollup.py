@@ -14,7 +14,7 @@ off the merged sketch. Spark ships this natively
 (``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``, all
 JVM-side), so the whole pipeline stays in whole-stage codegen.
 
-Per batch (mirroring ``ContinuousRollup``'s touched-buckets discipline):
+Per batch (the touched-bucket merge of ``merge_table.MergeTable``):
 the batch is sketched per (bucket, keys) — a few KB per group no matter
 how many rows — merged with the stored sketches of JUST the touched
 buckets (partition-pruned read), and written back via dynamic partition
@@ -33,14 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.merge_table import BucketRollup
 
 
-class ContinuousDistinct:
+class ContinuousDistinct(BucketRollup):
     """Maintains approximate distinct counts of ``entity_col`` per
     (bucket, *keys).
 
@@ -52,7 +48,9 @@ class ContinuousDistinct:
         uniq.read(spark)   # bucket, *keys, n_distinct (estimate)
 
     ``lg_config_k`` is the HLL precision knob (Spark default 12 ≈ 1.6%
-    relative error, ~2.5 KB per group).
+    relative error, ~2.5 KB per group). Sketch merging is idempotent
+    only for identical re-delivered batches; the watermark skips
+    replays anyway, so they cost nothing.
     """
 
     def __init__(
@@ -64,89 +62,21 @@ class ContinuousDistinct:
         bucket: str = "1 hour",
         lg_config_k: int = 12,
     ) -> None:
-        self.path = path
-        self.ts_col = ts_col
-        self.keys = keys
+        super().__init__(path, ts_col, keys, bucket)
         self.entity_col = entity_col
-        self.bucket = bucket
         self.lg_config_k = lg_config_k
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
 
-    def _sketch(self, df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy(
-                F.window(F.col(self.ts_col), self.bucket).start.alias("bucket"),
-                *self.keys,
-            )
-            .agg(
-                F.hll_sketch_agg(
-                    F.col(self.entity_col), F.lit(self.lg_config_k)
-                ).alias("sketch")
-            )
+    def _delta(self, df: DataFrame) -> DataFrame:
+        return self._grouped(df).agg(
+            F.hll_sketch_agg(
+                F.col(self.entity_col), F.lit(self.lg_config_k)
+            ).alias("sketch")
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        # sketch merging is idempotent ONLY for identical re-delivered
-        # batches; guard anyway so replays cost nothing
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
-            return
-        # null event time has no bucket; a None touched entry never
-        # isin-matches yet dynamic overwrite would still clobber the
-        # null partition with only this batch's delta (state loss)
-        batch_df = batch_df.filter(F.col(self.ts_col).isNotNull())
-        spark = batch_df.sparkSession
-        delta = self._sketch(batch_df)
-        if self._initialized or self._table_exists(spark):
-            # probe on the RAW batch (the sibling rollups' discipline):
-            # probing delta re-executed the whole sketch aggregation a
-            # second time for the collect — the batch's bucket set is
-            # identical either way
-            touched = [
-                r["bucket"]
-                for r in batch_df.select(
-                    F.window(F.col(self.ts_col), self.bucket).start.alias(
-                        "bucket"
-                    )
-                )
-                .distinct()
-                .collect()
-            ]
-            if not touched:  # every row was null-ts: nothing to merge
-                self._watermark.mark(batch_id)
-                return
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
-            merged = (
-                delta.unionByName(current)
-                .groupBy("bucket", *self.keys)
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        else:
-            merged = delta
-        # per-write dynamic overwrite (replaces only the partitions in
-        # `merged`) without mutating the shared session's semantics; the
-        # bucket repartition clusters rows so each touched bucket gets
-        # ONE file per batch instead of one per (task, bucket) — the
-        # splinter the sibling rollups also guard against
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return self._regrouped(delta, current).agg(
+            F.hll_union_agg("sketch").alias("sketch")
         )
-        self._initialized = True
-        self._watermark.mark(batch_id)
-
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current estimates: (bucket, *keys, n_distinct)."""

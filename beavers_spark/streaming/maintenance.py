@@ -1488,51 +1488,6 @@ def forget_partition_rows(
     return len(parts)
 
 
-def shrink_small_wave(
-    spark,
-    wave_dir: str,
-    max_files: int = 16,
-    small_bytes: int = 32 << 20,
-    target_bytes: int = 8 << 20,
-    cluster_by: Sequence[str] | None = None,
-) -> int:
-    """Bound a just-written SMALL plain wave directory's file count
-    (VERDICT r11 item 5: a 4-wave / 3.2 MB near-dedup registry held
-    128 files — one per write task — seeding the growth-bench slope's
-    constant). The decision is one driver-local directory listing: a
-    wave that is already few-file or carries real bytes is left
-    UNTOUCHED — at 100 TB every wave is big and WANTS its many files,
-    so this only engages in the small-wave / trickle-ingest regime,
-    where rewriting the wave is by definition cheap. The rewrite uses
-    the stage→aside→swap order (``.swap_tmp.``/``.swap_old.``
-    siblings, healed by ``recover_compaction`` at kernel entry), so no
-    crash window loses the wave. Call BEFORE the wave's sidecars are
-    written — the rewrite does not carry them. With ``cluster_by`` the
-    shrunk file(s) are re-sorted on those columns, so a wave whose
-    original files were each (b, key)-sorted keeps narrow row-group
-    min/max through the rewrite (a bare coalesce would concatenate the
-    sorted runs instead). Returns the post-shrink file count, or 0
-    when untouched."""
-    files, nbytes, _ = partition_stats(spark, [wave_dir])
-    if files <= max_files or nbytes > small_bytes:
-        return 0
-    n_out = max(1, min(max_files, int(nbytes // target_bytes) + 1))
-    df = spark.read.parquet(wave_dir)
-    if cluster_by:
-        # a small wave's full shuffle is cheap by definition
-        df = df.repartition(n_out).sortWithinPartitions(*cluster_by)
-    head, base = os.path.split(wave_dir.rstrip("/"))
-    tmp = os.path.join(head, f".swap_tmp.{base}")
-    old = os.path.join(head, f".swap_old.{base}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    os.rename(wave_dir, old)
-    os.rename(tmp, wave_dir)
-    shutil.rmtree(old)
-    return n_out
-
-
 def fanout_repartition(batch, probe=None, min_fraction: float = 0.5):
     """Spread a narrow micro-batch across the cluster BEFORE a per-row
     fan-out (payload decode, span/segment hashing) — but only when it
@@ -1743,7 +1698,7 @@ def recover_compaction(path: str) -> bool:
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
         healed = True
-    # heal per-wave swap leftovers (forget_doc_rows, shrink_small_wave):
+    # heal per-wave swap leftovers (forget_doc_rows):
     # a crash between the two renames leaves either a stray
     # ``.swap_tmp.w=<n>`` (incomplete rewrite: discard) or a
     # ``.swap_old.w=<n>`` whose wave directory is missing (restore) or

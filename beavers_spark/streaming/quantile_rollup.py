@@ -17,10 +17,11 @@ trade against sketch structures (t-digest/KLL) is explicitness: fixed
 edge bins), in exchange for EXACT mergeability, trivial state
 (``groups × n_bins`` longs), and engine-independent determinism.
 
-Per batch (the family's touched-buckets discipline): the batch is
-binned and counted — map-side combined, batch-sized — merged with the
-stored counts of JUST the touched buckets (partition-pruned read), and
-written back via dynamic partition overwrite. History is never re-read.
+Per batch (the touched-bucket merge of ``merge_table.MergeTable``):
+the batch is binned and counted — map-side combined, batch-sized —
+merged with the stored counts of JUST the touched buckets
+(partition-pruned read), and written back via dynamic partition
+overwrite. History is never re-read.
 
 Reference parity: extends the reference's state-node fold
 (dag.py:501-518); the reference has no quantile surface
@@ -32,11 +33,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.merge_table import BucketRollup
+
+
+def _check_bins(lo: float, hi: float, n_bins: int) -> None:
+    """Reject a histogram with no bins or no width: ``hi == lo`` makes
+    zero-width bins (inf/NaN), ``n_bins == 0`` divides by zero and a
+    negative ``n_bins`` stores negative bins."""
+    if not hi > lo:
+        raise ValueError(f"hi ({hi}) must be > lo ({lo})")
+    if n_bins < 1:
+        raise ValueError(f"n_bins ({n_bins}) must be >= 1")
+
+
+def histogram_counts(
+    df: DataFrame,
+    ts_col: str,
+    keys: list[str],
+    value_col: str,
+    lo: float,
+    hi: float,
+    n_bins: int,
+    bucket: str,
+) -> DataFrame:
+    """Row counts per (bucket, *keys, bin) of ``value_col`` in
+    ``n_bins`` equal bins over ``[lo, hi)``; out-of-range values clamp
+    into the edge bins. Shared by ``ContinuousQuantile`` (one batch) and
+    ``batch_quantile`` (one shot)."""
+    width = (hi - lo) / n_bins
+    raw = F.floor((F.col(value_col) - F.lit(lo)) / F.lit(width))
+    return df.groupBy(
+        F.window(F.col(ts_col), bucket).start.alias("bucket"),
+        *keys,
+        F.least(F.greatest(raw, F.lit(0)), F.lit(n_bins - 1))
+        .cast("int")
+        .alias("bin"),
+    ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def quantiles_from_histogram(
@@ -102,7 +134,7 @@ def quantiles_from_histogram(
     )
 
 
-class ContinuousQuantile:
+class ContinuousQuantile(BucketRollup):
     """Maintains per-(bucket, *keys) value histograms; quantiles on read.
 
     ::
@@ -128,96 +160,30 @@ class ContinuousQuantile:
         n_bins: int = 256,
         bucket: str = "1 hour",
     ) -> None:
-        if not hi > lo:
-            raise ValueError("hi must be > lo")
-        self.path = path
-        self.ts_col = ts_col
-        self.keys = keys
+        _check_bins(lo, hi, n_bins)
+        super().__init__(path, ts_col, keys, bucket)
         self.value_col = value_col
         self.lo = float(lo)
         self.hi = float(hi)
         self.n_bins = n_bins
-        self.bucket = bucket
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
 
-    def _bin(self) -> F.Column:
-        width = (self.hi - self.lo) / self.n_bins
-        raw = F.floor((F.col(self.value_col) - F.lit(self.lo)) / F.lit(width))
-        return F.least(
-            F.greatest(raw, F.lit(0)), F.lit(self.n_bins - 1)
-        ).cast("int")
+    def _live(self, batch_df: DataFrame) -> DataFrame:
+        # a null value cannot be binned
+        return super()._live(batch_df).filter(F.col(self.value_col).isNotNull())
 
-    def _count(self, df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy(
-                F.window(F.col(self.ts_col), self.bucket).start.alias("bucket"),
-                *self.keys,
-                self._bin().alias("bin"),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    def _delta(self, df: DataFrame) -> DataFrame:
+        return histogram_counts(
+            df, self.ts_col, self.keys, self.value_col, self.lo, self.hi,
+            self.n_bins, self.bucket,
         )
 
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
+    #: the histogram of any frame, state or not
+    _count = _delta
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        # count-merging is not idempotent: replays must skip
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
-            return
-        # Null event time cannot be assigned a bucket, and a null value
-        # cannot be binned; worse, a None in the touched list never
-        # isin-matches stored rows while dynamic overwrite would still
-        # REPLACE the null partition with just this batch's delta —
-        # silently dropping accumulated state. Drop such rows up front.
-        batch_df = batch_df.filter(
-            F.col(self.ts_col).isNotNull()
-            & F.col(self.value_col).isNotNull()
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return self._regrouped(delta, current, "bin").agg(
+            F.sum("cnt").alias("cnt")
         )
-        spark = batch_df.sparkSession
-        delta = self._count(batch_df)
-        if self._initialized or self._table_exists(spark):
-            # probe the RAW batch, not delta — delta is then consumed
-            # exactly once (by the merge), not re-aggregated for the probe
-            touched = [
-                r["bucket"]
-                for r in batch_df.select(
-                    F.window(F.col(self.ts_col), self.bucket).start.alias(
-                        "bucket"
-                    )
-                )
-                .distinct()
-                .collect()
-            ]
-            if not touched:  # all rows were null-ts/value: nothing to merge
-                self._watermark.mark(batch_id)
-                return
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
-            merged = (
-                delta.unionByName(current)
-                .groupBy("bucket", *self.keys, "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = delta
-        # cluster by the partition column before partitionBy, else every
-        # write task splinters one file per bucket it holds
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        self._initialized = True
-        self._watermark.mark(batch_id)
 
     def read_histograms(self, spark: SparkSession) -> DataFrame:
         """Raw (bucket, *keys, bin, cnt) — mergeable further (e.g. roll
@@ -261,21 +227,10 @@ def batch_quantile(
     window, so the window input is groups × n_bins no matter the corpus
     size.
     """
-    # construct via __new__ (no state dir exists for the one-shot twin)
-    # but run the SAME argument validation __init__ enforces — bypassing
-    # it let hi == lo flow into zero-width bins (inf/NaN garbage)
-    if not hi > lo:
-        raise ValueError(f"hi ({hi}) must be > lo ({lo})")
-    if n_bins < 1:
-        raise ValueError("n_bins must be >= 1")
-    helper = ContinuousQuantile.__new__(ContinuousQuantile)
-    helper.ts_col, helper.keys, helper.value_col = ts_col, keys, value_col
-    helper.lo, helper.hi, helper.n_bins = float(lo), float(hi), n_bins
-    helper.bucket = bucket
-    hist = helper._count(
-        df.filter(
-            F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
-        )
+    _check_bins(lo, hi, n_bins)
+    hist = histogram_counts(
+        df.filter(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()),
+        ts_col, keys, value_col, float(lo), float(hi), n_bins, bucket,
     )
     return quantiles_from_histogram(
         hist, ["bucket", *keys], list(qs), float(lo), float(hi), n_bins

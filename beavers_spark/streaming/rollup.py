@@ -6,8 +6,8 @@ Each micro-batch only touches the time buckets it contains: the batch is
 pre-aggregated (map-side, tiny), merged with the CURRENT contents of
 just those buckets, and written back via dynamic partition overwrite —
 cost per batch is O(batch + touched-bucket rows), never a rescan of
-history. Readers see a plain parquet table partitioned by bucket,
-queryable mid-stream.
+history (``merge_table.MergeTable`` runs the sequence). Readers see a
+plain parquet table partitioned by bucket, queryable mid-stream.
 
 At 100 TB: the rollup table is partitioned on the bucket column, so the
 merge reads only the touched partitions (partition pruning) and the
@@ -23,14 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.merge_table import BucketRollup
 
 
-class ContinuousRollup:
+class ContinuousRollup(BucketRollup):
     """Maintains ``sum_col`` totals and row counts per (bucket, *keys).
 
     Use as a ``foreachBatch`` callable::
@@ -50,74 +46,18 @@ class ContinuousRollup:
         sum_col: str,
         bucket: str = "1 hour",
     ) -> None:
-        self.path = path
-        self.ts_col = ts_col
-        self.keys = keys
+        super().__init__(path, ts_col, keys, bucket)
         self.sum_col = sum_col
-        self.bucket = bucket
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
 
-    def _aggregate(self, df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy(
-                F.window(F.col(self.ts_col), self.bucket).start.alias("bucket"),
-                *self.keys,
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(self.sum_col).alias("total"),
-            )
+    def _delta(self, df: DataFrame) -> DataFrame:
+        return self._grouped(df).agg(
+            F.count(F.lit(1)).alias("n"), F.sum(self.sum_col).alias("total")
         )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        # merge-in aggregation is NOT idempotent (a replayed batch would
-        # double-count into the touched buckets): skip applied batches
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
-            return
-        # null event time has no bucket; a None touched entry never
-        # isin-matches yet dynamic overwrite would still clobber the
-        # null partition with only this batch's delta (state loss)
-        batch_df = batch_df.filter(F.col(self.ts_col).isNotNull())
-        spark = batch_df.sparkSession
-        delta = self._aggregate(batch_df)
-        if self._initialized or self._table_exists(spark):
-            touched = [r["bucket"] for r in delta.select("bucket").distinct().collect()]
-            if not touched:  # every row was null-ts: nothing to merge
-                self._watermark.mark(batch_id)
-                return
-            # localCheckpoint materializes the touched buckets BEFORE the
-            # overwrite (Spark refuses to overwrite a path its plan still
-            # reads); the filter is partition-pruned so this reads only
-            # the touched directories
-            current = (
-                self.read(spark)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
-            merged = (
-                delta.unionByName(current)
-                .groupBy("bucket", *self.keys)
-                .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
-            )
-        else:
-            merged = delta
-        # per-write dynamic overwrite (replaces only the partitions in
-        # `merged`) without mutating the shared session's semantics
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return self._regrouped(delta, current).agg(
+            F.sum("n").alias("n"), F.sum("total").alias("total")
         )
-        self._initialized = True
-        self._watermark.mark(batch_id)
-
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)

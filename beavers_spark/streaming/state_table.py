@@ -17,6 +17,9 @@ of the full key space:
    directories. Overwrites are idempotent, so checkpointed replays of a
    batch are safe (at-least-once in, exactly-once effect out).
 
+``merge_table.MergeTable`` runs that sequence for this table and the
+bucket rollups alike.
+
 ``n_buckets`` sizes the unit of rewrite: more buckets = finer pruning
 but more small files; at 100 TB pick buckets so one bucket ≈ one
 executor-comfortable rewrite (hundreds of MB), and compact periodically.
@@ -35,17 +38,17 @@ from pyspark.sql import functions as F
 
 from beavers_spark.operators.tabular import last_by_keys
 from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
     WaveMetrics,
+    forget_partition_rows,
     partition_stats,
-    recover_compaction,
     table_exists,
 )
+from beavers_spark.streaming.merge_table import MergeTable
 
 _BUCKET = "__bucket"
 
 
-class KeyedStateTable:
+class KeyedStateTable(MergeTable):
     """``foreachBatch`` callable maintaining latest-row-per-key state.
 
     ::
@@ -54,7 +57,12 @@ class KeyedStateTable:
                                 n_buckets=64)
         stream.writeStream.foreachBatch(state).start()
         latest = state.read(spark)   # one row per key, the latest
+
+    The merge itself is idempotent (latest-wins over the same batch
+    converges), so the watermark only skips wasted replays.
     """
+
+    part = _BUCKET
 
     def __init__(
         self,
@@ -65,28 +73,16 @@ class KeyedStateTable:
     ) -> None:
         if not keys:
             raise ValueError("keys must be non-empty")
-        self.path = path
+        super().__init__(path)
         self.keys = list(keys)
         self.order_by = order_by
         self.n_buckets = n_buckets
-        self._initialized = False
-        # the merge itself is idempotent (latest-wins over the same
-        # batch converges), so the watermark only skips wasted replays
-        self._watermark = BatchWatermark(path)
         #: one WaveMetrics per applied wave: bytes-rewritten-per-wave and
         #: files-per-bucket, the n_buckets sizing / compaction-due signal
         self.metrics: list[WaveMetrics] = []
 
-    def _bucket(self) -> Column:
+    def _part_col(self) -> Column:
         return F.pmod(F.hash(*self.keys), F.lit(self.n_buckets))
-
-    def _table_exists(self, spark: SparkSession) -> bool:
-        if self._initialized:
-            return True
-        if table_exists(spark, self.path):
-            self._initialized = True
-            return True
-        return False
 
     def read(self, spark: SparkSession) -> DataFrame:
         """Current latest-row-per-key table (without the bucket column)."""
@@ -101,35 +97,13 @@ class KeyedStateTable:
         forgotten key is admitted as brand-new state. Idempotent;
         returns the number of bucket directories rewritten or
         removed."""
-        from beavers_spark.streaming.maintenance import (
-            forget_partition_rows,
-        )
-
-        if not self._table_exists(spark):
-            return 0
-        rows = [
-            k if isinstance(k, tuple) else (k,) for k in keys
-        ]
-        if not rows:
+        rows = [k if isinstance(k, tuple) else (k,) for k in keys]
+        if not rows or not table_exists(spark, self.path):
             return 0
         id_df = spark.createDataFrame(rows, self.keys)
-        n = forget_partition_rows(
-            spark, self.path, id_df, self.keys, _BUCKET
-        )
-        if n:
-            # the forget may have emptied the table down to its
-            # zero-row schema file — re-probe rather than trust the
-            # cached flag
-            self._initialized = table_exists(spark, self.path)
-        return n
+        return forget_partition_rows(spark, self.path, id_df, self.keys, _BUCKET)
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        if self._watermark.is_applied(batch_id):
-            return
-        spark = batch_df.sparkSession
+    def _delta(self, batch_df: DataFrame) -> DataFrame:
         # batch-local upsert first: one row per key leaves this stage.
         # localCheckpoint materializes the reduction ONCE, so the batch
         # is scanned a single time per wave — the touched-bucket probe
@@ -137,62 +111,35 @@ class KeyedStateTable:
         # checkpointed delta instead of re-scanning the raw batch (a
         # probe on the raw batch cost a second full batch scan per wave;
         # the checkpoint also pre-empts the merge re-running the window)
-        delta = last_by_keys(batch_df, self.keys, [self.order_by]).withColumn(
-            _BUCKET, self._bucket()
-        ).localCheckpoint()
-        touched = [
-            r[_BUCKET] for r in delta.select(_BUCKET).distinct().collect()
-        ]
-        if not touched:
-            self._watermark.mark(batch_id)
-            return
-        if self._table_exists(spark):
-            # partition-pruned read of ONLY the touched buckets;
-            # localCheckpoint materializes them before their directories
-            # are overwritten (Spark refuses to overwrite a path its
-            # plan still reads)
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col(_BUCKET).isin(touched))
-                .localCheckpoint()
-            )
-            # ties on order_by go to the batch: rank current rows below
-            # delta rows by a tiebreaker column
-            merged = last_by_keys(
-                delta.withColumn("__new", F.lit(1)).unionByName(
-                    current.withColumn("__new", F.lit(0))
-                ),
-                self.keys,
-                [self.order_by, "__new"],
-            ).drop("__new")
-        else:
-            merged = delta
-        # per-WRITE dynamic overwrite: only the touched bucket
-        # directories are replaced, and the shared session's overwrite
-        # semantics are left alone (a session-level conf.set here would
-        # silently change every other writer in the application).
-        # The repartition on the bucket column is load-bearing: the merge
-        # window leaves rows key-hash-partitioned, so partitionBy would
-        # otherwise write (tasks × buckets) splinter files per wave —
-        # measured ~2,000 files/wave at 32 tasks × 64 buckets, each paying
-        # a listing + footer read on the NEXT wave's touched-bucket scan.
-        # Clustering by bucket first writes one file per touched bucket.
-        (
-            merged.repartition(self.n_buckets, F.col(_BUCKET))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(_BUCKET)
-            .parquet(self.path)
+        return (
+            last_by_keys(batch_df, self.keys, [self.order_by])
+            .withColumn(_BUCKET, self._part_col())
+            .localCheckpoint()
         )
-        self._initialized = True
+
+    def _touched(self, batch_df: DataFrame, delta: DataFrame) -> list:
+        return [r[0] for r in delta.select(_BUCKET).distinct().collect()]
+
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        # ties on order_by go to the batch: rank current rows below
+        # delta rows by a tiebreaker column
+        return last_by_keys(
+            delta.withColumn("__new", F.lit(1)).unionByName(
+                current.withColumn("__new", F.lit(0))
+            ),
+            self.keys,
+            [self.order_by, "__new"],
+        ).drop("__new")
+
+    def _apply(self, delta: DataFrame, touched: list, batch_id: int) -> None:
+        super()._apply(delta, touched, batch_id)
         # post-write accounting over ONLY the touched bucket directories
         # (driver-side FS listing, O(touched)): these are exactly the
         # bytes this wave rewrote, and the worst per-bucket file count
         # shows when compaction is due
         files, nbytes, mx = partition_stats(
-            spark, [f"{self.path}/{_BUCKET}={b}" for b in touched]
+            delta.sparkSession, [f"{self.path}/{_BUCKET}={b}" for b in touched]
         )
         self.metrics.append(
             WaveMetrics(batch_id, len(touched), files, nbytes, mx)
         )
-        self._watermark.mark(batch_id)

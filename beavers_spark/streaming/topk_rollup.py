@@ -17,7 +17,7 @@ subtraction:
 - err <= n / (capacity + 1);
 - every item with true count > n/(capacity+1) IS in the summary.
 
-Per batch (the touched-buckets discipline shared by the rollup family):
+Per batch (the touched-bucket merge of ``merge_table.MergeTable``):
 the batch is counted exactly per (bucket, keys, item) — map-side
 combined, batch-sized — merged with the stored summaries of JUST the
 touched buckets (partition-pruned read), truncated per group, and
@@ -38,14 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.maintenance import (
-    BatchWatermark,
-    recover_compaction,
-    table_exists,
-)
+from beavers_spark.streaming.merge_table import BucketRollup
 
 
-class ContinuousTopK:
+class ContinuousTopK(BucketRollup):
     """Maintains Misra-Gries heavy-hitter summaries of ``item_col`` per
     (bucket, *keys).
 
@@ -67,87 +63,46 @@ class ContinuousTopK:
         bucket: str = "1 hour",
         capacity: int = 256,
     ) -> None:
-        self.path = path
+        super().__init__(path, ts_col, keys, bucket)
         self.err_path = path.rstrip("/") + "_err"
-        self.ts_col = ts_col
-        self.keys = keys
         self.item_col = item_col
-        self.bucket = bucket
         self.capacity = capacity
-        self._initialized = False
-        self._watermark = BatchWatermark(path)
 
-    def _count(self, df: DataFrame) -> DataFrame:
-        return (
-            df.groupBy(
-                F.window(F.col(self.ts_col), self.bucket).start.alias("bucket"),
-                *self.keys,
-                F.col(self.item_col).alias("item"),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    def _delta(self, df: DataFrame) -> DataFrame:
+        return self._grouped(df, F.col(self.item_col).alias("item")).agg(
+            F.count(F.lit(1)).alias("cnt")
         )
 
-    def _table_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.path)
+    def _merge(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return self._regrouped(delta, current, "item").agg(
+            F.sum("cnt").alias("cnt")
+        )
 
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # restore a compaction crashed between compact_parquet's two
-        # renames BEFORE the watermark check or any write (review r8)
-        recover_compaction(self.path)
-        # truncation makes the merge non-idempotent: replays must skip
-        if self._watermark.is_applied(batch_id) or batch_df.isEmpty():
-            return
-        # A null event time has no bucket — and a None in the touched
-        # list never isin-matches stored rows while dynamic overwrite
-        # would still replace the null partition with only this batch's
-        # delta, dropping accumulated state. Drop null-ts rows up front.
-        batch_df = batch_df.filter(F.col(self.ts_col).isNotNull())
-        spark = batch_df.sparkSession
-        delta = self._count(batch_df)
-        # the touched-bucket probe runs on the raw batch: the counter
-        # merge AND the error ledger both prune their state reads with it
-        touched = [
-            r["bucket"]
-            for r in batch_df.select(
-                F.window(F.col(self.ts_col), self.bucket).start.alias("bucket")
-            )
-            .distinct()
-            .collect()
-        ]
-        if not touched:
-            self._watermark.mark(batch_id)
-            return
-        if self._initialized or self._table_exists(spark):
-            current = (
-                spark.read.parquet(self.path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
-            combined = (
-                delta.unionByName(current)
-                .groupBy("bucket", *self.keys, "item")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            combined = delta
+    def _merge_err(self, delta: DataFrame, current: DataFrame) -> DataFrame:
+        return self._regrouped(delta, current).agg(F.sum("err").alias("err"))
+
+    def _apply(self, delta: DataFrame, touched: list, batch_id: int) -> None:
+        combined = self._fold(delta, self.path, touched, self._merge)
         # Misra-Gries truncation per group: subtract the (capacity+1)-th
         # largest count from every counter, drop the non-positives. The
         # rank window and the subtraction run in one pass; d is the
-        # group's accumulated error this merge.
-        grp = Window.partitionBy("bucket", *self.keys).orderBy(
-            F.col("cnt").desc(), F.col("item").asc()
-        )
-        # one materialization: the ranked frame feeds the counter write,
-        # the error ledger AND its touched-bucket probe — unchecked it
-        # would re-count the batch and re-run the window three times
+        # group's accumulated error this merge. One materialization: the
+        # ranked frame feeds the counter write AND the error ledger —
+        # unchecked, each would re-count the batch and re-run the window
+        grp = Window.partitionBy("bucket", *self.keys)
         ranked = (
-            combined.withColumn("rnk", F.row_number().over(grp))
+            combined.withColumn(
+                "rnk",
+                F.row_number().over(
+                    grp.orderBy(F.col("cnt").desc(), F.col("item").asc())
+                ),
+            )
             .withColumn(
                 "d",
                 F.coalesce(
                     F.max(
                         F.when(F.col("rnk") == self.capacity + 1, F.col("cnt"))
-                    ).over(Window.partitionBy("bucket", *self.keys)),
+                    ).over(grp),
                     F.lit(0),
                 ),
             )
@@ -159,21 +114,12 @@ class ContinuousTopK:
             "bucket", *self.keys, "item", (F.col("cnt") - F.col("d")).alias("cnt")
         )
         # per-group error ledger: err += d of this merge
-        err_delta = (
-            ranked.groupBy("bucket", *self.keys)
-            .agg(F.max("d").alias("err"))
+        err = self._fold(
+            ranked.groupBy("bucket", *self.keys).agg(F.max("d").alias("err")),
+            self.err_path,
+            touched,
+            self._merge_err,
         )
-        if self._initialized or self._err_exists(spark):
-            current_err = (
-                spark.read.parquet(self.err_path)
-                .filter(F.col("bucket").isin(touched))
-                .localCheckpoint()
-            )
-            err_delta = (
-                err_delta.unionByName(current_err)
-                .groupBy("bucket", *self.keys)
-                .agg(F.sum("err").alias("err"))
-            )
         # err BEFORE counters: a crash between the two writes then only
         # inflates err (bounds stay conservative — the counters are still
         # pre-batch and the replay re-merges them once). The reverse
@@ -181,25 +127,8 @@ class ContinuousTopK:
         # under a stale err, silently breaking the lower bound. A crash
         # after the counter write but before mark keeps the
         # BatchWatermark-documented double-apply window.
-        (
-            err_delta.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.err_path)
-        )
-        (
-            merged.repartition(F.col("bucket"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path)
-        )
-        self._initialized = True
-        self._watermark.mark(batch_id)
-
-    def _err_exists(self, spark: SparkSession) -> bool:
-        return table_exists(spark, self.err_path)
+        self._overwrite(err, self.err_path)
+        self._overwrite(merged, self.path)
 
     def read(self, spark: SparkSession, k: int = 10) -> DataFrame:
         """Top-``k`` per (bucket, *keys): item, count bounds, rank.
