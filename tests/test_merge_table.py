@@ -25,36 +25,25 @@ ROWS = 40
 SCHEMA = "ts timestamp, k string, item long, value double, seq long"
 T0 = dt.datetime(2024, 1, 1)
 
-#: each table's constructor and its raw state read
+#: each table's constructor
 TABLES = {
-    "rollup": (
-        lambda p: ContinuousRollup(p, ts_col="ts", keys=["k"], sum_col="value"),
-        lambda t, s: t.read(s),
+    "rollup": lambda p: ContinuousRollup(
+        p, ts_col="ts", keys=["k"], sum_col="value"
     ),
-    "distinct": (
-        lambda p: ContinuousDistinct(p, ts_col="ts", keys=["k"], entity_col="item"),
-        lambda t, s: t.read(s),
+    "distinct": lambda p: ContinuousDistinct(
+        p, ts_col="ts", keys=["k"], entity_col="item"
     ),
-    "topk": (
-        lambda p: ContinuousTopK(
-            p, ts_col="ts", keys=["k"], item_col="item", capacity=3
-        ),
-        lambda t, s: t.read(s, k=3),
+    "topk": lambda p: ContinuousTopK(
+        p, ts_col="ts", keys=["k"], item_col="item", capacity=3
     ),
-    "quantile": (
-        lambda p: ContinuousQuantile(
-            p, ts_col="ts", keys=["k"], value_col="value", lo=0.0, hi=100.0,
-            n_bins=10,
-        ),
-        lambda t, s: t.read_histograms(s),
+    "quantile": lambda p: ContinuousQuantile(
+        p, ts_col="ts", keys=["k"], value_col="value", lo=0.0, hi=100.0,
+        n_bins=10,
     ),
-    "state": (
-        lambda p: KeyedStateTable(p, keys=["item"], order_by="seq", n_buckets=4),
-        lambda t, s: t.read(s),
+    "state": lambda p: KeyedStateTable(
+        p, keys=["item"], order_by="seq", n_buckets=4
     ),
 }
-ROLLUPS = ["rollup", "distinct", "topk", "quantile"]
-
 #: Spark jobs of a first batch and of a second batch that merges into
 #: buckets the first one wrote (40 rows, 4 shuffle partitions)
 MERGE_JOBS = {
@@ -82,22 +71,18 @@ def _batch(spark, start: int, null_ts: bool = False):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def _rows(name, table, spark):
-    return sorted(map(str, TABLES[name][1](table, spark).collect()))
-
-
-@pytest.mark.parametrize("name", ROLLUPS)
+@pytest.mark.parametrize("name", ["rollup", "distinct", "topk", "quantile"])
 def test_all_null_first_batch_leaves_no_table(spark, tmp_path, name):
     """A first batch whose event times are all null marks its id and
     writes nothing; the next batch on the same instance then creates
     the table as a first batch would."""
-    table = TABLES[name][0](str(tmp_path / "t"))
+    table = TABLES[name](str(tmp_path / "t"))
     table(_batch(spark, 0, null_ts=True), 0)
     assert table._watermark.is_applied(0)
     assert not table_exists(spark, table.path)
     table(_batch(spark, 0), 1)
     assert table._watermark.is_applied(1)
-    assert _rows(name, table, spark)
+    assert table_exists(spark, table.path)
 
 
 def test_topk_first_batch_truncated_to_no_counters(spark, tmp_path):
@@ -120,7 +105,7 @@ def test_merge_jobs_per_batch(spark, spark_jobs, tmp_path, name):
     """Spark jobs of a first batch (no table yet) and of a merging batch:
     touched-partition probe, pruned read of the current rows, merge and
     overwrite."""
-    table = TABLES[name][0](str(tmp_path / "t"))
+    table = TABLES[name](str(tmp_path / "t"))
     jobs = tuple(
         len(spark_jobs(lambda: table(_batch(spark, start), b))[1])
         for b, start in enumerate((0, 20))
@@ -136,7 +121,7 @@ def test_topk_err_write_precedes_counters_across_a_crash(
     fresh instance then only widens the bounds: every served item keeps
     ``cnt_low <= exact count <= cnt_high``."""
     path = str(tmp_path / "top")
-    make = TABLES["topk"][0]
+    make = TABLES["topk"]
     batch = _batch(spark, 0)
 
     writes = []
