@@ -14,7 +14,15 @@ import re
 from pyspark.sql import SparkSession
 
 #: bytes per unit of a JVM memory string; no unit means MiB, as in Spark
-_MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "": 1 << 20}
+_MEM_UNITS = {
+    "": 1 << 20,
+    "b": 1,
+    "k": 1 << 10,
+    "m": 1 << 20,
+    "g": 1 << 30,
+    "t": 1 << 40,
+    "p": 1 << 50,
+}
 
 
 def driver_memory() -> str:
@@ -25,13 +33,13 @@ def driver_memory() -> str:
     want = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if want is None:
         return f"{phys // 2 >> 20}m"
-    m = re.fullmatch(r"(\d+)([kmgt]?)b?", want.strip().lower())
+    m = re.fullmatch(r"(\d+)(b|[kmgtp]b?)?", want.strip().lower())
     if m is None:
         raise ValueError(
             f"SPARK_GRAFT_DRIVER_MEM={want!r} is not a JVM memory size"
             " such as 4g or 512m"
         )
-    if int(m[1]) * _MEM_UNITS[m[2]] > phys:
+    if int(m[1]) * _MEM_UNITS[(m[2] or "")[:1]] > phys:
         raise ValueError(
             f"SPARK_GRAFT_DRIVER_MEM={want} exceeds physical memory"
             f" ({phys >> 20}m)"
@@ -81,7 +89,6 @@ def get_spark(app_name: str = "beavers_spark", extra_conf: dict | None = None) -
         # nanos (plans/common.t converts back to TimestampType at us)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.shuffle.spill.compress", "true")
         # ContextCleaner's broadcast/shuffle cleanup is GC-driven: it
@@ -97,7 +104,10 @@ def get_spark(app_name: str = "beavers_spark", extra_conf: dict | None = None) -
         # long-lived drivers GC naturally under heap pressure).
         .config("spark.cleaner.periodicGC.interval", "2min")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    if "spark.driver.memory" not in extra_conf:
+        builder = builder.config("spark.driver.memory", driver_memory())
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

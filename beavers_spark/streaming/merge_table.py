@@ -37,6 +37,12 @@ from beavers_spark.streaming.maintenance import (
 Merge = Callable[[DataFrame, DataFrame], DataFrame]
 
 
+def bucket_start(ts_col: str, bucket: str) -> Column:
+    """The ``bucket`` column of the bucket rollups: the start of the
+    ``bucket``-long tumbling window that holds ``ts_col``."""
+    return F.window(F.col(ts_col), bucket).start.alias("bucket")
+
+
 class MergeTable:
     """Base of the touched-partition merge tables, a ``foreachBatch``
     callable. A subclass sets ``part``, the partition column, and
@@ -116,13 +122,18 @@ class MergeTable:
         )
         return merge(delta, current)
 
-    def _overwrite(self, df: DataFrame, path: str) -> None:
+    def _overwrite(
+        self, df: DataFrame, path: str, n: int | None = None
+    ) -> None:
         """Replace the partitions ``df`` holds, and only those. The
         repartition on the partition column writes one file per touched
-        partition instead of one per (task, partition). The per-write
-        overwrite mode leaves the shared session's semantics alone."""
+        partition instead of one per (task, partition); it has ``n``
+        partitions, or as many as AQE picks when ``n`` is None. The
+        per-write overwrite mode leaves the shared session's semantics
+        alone."""
+        key = F.col(self.part)
         (
-            df.repartition(F.col(self.part))
+            (df.repartition(n, key) if n else df.repartition(key))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(self.part)
@@ -148,7 +159,7 @@ class BucketRollup(MergeTable):
         self.bucket = bucket
 
     def _part_col(self) -> Column:
-        return F.window(F.col(self.ts_col), self.bucket).start.alias(self.part)
+        return bucket_start(self.ts_col, self.bucket)
 
     def _live(self, batch_df: DataFrame) -> DataFrame:
         return batch_df.filter(F.col(self.ts_col).isNotNull())

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from beavers_spark.streaming.merge_table import BucketRollup
+from beavers_spark.streaming.merge_table import BucketRollup, bucket_start
 
 
 def _check_bins(lo: float, hi: float, n_bins: int) -> None:
@@ -63,7 +63,7 @@ def histogram_counts(
     width = (hi - lo) / n_bins
     raw = F.floor((F.col(value_col) - F.lit(lo)) / F.lit(width))
     return df.groupBy(
-        F.window(F.col(ts_col), bucket).start.alias("bucket"),
+        bucket_start(ts_col, bucket),
         *keys,
         F.least(F.greatest(raw, F.lit(0)), F.lit(n_bins - 1))
         .cast("int")

@@ -132,7 +132,14 @@ class KeyedStateTable(MergeTable):
         ).drop("__new")
 
     def _apply(self, delta: DataFrame, touched: list, batch_id: int) -> None:
-        super()._apply(delta, touched, batch_id)
+        # one writer per bucket: AQE may coalesce an exchange without a
+        # partition count to fewer tasks (to one, on the first wave of
+        # bench's inc_keyed_state at 4 buckets)
+        self._overwrite(
+            self._fold(delta, self.path, touched, self._merge),
+            self.path,
+            self.n_buckets,
+        )
         # post-write accounting over ONLY the touched bucket directories
         # (driver-side FS listing, O(touched)): these are exactly the
         # bytes this wave rewrote, and the worst per-bucket file count

@@ -10,6 +10,7 @@ import os
 
 import pytest
 from pyspark.sql import DataFrameWriter
+from pyspark.sql import functions as F
 
 from beavers_spark.streaming import (
     ContinuousDistinct,
@@ -44,14 +45,15 @@ TABLES = {
         p, keys=["item"], order_by="seq", n_buckets=4
     ),
 }
-#: Spark jobs of a first batch and of a second batch that merges into
-#: buckets the first one wrote (40 rows, 4 shuffle partitions)
+#: Spark jobs of a first batch, of a second batch that merges into
+#: buckets the first one wrote (40 rows, 4 shuffle partitions) and of a
+#: third batch, read from parquet, with no rows
 MERGE_JOBS = {
-    "rollup": (5, 8),
-    "distinct": (5, 8),
-    "topk": (10, 16),
-    "quantile": (5, 8),
-    "state": (6, 9),
+    "rollup": (5, 8, 1),
+    "distinct": (5, 8, 1),
+    "topk": (10, 16, 1),
+    "quantile": (5, 8, 1),
+    "state": (6, 9, 3),
 }
 
 
@@ -102,13 +104,17 @@ def test_topk_first_batch_truncated_to_no_counters(spark, tmp_path):
 
 @pytest.mark.parametrize("name", sorted(MERGE_JOBS))
 def test_merge_jobs_per_batch(spark, spark_jobs, tmp_path, name):
-    """Spark jobs of a first batch (no table yet) and of a merging batch:
-    touched-partition probe, pruned read of the current rows, merge and
-    overwrite."""
+    """Spark jobs of a first batch (no table yet), of a merging batch
+    (touched-partition probe, pruned read of the current rows, merge and
+    overwrite) and of an empty batch (the probe alone)."""
+    src = str(tmp_path / "src")
+    _batch(spark, 0).write.parquet(src)
+    empty = spark.read.parquet(src).filter(F.col("seq") < 0)
     table = TABLES[name](str(tmp_path / "t"))
+    batches = [_batch(spark, 0), _batch(spark, 20), empty]
     jobs = tuple(
-        len(spark_jobs(lambda: table(_batch(spark, start), b))[1])
-        for b, start in enumerate((0, 20))
+        len(spark_jobs(lambda: table(df, b))[1])
+        for b, df in enumerate(batches)
     )
     assert jobs == MERGE_JOBS[name]
 
