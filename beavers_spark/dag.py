@@ -26,16 +26,23 @@ Spark-first differences (deliberate, SURVEY.md §3.1 "Spark mapping"):
   unboundedly deep plan (the classic iterative-Spark failure mode). A
   state value that is already a materialized checkpoint (a node function
   that ``localCheckpoint``-ed it) is kept as is: no second job.
-- Emptiness of a DataFrame stream output is ``df.isEmpty()`` (a limit-1
-  job), the ``foreachBatch`` idiom for empty-batch suppression. The
-  output is persisted before that probe, so downstream nodes and sinks
-  read the cached value instead of recomputing its plan; it is
-  unpersisted when the node's value is reset or replaced, so at most one
-  cycle's stream outputs stay cached. Source batches skip the probe when
-  the driver staging them already knows they are non-empty. A value
-  whose plan reads only driver-local ``LocalRelation``s (a small replay
-  slice, a 0-row empty value) is not persisted: Spark probes it on the
-  driver without a job, and a cache would make that probe a job again.
+- A DataFrame stream output is read once, ``limit(LOCAL_ROWS + 1)``
+  as Arrow. When it fits under the cap, the node's value becomes a
+  one-partition driver-local frame of those rows: its emptiness is the
+  row count, and downstream nodes, sinks and views read it without
+  recomputing its plan or shuffling it. An output over the cap, or of a
+  schema Arrow cannot round-trip (checked before any job runs), keeps
+  the ``foreachBatch`` idiom instead: it is persisted and probed with
+  ``df.isEmpty()`` (a limit-1 job), and unpersisted when the node's
+  value is reset or replaced, so at most one cycle's stream outputs stay
+  cached. A node that went over the cap once stays on that path, so it
+  never pays the bounded read twice. Driver memory stays bounded by the
+  cap. Source batches skip the probe when the driver staging them
+  already knows they are non-empty. A value whose plan reads only
+  driver-local ``LocalRelation``s (a small replay slice, a 0-row empty
+  value, an upstream node's local value) is neither read nor persisted:
+  Spark probes it on the driver, and a cache would make that probe a
+  job again.
 - At 100 TB, node *values* live in executors (DataFrames); the kernel on
   the driver holds only plan references + dirty flags — driver memory is
   O(nodes), never O(data).
@@ -56,7 +63,15 @@ from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType, _parse_datatype_string
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+    _parse_datatype_string,
+)
 
 UTC_EPOCH = pd.Timestamp(0, tz="UTC")
 UTC_MAX = pd.Timestamp.max.tz_localize("UTC")
@@ -66,6 +81,10 @@ STATE_UNCHANGED = object()
 
 # how many cycles between lineage truncations of cached state DataFrames
 _CHECKPOINT_EVERY = 16
+
+#: rows a stream node's value or a replay source's prefetch buffer holds
+#: on the driver; a larger stream output stays distributed
+LOCAL_ROWS = 1024
 
 
 @dataclasses.dataclass
@@ -135,6 +154,38 @@ def _driver_local(df: DataFrame) -> bool:
         return False
 
 
+def _keeps_nullability(dt: DataType) -> bool:
+    """False when ``createDataFrame`` cannot cast Arrow data of ``dt``
+    back: it rebuilds a struct holding a nested or timestamp field with
+    every field nullable, so a non-nullable field there fails the cast.
+    Arrow skips that check on 0 rows, so a 0-row trial misses it."""
+    if isinstance(dt, ArrayType):
+        return _keeps_nullability(dt.elementType)
+    if isinstance(dt, MapType):
+        return _keeps_nullability(dt.keyType) and _keeps_nullability(dt.valueType)
+    if not isinstance(dt, StructType):
+        return True
+    nested = (StructType, ArrayType, MapType, TimestampType, TimestampNTZType)
+    rebuilt = any(isinstance(f.dataType, nested) for f in dt.fields)
+    return all(
+        (f.nullable or not rebuilt) and _keeps_nullability(f.dataType) for f in dt.fields
+    )
+
+
+def _arrow_round_trips(spark: SparkSession, schema: StructType) -> bool:
+    """True when rows of ``schema`` survive ``toArrow`` and
+    ``createDataFrame(table, schema)``, found without a Spark job: a
+    year-month interval or a UDT fails on a 0-row table, a non-nullable
+    child under a rebuilt nested column fails ``_keeps_nullability``."""
+    if not all(_keeps_nullability(f.dataType) for f in schema.fields):
+        return False
+    try:
+        spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+    except Exception:  # noqa: BLE001 - any failure means "cannot"
+        return False
+    return True
+
+
 def _empty_table(
     spark: SparkSession, schema: str | StructType
 ) -> Callable[[], DataFrame]:
@@ -179,6 +230,8 @@ class Node:
         "_pending_nonempty",  # caller-verified non-emptiness (skip probe)
         "_silent",
         "_cached_df",
+        "_arrow_checked",  # (schema, round-trips) of the last output read
+        "_over_cap",  # an output went over LOCAL_ROWS: never read again
         "_call_site",
     )
 
@@ -209,6 +262,8 @@ class Node:
         self._pending_nonempty = False
         self._silent = silent
         self._cached_df: DataFrame | None = None
+        self._arrow_checked: tuple[StructType, bool] | None = None
+        self._over_cap = False
         self._call_site = call_site
 
     # -- public accessors (reference: dag.py:264-286) ----------------------
@@ -330,21 +385,16 @@ class Node:
                 self._value = result
                 self._mark_updated(cycle_id, notify=False)
                 return
-            self._value = result
-            # cache before the probe: downstream nodes and sinks then read
-            # the probed value instead of recomputing its plan. A
-            # driver-local value is probed without a job; caching it
-            # would turn that probe back into one
-            fresh = (
-                isinstance(result, DataFrame)
-                and result.storageLevel == StorageLevel.NONE
-                and not _driver_local(result)
-            )
-            self._hold(result.persist() if fresh else None)
-            if _is_empty(result):
+            self._hold(None)  # the previous cycle's output
+            if isinstance(result, DataFrame):
+                result, empty = self._settle_frame(result)
+            else:
+                empty = _is_empty(result)
+            if empty:
                 self._value = self._empty()
                 self._hold(None)
             else:
+                self._value = result
                 self._mark_updated(cycle_id, notify=True)
             return
         # state node
@@ -357,6 +407,40 @@ class Node:
             result = self._retain_state_df(result)
         self._value = result
         self._mark_updated(cycle_id, notify=not silent)
+
+    def _round_trips(self, df: DataFrame) -> bool:
+        """``_arrow_round_trips`` of ``df``'s schema, tried once per
+        schema the node outputs."""
+        schema = df.schema
+        if self._arrow_checked is None or self._arrow_checked[0] != schema:
+            self._arrow_checked = (schema, _arrow_round_trips(df.sparkSession, schema))
+        return self._arrow_checked[1]
+
+    def _settle_frame(self, df: DataFrame) -> tuple[DataFrame, bool]:
+        """The value a firing stream node keeps for a DataFrame output
+        ``df``, and whether that output is empty.
+
+        Under the cap, one bounded Arrow read gives both: the value is a
+        one-partition driver-local frame of the rows (one partition, so
+        a downstream key grouping or sort needs no exchange). Otherwise
+        ``df`` is persisted before its ``isEmpty`` probe, so downstream
+        nodes and sinks read the probed value instead of recomputing its
+        plan. A driver-local ``df`` is probed as is: Spark answers on the
+        driver, and a cache would make that probe a job again."""
+        if _driver_local(df):
+            return df, df.isEmpty()
+        known_nonempty = False
+        if not self._over_cap and self._round_trips(df):
+            table = df.limit(LOCAL_ROWS + 1).toArrow()
+            if table.num_rows == 0:
+                return df, True
+            if table.num_rows <= LOCAL_ROWS:
+                local = df.sparkSession.createDataFrame(table, schema=df.schema)
+                return local.coalesce(1), False
+            self._over_cap = known_nonempty = True
+        if df.storageLevel == StorageLevel.NONE:
+            self._hold(df.persist())
+        return df, not known_nonempty and df.isEmpty()
 
     def _mark_updated(self, cycle_id: int, notify: bool) -> None:
         self._cycle_id = cycle_id

@@ -69,6 +69,7 @@ from beavers_spark.streaming.maintenance import (
     ProbeMetrics,
     WaveBloomIndex,
     ensure_layout,
+    read_known,
     read_wave_local,
     seen_anti_join,
     table_exists,
@@ -204,6 +205,8 @@ class IncrementalNearDedup(WaveKernel):
         #: mismatched modulus would prune away matching buckets)
         self.n_hash_buckets = n_hash_buckets
         self.anchors_path = state_path.rstrip("/") + "_anchors"
+        #: the band registry's schema, once read (maintenance.read_known)
+        self._known: dict = {}
         self._anchors_checked = False
         self._layout_checked = False
         self._bloom = WaveBloomIndex(
@@ -411,7 +414,7 @@ class IncrementalNearDedup(WaveKernel):
         plan audit pins the pruning as PartitionFilters on the scan
         (tools/audit_plans.py) — a regression to a full-registry scan
         fails the audit, not just the bench."""
-        ob = spark.read.parquet(self.anchors_path).filter(
+        ob = read_known(spark, self.anchors_path, self._known).filter(
             F.col("w") != batch_id
         )
         if kept is not None:
@@ -539,6 +542,7 @@ class IncrementalNearDedup(WaveKernel):
             batch, self.text_col, self.id_col, self.n, probe=batch_df
         )
         wave_dir = f"{self.state_path}/w={batch_id}"
+        sigs = _signatures_from_sets(sets, keep=("sh", "n_sh"))
         with self._phase("state_write"):
             # REBALANCE: AQE sizes the exchange, so a SMALL wave lands
             # as ONE file in the same job (the post-write shrink
@@ -547,9 +551,7 @@ class IncrementalNearDedup(WaveKernel):
             # shingling stays map-side, upstream of the exchange) and
             # a big wave gets as many size-split partitions as its
             # bytes need
-            _signatures_from_sets(sets, keep=("sh", "n_sh")).hint(
-                "rebalance"
-            ).write.mode("overwrite").parquet(wave_dir)
+            sigs.hint("rebalance").write.mode("overwrite").parquet(wave_dir)
         self._has_state = True
         # the wave's doc-id bitmap — what future batches' seen probes
         # test against (maintenance.DocSeenGuard)
@@ -559,8 +561,9 @@ class IncrementalNearDedup(WaveKernel):
         # driver-local (maintenance.read_wave_local) — the Spark count()
         # job this replaces was footer-only too but still paid
         # ~0.09s/wave of job scheduling (phase_seconds, r8); the Spark
-        # fallback covers non-listable roots
-        new_state = spark.read.parquet(wave_dir)
+        # fallback covers non-listable roots. The wave is read back with
+        # the schema of the frame just written: no inference job
+        new_state = spark.read.schema(sigs.schema).parquet(wave_dir)
         band_dir = f"{self.anchors_path}/w={batch_id}"
         with self._phase("state_count"):
             got = read_wave_local(wave_dir)
@@ -661,9 +664,7 @@ class IncrementalNearDedup(WaveKernel):
         old = None
         kept: list | None = None  # None = bloom made no pruning decision
         if had_state:
-            old = spark.read.parquet(self.state_path).filter(
-                F.col("w") != batch_id
-            )
+            old = self._doc_seen.prior(spark, batch_id)
             if band_h is not None or overcap_keys is not None:
                 # inline prune_prior so the SAME kept-wave decision (and
                 # one ProbeMetrics row) covers both the state scan and,

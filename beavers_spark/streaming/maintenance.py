@@ -43,7 +43,7 @@ import threading
 import time
 from typing import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -128,6 +128,19 @@ def partition_stats(
         total += size
         mx = max(mx, n)
     return files, total, mx
+
+
+def read_known(spark: SparkSession, path: str, known: dict) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema ``known`` holds for
+    ``path``, inferred and stored there on the first read: a later read
+    runs no one-task ``parquet`` schema-inference job. For a kernel's
+    own tables, whose schema never changes while the kernel runs."""
+    schema = known.get(path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    known[path] = df.schema
+    return df
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
@@ -1135,6 +1148,8 @@ class DocSeenGuard:
         )
         #: one ProbeMetrics per Bloom-pruned guard probe
         self.probe_metrics: list[ProbeMetrics] = []
+        #: the registry's schema, once read (``read_known``)
+        self._known: dict = {}
         #: (batch_id, key array) stashed by the last ``pruned_seen``
         #: so ``save_wave`` can build the wave's bitmap WITHOUT a
         #: second Spark job — the batch id set is a SUPERSET of the
@@ -1150,20 +1165,29 @@ class DocSeenGuard:
             F.xxhash64(self.state_id).alias("dh")
         )
 
-    def pruned_seen(self, spark, batch, batch_id: int, id_col: str):
+    def prior(self, spark, batch_id: int) -> DataFrame:
+        """The registry's rows outside wave ``batch_id``, read with the
+        schema inferred on this guard's first read."""
+        return read_known(spark, self.state_path, self._known).filter(
+            F.col("w") != batch_id
+        )
+
+    def pruned_seen(self, spark, batch, batch_id: int, id_col: str, keys=None):
         """The registry's ``state_id`` column restricted to waves that
         may contain any of ``batch[id_col]``'s ids. Returns None when
         EVERY wave is Bloom-pruned — the caller skips the anti-join
         entirely (no batch doc can have been seen). Falls back to the
         full scan (today's behavior) when gated by ``min_waves`` or
-        when the bitmap is disabled."""
-        prior = spark.read.parquet(self.state_path).filter(
-            F.col("w") != batch_id
-        )
+        when the bitmap is disabled. ``keys`` is the batch's id-hash
+        array when another guard already collected it (``batch_keys``;
+        every guard hashes ``xxhash64(id)``), which saves this probe's
+        collect job."""
+        prior = self.prior(spark, batch_id)
         if not self._index.probe_active(exclude=batch_id):
             return prior.select(self.state_id)
         keys_df = batch.select(F.xxhash64(F.col(id_col)).alias("dh"))
-        keys = self._index.collect_keys(keys_df, "dh")
+        if keys is None:
+            keys = self._index.collect_keys(keys_df, "dh")
         self._batch_keys = None if keys is None else (batch_id, keys)
         pruned = self._index.prune_prior(
             prior, keys, batch_id, self.probe_metrics, spark,
@@ -1534,14 +1558,21 @@ def overlap_jobs(*thunks) -> None:
     exception propagates only after every thunk has settled, so a
     failed commit never leaves a sibling write still in flight when
     the caller's crash-replay logic runs.
+
+    Each thunk runs with the caller's Spark local properties (job group,
+    description, scheduler pool), so its jobs are attributed like the
+    caller's own.
     """
     if len(thunks) == 1:
         thunks[0]()
         return
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         errs: list[BaseException] = []
         for f in futures:
             try:

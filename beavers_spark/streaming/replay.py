@@ -24,12 +24,9 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from beavers_spark.dag import UTC_MAX, Dag
+from beavers_spark.dag import LOCAL_ROWS, UTC_MAX, Dag
 
 T = TypeVar("T")
-
-#: rows ``SparkSliceSource`` prefetches per control-plane query
-_PREFETCH_ROWS = 1024
 
 
 @dataclasses.dataclass(frozen=True)
@@ -210,7 +207,7 @@ class SparkSliceSource:
     driver-side).
 
     ``get_next`` reads a driver-held buffer of the next
-    ``_PREFETCH_ROWS`` rows above the cursor, filled by one pushed-down
+    ``LOCAL_ROWS`` rows above the cursor, filled by one pushed-down
     ``orderBy(ts).limit(K)`` query read as Arrow, so a cycle runs no
     Spark job for its next-event time until the buffer is used up.
     A slice that lies wholly inside the buffer (the buffer holds every
@@ -255,7 +252,7 @@ class SparkSliceSource:
                 self._above_cursor()
                 .filter(F.col(self._ts).isNotNull())
                 .orderBy(self._ts)
-                .limit(_PREFETCH_ROWS)
+                .limit(LOCAL_ROWS)
                 .toArrow()
             )
             times = pd.DatetimeIndex(self._rows.column(self._ts).to_pandas())
@@ -263,7 +260,7 @@ class SparkSliceSource:
                 times.tz_localize("UTC") if times.tz is None else times.tz_convert("UTC")
             )
             self._pos = 0
-            self._complete = self._rows.num_rows < _PREFETCH_ROWS
+            self._complete = self._rows.num_rows < LOCAL_ROWS
         if self._pos == len(self._times):
             return UTC_MAX
         return self._times[self._pos]

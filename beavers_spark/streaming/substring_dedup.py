@@ -83,12 +83,14 @@ class IncrementalSubstringDedup(HashOwnershipKernel):
         # owned spans) or the output (its dup ranges) — a fully
         # duplicate doc only in the output, an all-unique doc only in
         # the registry — so the seen-set is the union of both doc_id
-        # columns, each restricted by its own doc-id Bloom sidecars
+        # columns, each restricted by its own doc-id Bloom sidecars;
+        # both probes test the one key set the registry guard collects
         seen = super()._pruned_seen(spark, batch, batch_id)
         if not table_exists(spark, self.out_path):
             return seen
         seen_out = self._doc_seen_out.pruned_seen(
-            spark, batch, batch_id, self.id_col
+            spark, batch, batch_id, self.id_col,
+            keys=self._doc_seen.batch_keys(batch_id),
         )
         if seen is None or seen_out is None:
             return seen_out if seen is None else seen

@@ -267,9 +267,8 @@ def test_wave_kernel_entry_recovers_before_watermark(spark, tmp_path, name):
 
 
 def _jobs_run(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted by job id. A job group would
-    miss some: the concurrent commit jobs ``overlap_jobs`` submits from
-    pool threads do not inherit the caller's group."""
+    """Spark jobs ``fn()`` runs outside any job group, counted by job
+    id: all of them when ``fn`` sets no group."""
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
 
@@ -284,14 +283,22 @@ def _jobs_run(spark, fn) -> int:
 
 #: Spark jobs of the first wave and of a second wave that overlaps it
 #: (redelivered ids and shared content), per hash-ownership kernel
-OWNERSHIP_JOBS = {"chunk": (14, 23), "substring": (15, 22), "frame": (11, 18)}
+OWNERSHIP_JOBS = {"chunk": (14, 23), "substring": (15, 21), "frame": (11, 18)}
+
+#: the same for ``IncrementalNearDedup``, and for a third wave that
+#: overlaps the second: its tables' schemas are known by then, so it
+#: runs no schema-inference job
+NEAR_JOBS = (11, 16, 15)
 
 
 @pytest.mark.parametrize("name", sorted(OWNERSHIP_JOBS))
-def test_hash_ownership_jobs_per_wave(spark, tmp_path, name):
+def test_hash_ownership_jobs_per_wave(spark, spark_jobs, tmp_path, name):
     """Jobs per wave of the exact-dedup kernels, commit jobs included.
     The second wave runs the seen probe, the Bloom fold and the
-    registry probe."""
+    registry probe. Each wave runs in a job group and leaves no job
+    outside it: the commit jobs ``overlap_jobs`` runs on pool threads
+    carry the caller's group, so the group count is the count by job id
+    (without that, the chunk kernel's group read 6/15 of 14/23)."""
     make, _ = WAVE_KERNELS[name]
     if name == "frame":
         avis = _synth_frame_avis(spark, SF_DIR)
@@ -299,10 +306,29 @@ def test_hash_ownership_jobs_per_wave(spark, tmp_path, name):
     else:
         waves = [_docs(spark, 0, 20), _docs(spark, 10, 30)]
     kern = make(tmp_path)
-    jobs = tuple(
-        _jobs_run(spark, lambda: kern(batch, w))
-        for w, batch in enumerate(waves)
-    )
+    jobs = []
+    for w, batch in enumerate(waves):
+        grouped = []
+        outside = _jobs_run(
+            spark, lambda: grouped.extend(spark_jobs(lambda: kern(batch, w))[1])
+        )
+        assert outside == 0
+        jobs.append(len(grouped))
     assert "bloom_fold" in kern.phase_seconds
     assert kern.probe_metrics and kern._doc_seen.probe_metrics
-    assert jobs == OWNERSHIP_JOBS[name]
+    assert tuple(jobs) == OWNERSHIP_JOBS[name]
+
+
+def test_near_dedup_jobs_per_wave(spark, tmp_path):
+    """Jobs per wave of ``IncrementalNearDedup``, commit jobs included:
+    the wave is read back with the schema of the frame just written, and
+    the registry and band registry with the schema each was first read
+    with."""
+    make, _ = WAVE_KERNELS["near"]
+    kern = make(tmp_path)
+    waves = [_docs(spark, 0, 20), _docs(spark, 10, 30), _docs(spark, 20, 40)]
+    jobs = tuple(
+        _jobs_run(spark, lambda: kern(batch, w)) for w, batch in enumerate(waves)
+    )
+    assert kern.probe_metrics and kern._doc_seen.probe_metrics
+    assert jobs == NEAR_JOBS

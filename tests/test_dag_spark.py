@@ -10,7 +10,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from beavers_spark.dag import Dag
+import beavers_spark.dag as dag_mod
+from beavers_spark.dag import Dag, _driver_local
 from beavers_spark.operators import last_by_keys
 from beavers_spark.testing import DagTestBench
 
@@ -202,10 +203,11 @@ def test_word_count_incremental(spark):
     bench.execute(ts(1)).assert_sink_rows("updates", [("foo", 3)])  # bar unchanged: not emitted
 
 
-def test_stream_dataframes_are_cached_for_one_cycle(spark):
-    """A DataFrame stream output is persisted before its emptiness probe
-    so downstream nodes and sinks read it cached, and unpersisted once
-    the node's value is reset (no fire), replaced, or found empty."""
+def test_stream_dataframes_are_cached_for_one_cycle(spark, monkeypatch):
+    """Over the cap, a DataFrame stream output is persisted so
+    downstream nodes and sinks read it cached, and unpersisted once the
+    node's value is reset (no fire), replaced, or found empty."""
+    monkeypatch.setattr(dag_mod, "LOCAL_ROWS", 1)
     dag = Dag(spark)
     a = dag.source_table("x long", "a")
     b = dag.source_table("x long", "b")
@@ -225,7 +227,7 @@ def test_stream_dataframes_are_cached_for_one_cycle(spark):
     assert dag.get_sink_value("doubled") is first
 
     a.set_stream(spark.createDataFrame([(3,)], "x long"))
-    dag.execute(ts(2))  # replaced
+    dag.execute(ts(2))  # replaced; went over the cap, so stays persisted
     second = doubled.get_value()
     assert second.is_cached and not first.is_cached
 
@@ -279,3 +281,134 @@ def test_empty_table_values_are_one_driver_local_frame(spark, spark_jobs):
     assert empty_source.schema.simpleString() == "struct<x:bigint>"
     for value in (empty_stream, empty_source):
         assert spark_jobs(value.isEmpty) == (True, [])
+
+
+def _names(jobs):
+    return [name.split(" at ")[0] for name, _ in jobs]
+
+
+def test_small_stream_outputs_are_one_local_partition(spark, spark_jobs):
+    """Under the cap, one bounded Arrow read settles a DataFrame stream
+    output: no persist and no ``isEmpty``; the value is a driver-local
+    frame of one partition, which a sink reads in one job of one stage
+    and a key grouping reads without an exchange; an empty output does
+    not notify the node's observers."""
+    dag = Dag(spark)
+    src = dag.source_table("k long, x long", "src")
+    kept = dag.stream(lambda df: df.filter("x > 0")).map(src)
+    dag.sink("kept", kept)
+    seen = []
+    dag.stream(lambda df: seen.append(df) or [df]).map(kept)
+
+    src.set_stream(spark.range(5).selectExpr("id % 2 AS k", "id AS x"), known_nonempty=True)
+    _, jobs = spark_jobs(lambda: dag.execute(ts(1)))
+    assert _names(jobs) == ["toArrow"], jobs
+    value = kept.get_value()
+    assert _driver_local(value) and not value.is_cached
+    assert value.rdd.getNumPartitions() == 1
+    assert sorted(value.toArrow().column("x").to_pylist()) == [1, 2, 3, 4]
+    assert len(seen) == 1 and seen[0] is value
+    assert dag.get_sink_value("kept") is value
+    _, jobs = spark_jobs(dag.get_sink_value("kept").toArrow)
+    assert [stages for _, stages in jobs] == [1], jobs
+    grouped = value.groupBy("k").count()._jdf.queryExecution().executedPlan()
+    assert "Exchange" not in grouped.toString()
+
+    src.set_stream(spark.range(3).selectExpr("id AS k", "-id AS x"), known_nonempty=True)
+    _, jobs = spark_jobs(lambda: dag.execute(ts(2)))
+    assert _names(jobs) == ["toArrow"], jobs
+    assert kept.get_cycle_id() == 1 and len(seen) == 1  # not updated, not notified
+    assert isinstance(kept.get_value(), list)  # the empty value
+
+
+def test_local_stream_values_keep_exact_event_times(spark, new_york_tz):
+    """A ``timestamp`` and a ``timestamp_ntz`` column, read to the
+    driver and back, hold the same instants and local times and the same
+    schema, with the Python process's zone not UTC (a 2:30 wall time
+    that New York skips on 2024-03-10 included)."""
+    dag = Dag(spark)
+    src = dag.source_table("id long", "src")
+    times = dag.stream(
+        lambda df: df.selectExpr(
+            "id",
+            "timestamp'2024-03-10 06:30:00.123456' + make_interval(0, 0, 0, 0, id, 0, 0) AS ts",
+            "timestamp_ntz'2024-03-10 02:30:00.654321' + make_interval(0, 0, 0, id) AS ntz",
+        )
+    ).map(src)
+    batch = spark.range(4)
+    src.set_stream(batch, known_nonempty=True)
+    dag.execute(ts(1))
+    value = times.get_value()
+    assert _driver_local(value)
+    want = times._fn(batch)
+    assert value.select("*").schema == want.schema
+    assert value.orderBy("id").toArrow().equals(want.orderBy("id").toArrow())
+    as_text = "id", "CAST(ts AS STRING) AS ts", "CAST(ntz AS STRING) AS ntz"
+    assert value.selectExpr(*as_text).orderBy("id").collect() == (
+        want.selectExpr(*as_text).orderBy("id").collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "column",
+    [
+        "INTERVAL '1' YEAR",  # no Arrow type
+        "array(named_struct('n', id, 't', timestamp'2024-01-01 00:00:00'))",
+    ],
+    ids=["year_month_interval", "non_nullable_struct_timestamp"],
+)
+def test_schemas_arrow_cannot_round_trip_fall_back(spark, spark_jobs, column):
+    """An output whose schema does not survive ``toArrow`` and
+    ``createDataFrame`` is found before any job runs and keeps the
+    persist + ``isEmpty`` path: no bounded read, no extra job. An output
+    whose plan equals the previous cycle's is persisted again, not
+    mistaken for that cycle's released cache."""
+    dag = Dag(spark)
+    src = dag.source_table("id long", "src")
+    out = dag.stream(lambda df: df.selectExpr("id", f"{column} AS c")).map(src)
+    for minute in (1, 2):
+        src.set_stream(spark.range(3), known_nonempty=True)
+        _, jobs = spark_jobs(lambda: dag.execute(ts(minute)))
+        assert _names(jobs) == ["isEmpty"], jobs
+        assert out.get_value().is_cached
+
+
+def test_over_cap_node_pays_no_second_read(spark, spark_jobs, monkeypatch):
+    """The bounded read that finds an output over the cap also proves it
+    non-empty, so that cycle runs no ``isEmpty``; from then on the node
+    keeps the persist + ``isEmpty`` path, even for a small output."""
+    monkeypatch.setattr(dag_mod, "LOCAL_ROWS", 2)
+    dag = Dag(spark)
+    src = dag.source_table("id long", "src")
+    out = dag.stream(lambda df: df.filter("id >= 0")).map(src)
+    src.set_stream(spark.range(3), known_nonempty=True)
+    _, jobs = spark_jobs(lambda: dag.execute(ts(1)))
+    assert _names(jobs) == ["toArrow"], jobs
+    assert out.get_value().is_cached
+    src.set_stream(spark.range(1), known_nonempty=True)
+    _, jobs = spark_jobs(lambda: dag.execute(ts(2)))
+    assert _names(jobs) == ["isEmpty"], jobs
+    assert out.get_value().is_cached
+
+
+def test_stream_chains_over_local_values_cost_no_more_jobs(spark, spark_jobs):
+    """Two chained stream nodes: over a driver-local source both are
+    probed on the driver, with no job; over a distributed source the
+    first is read once and the second, over its one-partition local
+    value, is probed once (persist + ``isEmpty`` per node ran two)."""
+    import pyarrow as pa
+
+    dag = Dag(spark)
+    src = dag.source_table("id long", "src")
+    first = dag.stream(lambda df: df.filter("id > 0")).map(src)
+    second = dag.stream(lambda df: df.selectExpr("id * 2 AS id")).map(first)
+    dag.sink("second", second)
+
+    local = spark.createDataFrame(pa.table({"id": pa.array([0, 1, 2], pa.int64())}))
+    src.set_stream(local, known_nonempty=True)
+    _, jobs = spark_jobs(lambda: dag.execute(ts(1)))
+    assert jobs == [], jobs
+    src.set_stream(spark.range(3), known_nonempty=True)
+    _, jobs = spark_jobs(lambda: dag.execute(ts(2)))
+    assert _names(jobs) == ["toArrow", "isEmpty"], jobs
+    assert sorted(second.get_value().toArrow().column("id").to_pylist()) == [2, 4]

@@ -355,12 +355,14 @@ def test_replay_cycle_probes_each_value_once(spark, spark_jobs, tmp_path):
     dag (source -> filter stream -> keyed state -> aggregate stream ->
     sink): no emptiness probe of the source slice (the source's due next
     record proves it non-empty), a driver-local slice and its filter
-    probed without a job, one probe for the aggregate over state, no
-    retention job for a state value its node already checkpointed, and a
-    sink read that does not re-run the aggregate's shuffle."""
+    probed without a job, one bounded read and no ``isEmpty`` for the
+    aggregate over state, no retention job for a state value its node
+    already checkpointed, and a sink read of the aggregate's one-partition
+    driver-local value that does not re-run its shuffle."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
+    from beavers_spark.dag import _driver_local
     from beavers_spark.operators import last_by_keys
     from beavers_spark.streaming import SparkSliceSource
 
@@ -408,15 +410,18 @@ def test_replay_cycle_probes_each_value_once(spark, spark_jobs, tmp_path):
     for _ in range(3):
         _, jobs = spark_jobs(driver.run_cycle)
         names = [name.split(" at ")[0] for name, _ in jobs]
-        assert names.count("isEmpty") == 1, names  # totals only
-        assert "count" not in names, names
-        # the totals probe, the upsert's checkpoint, and three AQE
-        # shuffle-stage jobs (the sink read runs in its own group)
-        assert len(jobs) == 5, names
+        assert "isEmpty" not in names and "count" not in names, names
+        # the totals read (its AQE shuffle-stage job and its collect),
+        # and the upsert's checkpoint with its shuffle-stage job (the
+        # sink read runs in its own group)
+        assert names.count("toArrow") == 2 and len(jobs) == 4, names
         local_rows = rows.get_value()
         assert local_rows.storageLevel == StorageLevel.NONE
         assert spark_jobs(local_rows.isEmpty) == (False, [])
-        # one job, running one stage: the cached value's scan
+        local_totals = totals.get_value()
+        assert _driver_local(local_totals) and not local_totals.is_cached
+        assert local_totals.rdd.getNumPartitions() == 1
+        # one job, running one stage: the local value's scan
         assert [stages for _, stages in sink_jobs[-1]] == [1], sink_jobs[-1]
     assert sum(m.records for m in driver.metrics) == 4
     assert sorted(sink.last.column("key").to_pylist()) == ["k0", "k1", "k2"]
@@ -429,7 +434,7 @@ def test_spark_slice_source_buffer_edges(spark, spark_jobs, tmp_path, monkeypatc
     from beavers_spark.streaming import SparkSliceSource
     from beavers_spark.streaming import replay
 
-    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 3)
+    monkeypatch.setattr(replay, "LOCAL_ROWS", 3)
     path = str(tmp_path / "edges.parquet")
     minutes = [1, 2, 3, 3, 3, 4, 5, 6, 7, 100, 101]
     _write_ts_parquet(path, minutes, seq=list(range(len(minutes))))
@@ -466,7 +471,7 @@ def test_spark_slice_source_matches_arrow_source(spark, tmp_path, monkeypatch):
     from beavers_spark.streaming import ArrowTableDataSource, SparkSliceSource
     from beavers_spark.streaming import replay
 
-    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 4)
+    monkeypatch.setattr(replay, "LOCAL_ROWS", 4)
     minutes = [0, 0, 1, 4, 4, 4, 4, 4, 9, 10, 30, 31, 31, 90]
     for tz, ts_type in ((None, "timestamp_ntz"), ("UTC", "timestamp")):
         path = str(tmp_path / f"same_{tz}.parquet")
@@ -503,7 +508,7 @@ def test_spark_slice_source_matches_arrow_source(spark, tmp_path, monkeypatch):
 
     partly_lazy, local = replay_rows()
     assert False in local  # the five rows at minute 4 outgrow the buffer
-    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 1024)
+    monkeypatch.setattr(replay, "LOCAL_ROWS", 1024)
     all_local, local = replay_rows()
     assert all(local)
     assert partly_lazy == all_local
@@ -519,7 +524,7 @@ def test_spark_slice_source_event_times_are_utc(spark, tmp_path, monkeypatch, ne
     from beavers_spark.streaming import replay
 
     # a one-row buffer: every slice and refill goes through the predicates
-    monkeypatch.setattr(replay, "_PREFETCH_ROWS", 1)
+    monkeypatch.setattr(replay, "LOCAL_ROWS", 1)
     path = str(tmp_path / "three.parquet")
     _write_ts_parquet(path, [1, 2, 3], tz, seq=[0, 1, 2])
     source = SparkSliceSource(spark, path, "ts")

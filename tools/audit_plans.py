@@ -8,10 +8,11 @@ Usage: python tools/audit_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from beavers_spark.session import get_spark  # noqa: E402
 
